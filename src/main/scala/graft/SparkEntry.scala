@@ -3437,7 +3437,8 @@ object SparkEntry {
     * the batch split cannot drift between them. */
   private val ingestBounds = Seq((0L, 150L), (150L, 350L), (350L, Long.MaxValue))
 
-  /** Crawl-ingestion dedup loop (batch twin of `streaming.DedupIngest`):
+  /** Crawl-ingestion dedup loop (batch twin of the streaming text loop,
+    * `EpochIngest` over `IndexKind.textPostings`):
     * ordered batches, each dedup'd against the corpus ACCEPTED so far via
     * the bucketed posting index, survivors extending the index before the
     * next batch probes it. The oracle chains the same steps over string
@@ -3946,11 +3947,9 @@ object SparkEntry {
       val dst = inDir.resolve(f"b$i%02d.parquet").toFile
       require(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    val empty = s.range(0).select(col("id"),
-      lit(null).cast("array<float>").as("vec"))
-    val idxPath = s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_embingest"
-    Dedup.initEmbedIndexEpoch(empty, s"graft_b_stream_embingest_$tag",
-      idxPath, buckets = 8)
+    val kind = graft.streaming.IndexKind.embedLsh(threshold = 0.25)
+    kind.init(s, s"graft_b_stream_embingest_$tag",
+      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_embingest")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
@@ -3960,10 +3959,9 @@ object SparkEntry {
     val incoming = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
     val out = work.resolve("out").toString
-    val q = graft.streaming.EmbedIngest.start(incoming,
+    val q = graft.streaming.EpochIngest.start(incoming, kind,
       indexTable = s"graft_b_stream_embingest_$tag", outPath = out,
-      checkpoint = work.resolve("ck").toString,
-      buckets = 8, threshold = 0.25, availableNow = true)
+      checkpoint = work.resolve("ck").toString, availableNow = true)
     q.awaitTermination()
     s.read.parquet(out).select(col("id").as("vec_id"))
       .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
@@ -4000,30 +3998,26 @@ object SparkEntry {
       val dst = inDir.resolve(f"b$i%02d.parquet").toFile
       require(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    val empty = s.range(0).select(col("id"), lit(0L).as("sh"))
+    val kind = graft.streaming.IndexKind.hamming(maxHamming = 3)
     val idxPath = s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_mmingest"
-    if (gen) Dedup.initHammingIndexEpochGen(empty,
-      s"graft_b_stream_mmingest_$tag", idxPath, buckets = 8, maxHamming = 3)
-    else Dedup.initHammingIndexEpoch(empty, s"graft_b_stream_mmingest_$tag",
-      idxPath, buckets = 8, maxHamming = 3)
+    kind.init(s, s"graft_b_stream_mmingest_$tag", idxPath, gen = gen)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.BinaryType)))
     val incoming = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
     val out = work.resolve("out").toString
-    val q = graft.streaming.MmIngest.start(incoming,
+    val q = graft.streaming.EpochIngest.start(incoming, kind,
       indexTable = s"graft_b_stream_mmingest_$tag", outPath = out,
-      checkpoint = work.resolve("ck").toString,
-      buckets = 8, maxHamming = 3, availableNow = true,
+      checkpoint = work.resolve("ck").toString, availableNow = true,
       indexPath = if (gen) idxPath else null,
       compactEvery = if (gen) 1 else 0)
     q.awaitTermination()
     s.read.parquet(out).select("id", "phash").orderBy("id")
   }
 
-  /** The COMPOSED ingest DAG run LIVE ([[graft.streaming.MmIngest
-    * .startComposed]]) — the streaming twin of `pipeline_mm_ingest`'s
+  /** The COMPOSED ingest DAG run LIVE ([[graft.streaming.IndexKind
+    * .familyHamming]]) — the streaming twin of `pipeline_mm_ingest`'s
     * front half: the same mixed-modality corpus arrives as three ordered
     * payload batches through a file stream; each micro-batch is decoded
     * ONCE (sniff-route + per-modality fingerprint in one pass), probed
@@ -4048,20 +4042,18 @@ object SparkEntry {
       val dst = inDir.resolve(f"b$i%02d.parquet").toFile
       require(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    val empty = s.range(0).select(col("id"), lit(0L).as("sh"), lit("").as("grp"))
-    Dedup.initHammingIndexKeyedEpoch(empty, s"graft_b_stream_pipemm_$tag",
-      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_pipemm",
-      buckets = 8, maxHamming = 3)
+    val kind = graft.streaming.IndexKind.familyHamming(maxHamming = 3)
+    kind.init(s, s"graft_b_stream_pipemm_$tag",
+      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_pipemm")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.BinaryType)))
     val incoming = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
     val out = work.resolve("out").toString
-    val q = graft.streaming.MmIngest.startComposed(incoming,
+    val q = graft.streaming.EpochIngest.start(incoming, kind,
       indexTable = s"graft_b_stream_pipemm_$tag", outPath = out,
-      checkpoint = work.resolve("ck").toString,
-      buckets = 8, maxHamming = 3, availableNow = true)
+      checkpoint = work.resolve("ck").toString, availableNow = true)
     q.awaitTermination()
     s.read.parquet(out).select("id", "family", "phash").orderBy("id")
   }
@@ -4248,16 +4240,16 @@ object SparkEntry {
       val dst = inDir.resolve(f"b$i%02d.parquet").toFile
       require(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    Dedup.initPostingIndexEpoch(docs.where(lit(false)), "doc_id", "text",
-      s"graft_b_stream_ingest_$tag", s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_ingest",
-      buckets = 8, shingleN = 3)
+    val kind = graft.streaming.IndexKind.textPostings("doc_id", "text",
+      shingleN = 3, threshold = 0.5)
+    kind.init(s, s"graft_b_stream_ingest_$tag",
+      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_ingest")
     val incoming = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
     val out = work.resolve("out").toString
-    val q = graft.streaming.DedupIngest.start(incoming, "doc_id", "text",
+    val q = graft.streaming.EpochIngest.start(incoming, kind,
       indexTable = s"graft_b_stream_ingest_$tag", outPath = out,
-      checkpoint = work.resolve("ck").toString,
-      buckets = 8, shingleN = 3, threshold = 0.5, availableNow = true)
+      checkpoint = work.resolve("ck").toString, availableNow = true)
     q.awaitTermination()
     s.read.parquet(out).select("doc_id", "lang").orderBy("doc_id")
   }
@@ -4283,17 +4275,16 @@ object SparkEntry {
       val dst = inDir.resolve(f"b$i%02d.parquet").toFile
       require(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    Dedup.initPostingIndexEpoch(docs.where(lit(false)), "doc_id", "text",
-      s"graft_b_stream_ingfold_$tag",
-      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_ingfold",
-      buckets = 8, shingleN = 3)
+    val kind = graft.streaming.IndexKind.textPostings("doc_id", "text",
+      shingleN = 3, threshold = 0.5)
+    kind.init(s, s"graft_b_stream_ingfold_$tag",
+      s"${graft.util.Scratch.base}/graft_bucketed_$tag/stream_ingfold")
     val incoming = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
     val out = work.resolve("out").toString
-    val q = graft.streaming.DedupIngest.start(incoming, "doc_id", "text",
+    val q = graft.streaming.EpochIngest.start(incoming, kind,
       indexTable = s"graft_b_stream_ingfold_$tag", outPath = out,
-      checkpoint = work.resolve("ck").toString,
-      buckets = 8, shingleN = 3, threshold = 0.5, availableNow = true,
+      checkpoint = work.resolve("ck").toString, availableNow = true,
       foldOutputEvery = 1)
     q.awaitTermination()
     graft.streaming.IngestOutput.read(s, out)

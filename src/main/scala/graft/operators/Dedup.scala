@@ -725,7 +725,7 @@ object Dedup {
 
   // ==== epoch-stamped index layout (exactly-once streaming ingest) ====
   //
-  // The streaming ingest sinks (MmIngest / DedupIngest) are foreachBatch
+  // The streaming ingest sinks (graft.streaming.EpochIngest) are foreachBatch
   // writers — at-least-once by contract: a crash between the epoch's side
   // effects and the checkpoint commit REPLAYS the whole batch. The epoch
   // column turns that into effective exactly-once:
@@ -759,52 +759,23 @@ object Dedup {
   // Batch-loop tables (hammingIngest / dedupIngest) keep the slimmer
   // unstamped layout — their loops are driver-sequential, no replay.
 
-  /** Empty epoch-stamped fragment-index table ([[buildHammingPostings]]
-    * + `epoch`), bucketed on `bk`. Also clears any stale epoch/run
-    * markers at `path` — init means a FRESH index, and a leftover marker
-    * would make the replay guard skip the new run's appends. */
-  def initHammingIndexEpoch(like: DataFrame, table: String, path: String,
-                            buckets: Int = 8, maxHamming: Int = 3): DataFrame = {
-    val out = Relational.bucketMaterialize(
-      buildHammingPostings(like.where(lit(false))
-        .select(col("id"), col("sh")), maxHamming)
-        .withColumn("epoch", lit(-1L)),
-      table, "bk", buckets, path)
-    EpochMarkers.reset(like.sparkSession, path)
-    out
+  /** Empty epoch-stamped index table: `postings`' schema (only the schema
+    * is used) plus `epoch`, bucketed on `key` — the one init every index
+    * kind of the streaming ingest loop shares. `gen = false` is the
+    * single-path layout at `path`; it also clears any stale epoch/run
+    * markers there — init means a FRESH index, and a leftover marker would
+    * make the replay guard skip the new run's appends. `gen = true` is the
+    * crash-safe GENERATIONAL layout ([[GenIndex.init]]: `path/gen-0` +
+    * committed marker), which periodic compaction requires. */
+  def initEpochIndex(postings: DataFrame, table: String, path: String,
+                     key: String, buckets: Int, gen: Boolean = false): Unit = {
+    val empty = postings.where(lit(false)).withColumn("epoch", lit(-1L))
+    if (gen) GenIndex.init(empty, table, path, key, buckets)
+    else {
+      Relational.bucketMaterialize(empty, table, key, buckets, path)
+      EpochMarkers.reset(postings.sparkSession, path)
+    }
   }
-
-  /** Empty epoch-stamped family-keyed fragment-index table. */
-  def initHammingIndexKeyedEpoch(like: DataFrame, table: String, path: String,
-                                 buckets: Int = 8, maxHamming: Int = 3): DataFrame = {
-    val out = Relational.bucketMaterialize(
-      buildHammingPostingsKeyed(like.where(lit(false))
-        .select(col("id"), col("sh"), col("grp")), maxHamming)
-        .withColumn("epoch", lit(-1L)),
-      table, "bk", buckets, path)
-    EpochMarkers.reset(like.sparkSession, path)
-    out
-  }
-
-  /** [[initHammingIndexEpoch]] on the crash-safe GENERATIONAL layout
-    * ([[GenIndex]]): `root/gen-0` + committed marker. Ingest loops detect
-    * the layout and route `compactEvery` to [[GenIndex.compactSwap]]. */
-  def initHammingIndexEpochGen(like: DataFrame, table: String, root: String,
-                               buckets: Int = 8, maxHamming: Int = 3): DataFrame =
-    GenIndex.init(
-      buildHammingPostings(like.where(lit(false))
-        .select(col("id"), col("sh")), maxHamming)
-        .withColumn("epoch", lit(-1L)),
-      table, root, "bk", buckets)
-
-  /** [[initHammingIndexKeyedEpoch]] on the generational layout. */
-  def initHammingIndexKeyedEpochGen(like: DataFrame, table: String, root: String,
-                                    buckets: Int = 8, maxHamming: Int = 3): DataFrame =
-    GenIndex.init(
-      buildHammingPostingsKeyed(like.where(lit(false))
-        .select(col("id"), col("sh"), col("grp")), maxHamming)
-        .withColumn("epoch", lit(-1L)),
-      table, root, "bk", buckets)
 
   /** True iff `epoch`'s append COMMITTED — the replay guard, now a
     * per-epoch marker stat ([[EpochMarkers.epochMarked]]): one filesystem
@@ -851,22 +822,25 @@ object Dedup {
     }
   }
 
-  /** The guarded-append skeleton all four epoch-stamped indexes share:
-    * committed epoch → skip; attempted-but-uncommitted → repair the
-    * possible partial; then write-ahead the attempt, append, and commit
-    * the marker (the single atomic durable step). The attempt marker is
-    * what keeps the repair probe — a Spark job over the index — OFF the
-    * per-batch hot path: a brand-new epoch has no attempt marker and
-    * pays two filesystem stats plus one create, never a scan; only a
+  /** Replay-guarded append of `postings` stamped `epoch` to an index from
+    * [[initEpochIndex]]: committed epoch → skip; attempted-but-uncommitted
+    * → repair the possible partial; then write-ahead the attempt, append,
+    * and commit the marker (the single atomic durable step). The attempt
+    * marker is what keeps the repair probe — a Spark job over the index —
+    * OFF the per-batch hot path: a brand-new epoch has no attempt marker
+    * and pays two filesystem stats plus one create, never a scan; only a
     * true replay over a crashed attempt scans. */
-  private def guardedEpochAppend(spark: org.apache.spark.sql.SparkSession,
-                                 table: String, epoch: Long)
-                                (append: => Unit): Unit =
+  def appendEpochIndex(postings: DataFrame, table: String, key: String,
+                       buckets: Int, epoch: Long): Unit = {
+    val spark = postings.sparkSession
     if (!epochAppended(spark, table, epoch)) {
       if (EpochMarkers.epochAttempted(spark, table, epoch))
         repairPartialEpoch(spark, table, epoch)
       EpochMarkers.markAttempt(spark, table, epoch)
-      append
+      postings.withColumn("epoch", lit(epoch))
+        .write.mode("append").format("parquet")
+        .bucketBy(buckets, key).sortBy(key)
+        .saveAsTable(table)
       EpochMarkers.markEpoch(spark, table, epoch)
       // bound the marker-file count on STREAMS that never compact
       // (compactEvery = 0, or a flat layout that cannot). Streaming-only
@@ -883,30 +857,7 @@ object Dedup {
           EpochMarkers.currentQueryId(spark).isDefined)
         EpochMarkers.pruneToMax(spark, table)
     }
-
-  /** Replay-guarded epoch-stamped append to the fragment index. */
-  def appendHammingIndexEpoch(hashes: DataFrame, table: String,
-                              buckets: Int, maxHamming: Int,
-                              epoch: Long): Unit =
-    guardedEpochAppend(hashes.sparkSession, table, epoch) {
-      buildHammingPostings(hashes, maxHamming)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "bk").sortBy("bk")
-        .saveAsTable(table)
-    }
-
-  /** Replay-guarded epoch-stamped append to the keyed fragment index. */
-  def appendHammingIndexKeyedEpoch(hashes: DataFrame, table: String,
-                                   buckets: Int, maxHamming: Int,
-                                   epoch: Long): Unit =
-    guardedEpochAppend(hashes.sparkSession, table, epoch) {
-      buildHammingPostingsKeyed(hashes, maxHamming)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "bk").sortBy("bk")
-        .saveAsTable(table)
-    }
+  }
 
   /** Rewrite the bucketed hamming fragment index into one compact file
     * set per bucket — the modality twin of [[compactPostingIndex]], and
@@ -1236,6 +1187,15 @@ object Dedup {
         TF.shingleHashes(col(textCol), shingleN).as("hs"))
       .withColumn("n", size(col("hs")))
 
+  private def requireSnmArgs(window: Int, keyLen: Int, threshold: Double,
+                             keyStart: Int): Unit = {
+    require(window >= 1, s"window must be >= 1, got $window")
+    require(keyLen >= 1, s"keyLen must be >= 1, got $keyLen")
+    require(keyStart >= 1, s"keyStart must be >= 1, got $keyStart")
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
+  }
+
   /** One SNM pass over a prebuilt [[snmBase]] frame — byte-identical
     * output to the public entry point (the key is the same substring of
     * the same normalized text). */
@@ -1243,11 +1203,7 @@ object Dedup {
                                               keyLen: Int, threshold: Double,
                                               keyStart: Int,
                                               materialize: Boolean): DataFrame = {
-    require(window >= 1, s"window must be >= 1, got $window")
-    require(keyLen >= 1, s"keyLen must be >= 1, got $keyLen")
-    require(keyStart >= 1, s"keyStart must be >= 1, got $keyStart")
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
+    requireSnmArgs(window, keyLen, threshold, keyStart)
     val keyed = base.select(col("id"),
         substring(col("norm"), keyStart, keyLen).as("k"),
         col("hs"), col("n"))
@@ -1308,19 +1264,22 @@ object Dedup {
                                   threshold: Double = 0.3): DataFrame = {
     require(passes >= 1 && passes <= 8, s"passes must be in [1, 8], got $passes")
     require(stride >= 1, s"stride must be >= 1, got $stride")
+    // validate before the shared base is persisted, so a bad argument
+    // cannot leave it cached
+    requireSnmArgs(window, keyLen, threshold, keyStart = 1)
     // ONE normalization + shingling scan feeds every pass (the passes
     // differ only in the sort-key offset — guide §1.2 step 1); each pass
     // still pays its own range-sort, which IS the algorithm
     val base = snmBase(df, idCol, textCol, shingleN).saltedPersist()
-    val all = (0 until passes).map { p =>
-      sortedNeighborhoodPairsFromBase(base, window, keyLen, threshold,
-        keyStart = 1 + p * stride, materialize = true)
-    }
-    // same pair found by two passes carries the same exact jaccard, so
-    // the distinct is a pure pair-set dedup
-    val out = Materialize.cut(all.reduce(_ unionByName _).distinct())
-    base.unpersist()
-    out
+    try {
+      val all = (0 until passes).map { p =>
+        sortedNeighborhoodPairsFromBase(base, window, keyLen, threshold,
+          keyStart = 1 + p * stride, materialize = true)
+      }
+      // same pair found by two passes carries the same exact jaccard, so
+      // the distinct is a pure pair-set dedup
+      Materialize.cut(all.reduce(_ unionByName _).distinct())
+    } finally base.unpersist()
   }
 
   /** The minimum shingle overlap a partner can have with a size-`n` set
@@ -1597,39 +1556,6 @@ object Dedup {
       .bucketBy(buckets, "bucket").sortBy("bucket")
       .saveAsTable(table)
 
-  /** Empty epoch-stamped embedding-index table (streaming-ingest layout;
-    * see the epoch-layout note above [[initHammingIndexEpoch]]). */
-  def initEmbedIndexEpoch(like: DataFrame, table: String, path: String,
-                          buckets: Int = 8, lshBits: Int = 8,
-                          dim: Int = 64): DataFrame = {
-    val out = Relational.bucketMaterialize(
-      buildEmbedPostings(like.where(lit(false)).select(col("id"), col("vec")),
-        lshBits, dim).withColumn("epoch", lit(-1L)),
-      table, "bucket", buckets, path)
-    EpochMarkers.reset(like.sparkSession, path)
-    out
-  }
-
-  /** [[initEmbedIndexEpoch]] on the crash-safe generational layout. */
-  def initEmbedIndexEpochGen(like: DataFrame, table: String, root: String,
-                             buckets: Int = 8, lshBits: Int = 8,
-                             dim: Int = 64): DataFrame =
-    GenIndex.init(
-      buildEmbedPostings(like.where(lit(false)).select(col("id"), col("vec")),
-        lshBits, dim).withColumn("epoch", lit(-1L)),
-      table, root, "bucket", buckets)
-
-  /** Replay-guarded epoch-stamped append to the embedding index. */
-  def appendEmbedIndexEpoch(vecs: DataFrame, table: String, buckets: Int,
-                            lshBits: Int, dim: Int, epoch: Long): Unit =
-    guardedEpochAppend(vecs.sparkSession, table, epoch) {
-      buildEmbedPostings(vecs, lshBits, dim)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "bucket").sortBy("bucket")
-        .saveAsTable(table)
-    }
-
   /** Incremental embedding dedup against the PERSISTED LSH index — the
     * embedding twin of [[hammingSurvivorsIndexed]]: per incoming vector,
     * how many ACCEPTED corpus vectors and how many smaller-id batch
@@ -1780,45 +1706,6 @@ object Dedup {
       .write.mode("append").format("parquet")
       .bucketBy(buckets, "h").sortBy("h")
       .saveAsTable(table)
-
-  /** Empty epoch-stamped posting-index table ([[buildPostingIndex]] +
-    * `epoch`) — the streaming-ingest layout; see the epoch-layout note
-    * above [[initHammingIndexEpoch]]. Duplicate-free appends matter MORE
-    * here than for the hamming index: the Jaccard probe COUNTS matching
-    * postings per pair, so a replayed un-guarded append would double
-    * every intersection. */
-  def initPostingIndexEpoch(df: DataFrame, idCol: String, textCol: String,
-                            table: String, path: String, buckets: Int = 8,
-                            shingleN: Int = 3): DataFrame = {
-    val out = Relational.bucketMaterialize(
-      buildPostingIndex(df.where(lit(false)), idCol, textCol, shingleN)
-        .withColumn("epoch", lit(-1L)),
-      table, "h", buckets, path)
-    EpochMarkers.reset(df.sparkSession, path)
-    out
-  }
-
-  /** [[initPostingIndexEpoch]] on the crash-safe generational layout
-    * ([[GenIndex]]) — see [[initHammingIndexEpochGen]]. */
-  def initPostingIndexEpochGen(df: DataFrame, idCol: String, textCol: String,
-                               table: String, root: String, buckets: Int = 8,
-                               shingleN: Int = 3): DataFrame =
-    GenIndex.init(
-      buildPostingIndex(df.where(lit(false)), idCol, textCol, shingleN)
-        .withColumn("epoch", lit(-1L)),
-      table, root, "h", buckets)
-
-  /** Replay-guarded epoch-stamped append to the posting index. */
-  def appendPostingIndexEpoch(surv: DataFrame, idCol: String, textCol: String,
-                              table: String, buckets: Int, shingleN: Int,
-                              epoch: Long): Unit =
-    guardedEpochAppend(surv.sparkSession, table, epoch) {
-      buildPostingIndex(surv, idCol, textCol, shingleN)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "h").sortBy("h")
-        .saveAsTable(table)
-    }
 
   /** [[compactHammingIndex]] for the posting index WITHOUT refreshing df —
     * the pure small-files rewrite (the epoch-stamped streaming layout

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * append job itself.
   *
   * The epoch-stamped layout (see the note above
-  * [[Dedup.initHammingIndexEpoch]]) guards index appends per batchId so a
+  * [[Dedup.initEpochIndex]]) guards index appends per batchId so a
   * replayed micro-batch never duplicates postings. Guarding on ROW
   * EXISTENCE ("rows stamped `epoch == k` exist") trusts the append job's
   * commit to be atomic — but a multi-file parquet append is not: a JVM

@@ -180,7 +180,7 @@ object GenIndex {
     if (compactEvery > 0 && indexPath != null)
       require(isGenerational(spark, indexPath),
         s"index '$indexTable': compactEvery = $compactEvery needs the " +
-        s"generational layout at $indexPath (init via the ...Gen variant) — " +
+        s"generational layout at $indexPath (init with gen = true) — " +
         "in-place compaction can window the index under a mid-rewrite " +
         "crash and discards the epoch commit markers the replay guard " +
         "depends on")
@@ -207,8 +207,8 @@ object GenIndex {
         catch { case scala.util.control.NonFatal(_) => () })
     catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Layout-routed periodic compaction — the single implementation the
-    * three ingest loops share: a generational root gets the crash-safe
+  /** Layout-routed periodic compaction of the epoch-ingest loop
+    * ([[graft.streaming.EpochIngest]]): a generational root gets the crash-safe
     * fresh-generation swap. The single-path branch keeps the in-place
     * rewrite for EXPERT direct callers only — the streaming ingest steps
     * enforce the generational layout before ever reaching here
@@ -220,20 +220,16 @@ object GenIndex {
     if (isGenerational(spark, path)) compactSwap(spark, table, path, key, buckets)
     else Dedup.compactPostingIndexFiles(spark, table, path, buckets, key)
 
-  /** First-batch table resolution for the config ingest sinks — ONE
-    * decision ladder so the sinks cannot diverge: an existing index at
-    * `path` RE-REGISTERS from its files (generation marker, else bucketed
-    * part-files — the session catalog does not survive a JVM restart and
-    * an init here would overwrite the accumulated index); only a truly
-    * empty `path` initializes, via `initGen`/`initFlat` per the
-    * configured layout. */
+  /** First-batch table resolution for the config ingest sinks: an
+    * existing index at `path` RE-REGISTERS from its files (generation
+    * marker, else bucketed part-files — the session catalog does not
+    * survive a JVM restart and an init here would overwrite the
+    * accumulated index); only a truly empty `path` runs `init`. */
   def openOrInit(spark: SparkSession, table: String, path: String,
-                 key: String, buckets: Int, gen: Boolean)
-                (initFlat: => Unit)(initGen: => Unit): Unit =
+                 key: String, buckets: Int)(init: => Unit): Unit =
     if (isGenerational(spark, path)) { open(spark, table, path, key, buckets); () }
     else if (hasData(spark, path)) { register(spark, table, path, key, buckets); () }
-    else if (gen) initGen
-    else initFlat
+    else init
 
   /** Resume guard for the exactly-once ingest sinks: a resuming stream's
     * `batchId` may never sit BEHIND the index's newest epoch — that means

@@ -487,10 +487,13 @@ object Graph {
   /** Eager-cut `df` and read its row count off the cut job's own observed
     * metric — the convergence/early-exit count of the iterative walks with
     * zero extra driver jobs (the `connectedComponents` observe pattern).
+    * The count is exact under every cut mode: an EAGER checkpoint,
+    * reliable or local, computes the plan in one job (spec-pinned).
     * Fails loudly if the metric is absent: a missing key (a cut strategy
     * that stops materializing CollectMetrics) must never read as "empty
     * frontier" and silently truncate a walk. */
-  private def cutCounted(df: DataFrame, obsName: String): (DataFrame, Long) = {
+  private[graft] def cutCounted(df: DataFrame,
+                                obsName: String): (DataFrame, Long) = {
     val toCut = df.observe(obsName, count(lit(1)).as("n"))
     val cut = Materialize.cut(toCut)
     val row = toCut.queryExecution.observedMetrics.getOrElse(obsName,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 
 /** Crash-safe FOLDING for the ingest sinks' epoch-keyed output — the
   * output-side twin of the index's generational compaction
-  * ([[graft.operators.GenIndex]]): [[MmIngest.writeEpoch]] lays down one
+  * ([[graft.operators.GenIndex]]): [[EpochIngest.writeEpoch]] lays down one
   * `outPath/epoch=<batchId>` directory per micro-batch forever, so a
   * month-long stream accumulates O(epochs) directories/files that every
   * consumer's partition discovery must list. Folding periodically rewrites

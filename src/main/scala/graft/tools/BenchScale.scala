@@ -435,12 +435,11 @@ object BenchScaleKernels {
     val table = s"graft_scale_genswap_$tag"
     val root = s"${graft.util.Scratch.base}/graft_scale_genswap_$tag"
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    graft.operators.Dedup.initPostingIndexEpochGen(
-      docs.where(lit(false)), "doc_id", "text", table, root, buckets = 8)
+    val kind = graft.streaming.IndexKind.textPostings("doc_id", "text")
+    kind.init(spark, table, root, gen = true)
     (0 until 4).foreach { e =>
-      graft.operators.Dedup.appendPostingIndexEpoch(
-        docs.where(pmod(col("doc_id"), lit(4)) === e), "doc_id", "text",
-        table, 8, 3, e.toLong)
+      kind.append(docs.where(pmod(col("doc_id"), lit(4)) === e), table, 8,
+        e.toLong)
     }
     val t0 = System.nanoTime()
     graft.operators.GenIndex.compactSwap(spark, table, root, "h", 8)
@@ -465,7 +464,7 @@ object BenchScaleKernels {
     val p = new org.apache.hadoop.fs.Path(out)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     (0 until 4).foreach { e =>
-      graft.streaming.MmIngest.writeEpoch(
+      graft.streaming.EpochIngest.writeEpoch(
         docs.where(pmod(col("doc_id"), lit(4)) === e), out, e.toLong)
     }
     val t0 = System.nanoTime()

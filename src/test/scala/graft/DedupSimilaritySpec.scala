@@ -1435,6 +1435,19 @@ class DedupSimilaritySpec extends SparkSpec {
       s"shared-base multipass diverged: ${multi.size} vs ${composed.size} pairs")
   }
 
+  test("sortedNeighborhoodMultiPass: an invalid argument throws before the shared base is cached") {
+    import spark.implicits._
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val live = graft.util.CacheSalt.liveCachedCount()
+    intercept[IllegalArgumentException] {
+      graft.operators.Dedup.sortedNeighborhoodMultiPass(docs, "doc_id", "text",
+        window = 0)
+    }
+    assert(graft.util.CacheSalt.liveCachedCount() == live,
+      "a rejected window left the shared SNM base persisted")
+  }
+
   test("weightedMinhashPairs: capWeight=1 degrades to plain MinHash exactly (salt 0 is 0)") {
     val docs = spark.read.parquet(sf("documents"))
     val plain = graft.operators.Dedup

@@ -2,7 +2,8 @@ package graft
 
 import graft.config.GraftConfig
 import graft.event.Event
-import graft.streaming.{BatchSemantics, Pipeline, SinkPlugin, SourcePlugin}
+import graft.streaming.{BatchSemantics, EpochIngest, IndexKind, Pipeline, SinkPlugin,
+  SourcePlugin}
 
 import java.nio.file.Files
 
@@ -622,13 +623,11 @@ class PipelineStreamingSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String)]
     // the index must exist (empty) before the first micro-batch probes it —
     // init from a STATIC empty frame (a streaming frame cannot batch-write)
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_ingest_live", s"$tmp/idx_live")
-    val q = graft.streaming.DedupIngest.start(
-      ms.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      indexTable = "graft_spec_ingest_live",
-      outPath = s"$tmp/out", checkpoint = s"$tmp/ckpt")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_ingest_live",
+      s"$tmp/idx_live")
+    val q = EpochIngest.start(ms.toDF().toDF("doc_id", "text"),
+      IndexKind.textPostings("doc_id", "text"), "graft_spec_ingest_live",
+      s"$tmp/out", s"$tmp/ckpt")
     try {
       Seq(b1, b2, b3).foreach { b => ms.addData(b); q.processAllAvailable() }
     } finally q.stop()
@@ -667,9 +666,8 @@ class PipelineStreamingSpec extends SparkSpec {
       val dst = new java.io.File(inDir, f"b$i%02d.parquet")
       assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_ingest_kill", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_ingest_kill",
+      s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -677,9 +675,8 @@ class PipelineStreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     def incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val step = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_ingest_kill", s"$tmp/out",
-      buckets = 8, shingleN = 3, threshold = 0.5)
+    val step = EpochIngest.step(IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_ingest_kill", s"$tmp/out")
     // attempt 1: epoch 1 CRASHES mid-epoch — after the output overwrite,
     // BEFORE the index append (the narrowest replay window: the crashed
     // attempt's rows are on disk but its postings are not)
@@ -693,7 +690,7 @@ class PipelineStreamingSpec extends SparkSpec {
             b, spark.table("graft_spec_ingest_kill")
               .where(col("epoch") < lit(id)),
             "doc_id", "text", 3, 0.5, Long.MaxValue)
-          graft.streaming.MmIngest.writeEpoch(surv, s"$tmp/out", id)
+          EpochIngest.writeEpoch(surv, s"$tmp/out", id)
           crashed = true
           throw new RuntimeException("injected crash between output and index append")
         } else step(b, id)
@@ -749,24 +746,19 @@ class PipelineStreamingSpec extends SparkSpec {
     //    index) must fail instead of silently re-accepting duplicates
     //    and skipping appends through the replay guard
     val tmp = Files.createTempDirectory("graft-resume-guard").toString
-    graft.operators.Dedup.initHammingIndexEpoch(
-      Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_resume_guard", s"$tmp/idx")
+    IndexKind.hamming().init(spark, "graft_spec_resume_guard", s"$tmp/idx")
     def payloads(r: Range) = graft.operators.Multimodal
       .renderedImagePayloads(spark.range(r.start, r.end).toDF("doc_id"), "doc_id")
-    val run1 = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_resume_guard", s"$tmp/out", 8, 3)
+    val run1 = EpochIngest.step(IndexKind.hamming(), "graft_spec_resume_guard", s"$tmp/out")
     run1(payloads(0 until 4), 0L)
     run1(payloads(100 until 104), 1L)
     assert(spark.table("graft_spec_resume_guard")
       .agg(max(col("epoch"))).head().getLong(0) == 1L, "fixture built no epochs")
     // legal resume: replay of the newest epoch passes the guard
-    val run2 = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_resume_guard", s"$tmp/out", 8, 3)
+    val run2 = EpochIngest.step(IndexKind.hamming(), "graft_spec_resume_guard", s"$tmp/out")
     run2(payloads(100 until 104), 1L)
     // illegal resume: batchId 0 is BEHIND max epoch 1
-    val run3 = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_resume_guard", s"$tmp/out", 8, 3)
+    val run3 = EpochIngest.step(IndexKind.hamming(), "graft_spec_resume_guard", s"$tmp/out")
     val e = intercept[IllegalArgumentException] {
       run3(payloads(0 until 4), 0L)
     }
@@ -778,9 +770,8 @@ class PipelineStreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-embed-malformed").toString
-    graft.operators.Dedup.initEmbedIndexEpoch(
-      spark.range(0).select(col("id"), lit(null).cast("array<float>").as("vec")),
-      "graft_spec_embed_mal", s"$tmp/idx", buckets = 4)
+    IndexKind.embedLsh().init(spark, "graft_spec_embed_mal", s"$tmp/idx",
+      buckets = 4)
     val good = Array.tabulate(64)(i => i / 64.0f)
     val batch = Seq(
       (1L, good),
@@ -789,8 +780,8 @@ class PipelineStreamingSpec extends SparkSpec {
       .toDF("id", "vec")
     // would raise_error inside hyperplaneBucket without the row-level
     // guard — the epoch must complete and keep the good row
-    graft.streaming.EmbedIngest.ingestEpoch(
-      "graft_spec_embed_mal", s"$tmp/out", 4, 0.95, 8, 64)(batch, 0L)
+    EpochIngest.step(IndexKind.embedLsh(0.95), "graft_spec_embed_mal", s"$tmp/out",
+      4)(batch, 0L)
     val ids = spark.read.parquet(s"$tmp/out")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L), s"malformed rows must drop, good row survive: $ids")
@@ -817,9 +808,7 @@ class PipelineStreamingSpec extends SparkSpec {
         assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
       }
     import spark.implicits._
-    graft.operators.Dedup.initEmbedIndexEpoch(
-      spark.range(0).select(col("id"), lit(null).cast("array<float>").as("vec")),
-      "graft_spec_embed_kill", s"$tmp/idx")
+    IndexKind.embedLsh().init(spark, "graft_spec_embed_kill", s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
@@ -828,8 +817,7 @@ class PipelineStreamingSpec extends SparkSpec {
           org.apache.spark.sql.types.FloatType))))
     def incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val step = graft.streaming.EmbedIngest.ingestEpoch(
-      "graft_spec_embed_kill", s"$tmp/out", 8, 0.25, 8, 64)
+    val step = EpochIngest.step(IndexKind.embedLsh(0.25), "graft_spec_embed_kill", s"$tmp/out")
     // crash epoch 1 AFTER the output overwrite, BEFORE the index append —
     // the narrowest window: the crashed attempt's rows are on disk but
     // its postings are not
@@ -843,7 +831,7 @@ class PipelineStreamingSpec extends SparkSpec {
             b, spark.table("graft_spec_embed_kill")
               .where(col("epoch") < lit(id)), 0.25)
             .where(col("survives")).select(col("id"), col("vec"))
-          graft.streaming.MmIngest.writeEpoch(surv, s"$tmp/out", id)
+          EpochIngest.writeEpoch(surv, s"$tmp/out", id)
           crashed = true
           throw new RuntimeException("injected crash between output and index append")
         } else step(b, id)
@@ -902,9 +890,7 @@ class PipelineStreamingSpec extends SparkSpec {
       assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
     import spark.implicits._
-    graft.operators.Dedup.initHammingIndexEpoch(
-      Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_mm_kill", s"$tmp/idx")
+    IndexKind.hamming().init(spark, "graft_spec_mm_kill", s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
@@ -912,8 +898,7 @@ class PipelineStreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.BinaryType)))
     def incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val step = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_mm_kill", s"$tmp/out", buckets = 8, maxHamming = 3)
+    val step = EpochIngest.step(IndexKind.hamming(), "graft_spec_mm_kill", s"$tmp/out")
     // crash AFTER epoch 1's full side effects (output + index) but before
     // the checkpoint commit — exactly the window where the old append-mode
     // sink duplicated rows and a naive re-probe dropped the whole batch
@@ -993,19 +978,18 @@ class PipelineStreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     // code-assembled twin over the identical batches from a fresh index
     import spark.implicits._
-    graft.operators.Dedup.initHammingIndexKeyedEpoch(
-      Seq.empty[(Long, Long, String)].toDF("id", "sh", "grp"),
-      "graft_spec_cfg_mm_twin", s"$tmp/idx_twin")
+    IndexKind.familyHamming().init(spark, "graft_spec_cfg_mm_twin",
+      s"$tmp/idx_twin")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("payload",
         org.apache.spark.sql.types.BinaryType)))
-    val q = graft.streaming.MmIngest.startComposed(
+    val q = EpochIngest.start(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir.toString),
-      "graft_spec_cfg_mm_twin", s"$tmp/out_twin", s"$tmp/ck_twin",
-      availableNow = true)
+      IndexKind.familyHamming(), "graft_spec_cfg_mm_twin", s"$tmp/out_twin",
+      s"$tmp/ck_twin", availableNow = true)
     q.awaitTermination()
     val twin = spark.read.parquet(s"$tmp/out_twin")
       .select("id", "family", "phash").collect()
@@ -1070,46 +1054,91 @@ class PipelineStreamingSpec extends SparkSpec {
   }
 
   test("mm-ingest sink restart: catalog loss re-registers the index — never re-inits over accumulated fingerprints") {
+    checkIngestRestart("mm-ingest")
+  }
+
+  test("embed-ingest sink restart: catalog loss re-registers the LSH index — never re-inits over accepted vectors") {
+    checkIngestRestart("embed-ingest")
+  }
+
+  test("dedup-ingest sink restart: catalog loss re-registers the posting index — never re-inits over the accepted corpus") {
+    checkIngestRestart("dedup-ingest")
+  }
+
+  /** One restart check per ingest sink type, shared by the three specs
+    * above: the sink types differ only in their writer and fixtures. */
+  private def checkIngestRestart(sinkType: String): Unit = {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
-    // drive the CONFIG sink's writer directly, batch by batch, with a
+    import spark.implicits._
+    // drive each CONFIG sink's writer directly, batch by batch, with a
     // simulated JVM restart (catalog wiped, files intact) between epochs:
-    // the sink must recover the index from disk, so a payload already
+    // the sink must recover the index from disk, so a row already
     // accepted before the restart is DROPPED after it, not re-accepted —
     // on both layouts (flat re-register; gen open-from-marker).
+    def wire(rows: Seq[(Long, String)]): DataFrame = rows.toDF("doc_id", "body")
+      .select(col("body"),
+        map(lit("id"), col("doc_id").cast("string")).as("headers"))
+    def payloads(r: Range) = graft.operators.Multimodal
+      .renderedIngestPayloads(
+        spark.range(r.start, r.end).toDF("doc_id"), "doc_id")
+      .select(col("id").cast("string").as("hid"),
+              base64(col("payload")).as("body"))
+      .selectExpr("body", "map('id', hid) as headers")
+    val mk = (p: String) => (1 to 40).map(i => s"$p$i").mkString(" ")
+    val rnd = new java.util.Random(5)
+    def vec() = Array.fill(64)(rnd.nextGaussian().toFloat).mkString("[", ",", "]")
+    val (va, vb, vc) = (vec(), vec(), vec())
+    // epoch 1 re-sends an epoch-0 row as `resent`; `before`/`after` are
+    // the exact survivor sets where the fixture pins them
+    case class Case(sinkType: String,
+                    writer: GraftConfig => (DataFrame, Long) => Unit,
+                    epoch0: DataFrame, epoch1: DataFrame, resent: Long,
+                    before: Option[Set[Long]], after: Option[Set[Long]])
+    val cases = Seq(
+      // payload id=0 re-sent (rendered identically) plus far-away ids (a
+      // fresh render group — no twins of 0-5)
+      Case("mm-ingest", graft.streaming.MmIngestSink.writer,
+        payloads(0 until 6),
+        payloads(0 until 1).unionByName(payloads(100 until 106)), 0L,
+        None, None),
+      // vector 1 re-sent verbatim under a new id, plus a fresh vector
+      Case("embed-ingest", graft.streaming.EmbedIngestSink.writer,
+        wire(Seq(1L -> va, 2L -> vb)), wire(Seq(10L -> va, 11L -> vc)), 10L,
+        Some(Set(1L, 2L)), Some(Set(11L))),
+      // doc 1's text re-sent verbatim under a new id, plus a fresh doc
+      Case("dedup-ingest", graft.streaming.DedupIngestSink.writer,
+        wire(Seq(1L -> mk("tok"), 2L -> mk("alt"))),
+        wire(Seq(10L -> mk("tok"), 11L -> mk("new"))), 10L,
+        Some(Set(1L, 2L)), Some(Set(11L))))
+    val c = cases.find(_.sinkType == sinkType).get
     for (layout <- Seq("flat", "gen")) {
-      val tmp = Files.createTempDirectory(s"graft-cfg-restart-$layout").toString
-      val t = s"graft_spec_cfg_restart_$layout"
+      val tag = s"${c.sinkType.takeWhile(_ != '-')}_$layout"
+      val tmp = Files.createTempDirectory(s"graft-cfg-restart-$tag").toString
+      val t = s"graft_spec_cfg_restart_$tag"
       // compact-every through the CONFIG surface requires the gen layout
       val ce = if (layout == "gen") 1 else 0
       val cfg = GraftConfig.parse(s"""
-        sink-stage { type = mm-ingest, index-table = $t,
+        sink-stage { type = ${c.sinkType}, index-table = $t,
                      index-path = "$tmp/idx", out-path = "$tmp/out",
                      layout = $layout, compact-every = $ce }""")
         .getSection("sink-stage").get
-      val writer = graft.streaming.MmIngestSink.writer(cfg)
-      def payloads(r: Range) = graft.operators.Multimodal
-        .renderedIngestPayloads(
-          spark.range(r.start, r.end).toDF("doc_id"), "doc_id")
-        .select(col("id").cast("string").as("hid"),
-                base64(col("payload")).as("body"))
-        .selectExpr("body", "map('id', hid) as headers")
-      writer(payloads(0 until 6), 0L)
+      c.writer(cfg)(c.epoch0, 0L)
       val before = spark.read.parquet(s"$tmp/out")
         .select("id").collect().map(_.getLong(0)).toSet
-      assert(before.nonEmpty, "epoch 0 accepted nothing")
+      assert(before.nonEmpty, s"[$tag] epoch 0 accepted nothing")
+      c.before.foreach(b => assert(before == b, s"[$tag] epoch 0 accepted $before"))
       // "restart": the session catalog does not survive the JVM, and the
       // sink's build() runs afresh — a NEW writer closure
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      val writer2 = graft.streaming.MmIngestSink.writer(cfg)
-      // epoch 1 re-sends payload id=0 (rendered identically) plus new
-      // far-away ids (a fresh render group — no twins of 0-5)
-      writer2(payloads(0 until 1).unionByName(payloads(100 until 106)), 1L)
+      c.writer(cfg)(c.epoch1, 1L)
       val after = spark.read.parquet(s"$tmp/out")
         .where(col("epoch") === 1).select("id")
         .collect().map(_.getLong(0)).toSet
-      assert(!after.contains(0L),
-        s"[$layout] restart forgot the index: re-sent payload re-accepted ($after)")
-      assert(after.nonEmpty, s"[$layout] epoch 1 accepted nothing at all")
+      assert(!after.contains(c.resent),
+        s"[$tag] restart forgot the index: re-sent row re-accepted ($after)")
+      assert(after.nonEmpty, s"[$tag] epoch 1 accepted nothing at all")
+      c.after.foreach(a => assert(after == a, s"[$tag] epoch 1 accepted $after"))
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
     }
   }
@@ -1118,16 +1147,13 @@ class PipelineStreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-compact").toString
-    graft.operators.Dedup.initHammingIndexEpoch(
-      Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_compact", s"$tmp/idx", buckets = 4)
+    IndexKind.hamming().init(spark, "graft_spec_compact", s"$tmp/idx", buckets = 4)
     // 6 micro-batch appends → 6 file sets per touched bucket
     val rnd = new java.util.Random(7)
     (0 until 6).foreach { e =>
       val hs = (0 until 8).map(i => (e * 100L + i, rnd.nextLong()))
-      graft.operators.Dedup.appendHammingIndexEpoch(
-        hs.toDF("id", "sh"), "graft_spec_compact",
-        buckets = 4, maxHamming = 3, epoch = e.toLong)
+      IndexKind.hamming().append(hs.toDF("id", "sh"), "graft_spec_compact", 4,
+        e.toLong)
     }
     def parts() = new java.io.File(s"$tmp/idx").listFiles()
       .count(_.getName.startsWith("part-"))
@@ -1159,14 +1185,12 @@ class PipelineStreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-genidx").toString
     val root = s"$tmp/idx"
     val t = "graft_spec_genidx"
-    Dedup.initHammingIndexEpochGen(
-      Seq.empty[(Long, Long)].toDF("id", "sh"), t, root, buckets = 4)
+    IndexKind.hamming().init(spark, t, root, buckets = 4, gen = true)
     assert(GenIndex.liveGen(spark, root).contains(0L))
     val rnd = new java.util.Random(11)
     (0 until 5).foreach { e =>
       val hs = (0 until 8).map(i => (e * 100L + i, rnd.nextLong()))
-      Dedup.appendHammingIndexEpoch(hs.toDF("id", "sh"), t,
-        buckets = 4, maxHamming = 3, epoch = e.toLong)
+      IndexKind.hamming().append(hs.toDF("id", "sh"), t, 4, e.toLong)
     }
     val probe = (0 until 6).map(i => (1000L + i, rnd.nextLong()))
     def probeResult() = Dedup.hammingSurvivorsIndexed(
@@ -1226,9 +1250,8 @@ class PipelineStreamingSpec extends SparkSpec {
     }
     // appends keep flowing through the re-registered table (the live
     // generation is immutable once SUPERSEDED, not while live)
-    Dedup.appendHammingIndexEpoch(
-      Seq((900L, rnd.nextLong())).toDF("id", "sh"), t,
-      buckets = 4, maxHamming = 3, epoch = 5L)
+    IndexKind.hamming().append(Seq((900L, rnd.nextLong())).toDF("id", "sh"), t, 4,
+      5L)
     assert(spark.table(t).select("epoch").distinct().count() == 6L)
     // a second swap compacts the post-recovery appends too
     GenIndex.compactSwap(spark, t, root, "bk", buckets = 4)
@@ -1249,30 +1272,24 @@ class PipelineStreamingSpec extends SparkSpec {
     // single-path twin (the gate layout, no compaction — flat + periodic
     // compaction is REJECTED below: the in-place rewrite's crash window
     // plus marker loss)
-    Dedup.initHammingIndexEpoch(Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_mmgen_flat", s"$tmp/flat")
-    val flatStep = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_mmgen_flat", s"$tmp/flat_out", buckets = 8,
-      maxHamming = 3)
+    IndexKind.hamming().init(spark, "graft_spec_mmgen_flat", s"$tmp/flat")
+    val flatStep = EpochIngest.step(IndexKind.hamming(), "graft_spec_mmgen_flat", s"$tmp/flat_out")
     batches.zipWithIndex.foreach { case (b, i) => flatStep(b, i.toLong) }
     // compactEvery over the flat layout fails on the FIRST batch, for
     // programmatic callers exactly like the config sinks (the ADVICE
     // hole: a direct API caller could route a long-running stream
     // through the in-place rewrite whose mid-crash window destroys the
     // only durable index copy)
-    val rejected = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_mmgen_flat", s"$tmp/flat_out2", buckets = 8,
-      maxHamming = 3, indexPath = s"$tmp/flat", compactEvery = 1)
+    val rejected = EpochIngest.step(IndexKind.hamming(), "graft_spec_mmgen_flat",
+      s"$tmp/flat_out2", indexPath = s"$tmp/flat", compactEvery = 1)
     val eFlat = intercept[IllegalArgumentException] {
       rejected(batches.head, 2L)
     }
     assert(eFlat.getMessage.contains("generational layout"), eFlat.getMessage)
     // generational layout through the SAME entry point
-    Dedup.initHammingIndexEpochGen(Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_mmgen", s"$tmp/gen")
-    val genStep = graft.streaming.MmIngest.ingestEpoch(
-      "graft_spec_mmgen", s"$tmp/gen_out", buckets = 8,
-      maxHamming = 3, indexPath = s"$tmp/gen", compactEvery = 1)
+    IndexKind.hamming().init(spark, "graft_spec_mmgen", s"$tmp/gen", gen = true)
+    val genStep = EpochIngest.step(IndexKind.hamming(), "graft_spec_mmgen", s"$tmp/gen_out",
+      indexPath = s"$tmp/gen", compactEvery = 1)
     batches.zipWithIndex.foreach { case (b, i) => genStep(b, i.toLong) }
     def surv(p: String) = spark.read.parquet(p).select("id", "phash")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1300,10 +1317,10 @@ class PipelineStreamingSpec extends SparkSpec {
       .map(_.toDF("doc_id", "text"))
     val tmp = Files.createTempDirectory("graft-ingest-compact").toString
     // twin WITHOUT compaction — the survivor truth
-    Dedup.initPostingIndexEpoch(Seq.empty[(Long, String)].toDF("doc_id", "text"),
-      "doc_id", "text", "graft_spec_ic_plain", s"$tmp/plain")
-    val plain = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_ic_plain", s"$tmp/plain_out", 8, 3, 0.5)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_ic_plain",
+      s"$tmp/plain")
+    val plain = EpochIngest.step(IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_ic_plain", s"$tmp/plain_out")
     batches.zipWithIndex.foreach { case (b, i) => plain(b, i.toLong) }
     def ids(p: String) = spark.read.parquet(p)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1311,19 +1328,17 @@ class PipelineStreamingSpec extends SparkSpec {
     // flat layout + in-place compaction is REJECTED on the first batch
     // (the in-place rewrite's crash window + epoch-marker loss) — for
     // programmatic callers exactly like the config sinks
-    Dedup.initPostingIndexEpoch(Seq.empty[(Long, String)].toDF("doc_id", "text"),
-      "doc_id", "text", "graft_spec_ic_flat", s"$tmp/flat", buckets = 4)
-    val flat = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_ic_flat", s"$tmp/flat_out", 4, 3, 0.5,
-      indexPath = s"$tmp/flat", compactEvery = 1)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_ic_flat",
+      s"$tmp/flat", buckets = 4)
+    val flat = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_ic_flat",
+      s"$tmp/flat_out", 4, indexPath = s"$tmp/flat", compactEvery = 1)
     val eFlat = intercept[IllegalArgumentException] { flat(batches.head, 0L) }
     assert(eFlat.getMessage.contains("generational layout"), eFlat.getMessage)
     // generational layout through the SAME entry point
-    Dedup.initPostingIndexEpochGen(Seq.empty[(Long, String)].toDF("doc_id", "text"),
-      "doc_id", "text", "graft_spec_ic_gen", s"$tmp/gen", buckets = 4)
-    val gen = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_ic_gen", s"$tmp/gen_out", 4, 3, 0.5,
-      indexPath = s"$tmp/gen", compactEvery = 1)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_ic_gen",
+      s"$tmp/gen", buckets = 4, gen = true)
+    val gen = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_ic_gen",
+      s"$tmp/gen_out", 4, indexPath = s"$tmp/gen", compactEvery = 1)
     batches.zipWithIndex.foreach { case (b, i) => gen(b, i.toLong) }
     assert(ids(s"$tmp/gen_out") == truth, "gen compaction changed survivors")
     assert(GenIndex.liveGen(spark, s"$tmp/gen").contains(3L))
@@ -1359,9 +1374,8 @@ class PipelineStreamingSpec extends SparkSpec {
       val dst = new java.io.File(inDir, f"b$i%02d.parquet")
       assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_midapp", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_midapp",
+      s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -1369,9 +1383,8 @@ class PipelineStreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     def incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val step = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_midapp", s"$tmp/out",
-      buckets = 8, shingleN = 3, threshold = 0.5)
+    val step = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_midapp",
+      s"$tmp/out")
     var crashed = false
     val q1 = incoming.writeStream
       .option("checkpointLocation", s"$tmp/ck")
@@ -1382,7 +1395,7 @@ class PipelineStreamingSpec extends SparkSpec {
             b, spark.table("graft_spec_midapp")
               .where(col("epoch") < lit(id)),
             "doc_id", "text", 3, 0.5, Long.MaxValue)
-          graft.streaming.MmIngest.writeEpoch(surv, s"$tmp/out", id)
+          EpochIngest.writeEpoch(surv, s"$tmp/out", id)
           // the injected mid-commit state: the attempt marker is down
           // (the real append writes it first), then ONE of the two
           // survivors' postings land, stamped epoch=1, NO commit marker
@@ -1416,12 +1429,10 @@ class PipelineStreamingSpec extends SparkSpec {
       .start()
     q2.awaitTermination()
     // never-crashed twin over the identical batch splits
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_midapp_twin", s"$tmp/idx_twin")
-    val twinStep = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_midapp_twin", s"$tmp/out_twin",
-      buckets = 8, shingleN = 3, threshold = 0.5)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_midapp_twin",
+      s"$tmp/idx_twin")
+    val twinStep = EpochIngest.step(IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_midapp_twin", s"$tmp/out_twin")
     batches.zipWithIndex.foreach { case (b, i) =>
       twinStep(b.toDF("doc_id", "text"), i.toLong) }
     // the replayed epoch's posting set is COMPLETE and duplicate-free —
@@ -1445,11 +1456,10 @@ class PipelineStreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-repair").toString
-    // --- embed index: the repair path is shared (guardedEpochAppend),
+    // --- embed index: the repair path is shared (Dedup.appendEpochIndex),
     // exercised here per-family through the direct API
-    graft.operators.Dedup.initEmbedIndexEpoch(
-      spark.range(0).select(col("id"), lit(null).cast("array<float>").as("vec")),
-      "graft_spec_repair_emb", s"$tmp/emb", buckets = 4)
+    IndexKind.embedLsh().init(spark, "graft_spec_repair_emb", s"$tmp/emb",
+      buckets = 4)
     def vec(seed: Int) = Array.tabulate(64)(i => (i + seed).toFloat)
     val batch = Seq((1L, vec(1)), (2L, vec(2)), (3L, vec(3))).toDF("id", "vec")
     // simulate the crashed mid-commit append: attempt marker down (the
@@ -1464,23 +1474,20 @@ class PipelineStreamingSpec extends SparkSpec {
       .saveAsTable("graft_spec_repair_emb")
     assert(!graft.operators.Dedup.epochAppended(spark, "graft_spec_repair_emb", 0L))
     // the guarded append must repair: delete the partial file, append all
-    graft.operators.Dedup.appendEmbedIndexEpoch(batch,
-      "graft_spec_repair_emb", 4, 8, 64, 0L)
+    IndexKind.embedLsh().append(batch, "graft_spec_repair_emb", 4, 0L)
     val rows = spark.table("graft_spec_repair_emb")
       .select("id", "epoch").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rows.sorted == Seq((1L, 0L), (2L, 0L), (3L, 0L)),
       s"repair left a wrong posting multiset: ${rows.sorted}")
     assert(graft.operators.Dedup.epochAppended(spark, "graft_spec_repair_emb", 0L))
     // a second replay is now a clean skip
-    graft.operators.Dedup.appendEmbedIndexEpoch(batch,
-      "graft_spec_repair_emb", 4, 8, 64, 0L)
+    IndexKind.embedLsh().append(batch, "graft_spec_repair_emb", 4, 0L)
     assert(spark.table("graft_spec_repair_emb").count() == 3L)
     // --- mixed-epoch files: a file holding TWO epochs (possible only if
     // the index was rewritten outside the ingest loop) must REFUSE the
     // delete-repair instead of destroying another epoch's postings
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_repair_mix", s"$tmp/mix", buckets = 2)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_repair_mix",
+      s"$tmp/mix", buckets = 2)
     val mk = (p: String) => (1 to 30).map(i => s"$p$i").mkString(" ")
     val two = graft.operators.Dedup.buildPostingIndex(
         Seq(1L -> mk("aa")).toDF("doc_id", "text"), "doc_id", "text", 3)
@@ -1505,11 +1512,10 @@ class PipelineStreamingSpec extends SparkSpec {
     // are filesystem stats — the per-batch guard must never run a Spark
     // job over the index (the row-existence guard did, per batch)
     val tmp = Files.createTempDirectory("graft-guard-jobs").toString
-    graft.operators.Dedup.initHammingIndexEpoch(
-      Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_guardjobs", s"$tmp/idx", buckets = 4)
-    graft.operators.Dedup.appendHammingIndexEpoch(
-      Seq((1L, 42L)).toDF("id", "sh"), "graft_spec_guardjobs", 4, 3, 0L)
+    IndexKind.hamming().init(spark, "graft_spec_guardjobs", s"$tmp/idx",
+      buckets = 4)
+    IndexKind.hamming().append(Seq((1L, 42L)).toDF("id", "sh"),
+      "graft_spec_guardjobs", 4, 0L)
     val probeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val otherJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -1528,8 +1534,8 @@ class PipelineStreamingSpec extends SparkSpec {
       // job submitted from this thread inside the group carries its id,
       // so the count is immune to however many jobs the sentinel needs.
       spark.sparkContext.setJobGroup("graft-guard-probe", "guard hot path")
-      graft.operators.Dedup.appendHammingIndexEpoch(
-        Seq((1L, 42L)).toDF("id", "sh"), "graft_spec_guardjobs", 4, 3, 0L)
+      IndexKind.hamming().append(Seq((1L, 42L)).toDF("id", "sh"),
+        "graft_spec_guardjobs", 4, 0L)
       assert(graft.operators.Dedup.epochAppended(spark, "graft_spec_guardjobs", 0L))
       assert(!graft.operators.EpochMarkers.epochAttempted(
         spark, "graft_spec_guardjobs", 0L))
@@ -1565,19 +1571,17 @@ class PipelineStreamingSpec extends SparkSpec {
     }.map(_.toDF("doc_id", "text"))
     val tmp = Files.createTempDirectory("graft-endurance").toString
     // maintenance-free twin (flat layout, no compaction, no folding)
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_end_plain", s"$tmp/plain", buckets = 4)
-    val plain = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_end_plain", s"$tmp/plain_out", 4, 3, 0.5)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_end_plain",
+      s"$tmp/plain", buckets = 4)
+    val plain = EpochIngest.step(IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_end_plain", s"$tmp/plain_out", 4)
     batches.zipWithIndex.foreach { case (b, i) => plain(b, i.toLong) }
     // the maintained run
-    graft.operators.Dedup.initPostingIndexEpochGen(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_end", s"$tmp/gen", buckets = 4)
-    val step = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_end", s"$tmp/out", 4, 3, 0.5,
-      indexPath = s"$tmp/gen", compactEvery = 4, foldOutputEvery = 5)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_end",
+      s"$tmp/gen", buckets = 4, gen = true)
+    val step = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_end",
+      s"$tmp/out", 4, indexPath = s"$tmp/gen", compactEvery = 4,
+      foldOutputEvery = 5)
     batches.zipWithIndex.foreach { case (b, i) => step(b, i.toLong) }
     def ids(p: String) = IngestOutput.read(spark, p)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1614,14 +1618,11 @@ class PipelineStreamingSpec extends SparkSpec {
     // checkpoint slip past as "ahead" while the stale markers silently
     // skip its appends (review finding)
     val tmp = Files.createTempDirectory("graft-marker-max").toString
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_mmax", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_mmax",
+      s"$tmp/idx")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    graft.operators.Dedup.appendPostingIndexEpoch(empty, "doc_id", "text",
-      "graft_spec_mmax", 8, 3, 0L)
-    graft.operators.Dedup.appendPostingIndexEpoch(empty, "doc_id", "text",
-      "graft_spec_mmax", 8, 3, 1L)
+    IndexKind.textPostings("doc_id", "text").append(empty, "graft_spec_mmax", 8, 0L)
+    IndexKind.textPostings("doc_id", "text").append(empty, "graft_spec_mmax", 8, 1L)
     assert(spark.table("graft_spec_mmax").count() == 0L, "fixture landed rows")
     assert(graft.operators.EpochMarkers.maxMarkedEpoch(spark, "graft_spec_mmax") == 1L)
     val e = intercept[IllegalArgumentException] {
@@ -1638,9 +1639,8 @@ class PipelineStreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-backfill").toString
     val mk = (p: String) => (1 to 30).map(i => s"$p$i").mkString(" ")
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_bf", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_bf",
+      s"$tmp/idx")
     // a legacy (row-existence era) index: epochs present as ROWS only
     for (e <- 0 to 1) {
       graft.operators.Dedup.buildPostingIndex(
@@ -1664,9 +1664,8 @@ class PipelineStreamingSpec extends SparkSpec {
     assert(graft.operators.Dedup.epochAppended(spark, "graft_spec_bf", 1L))
     // a replayed append over the backfilled epoch is a clean skip
     val before = spark.table("graft_spec_bf").count()
-    graft.operators.Dedup.appendPostingIndexEpoch(
-      Seq(11L -> mk("e1")).toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_bf", 8, 3, 1L)
+    IndexKind.textPostings("doc_id", "text").append(
+      Seq(11L -> mk("e1")).toDF("doc_id", "text"), "graft_spec_bf", 8, 1L)
     assert(spark.table("graft_spec_bf").count() == before,
       "backfilled epoch was re-appended")
     assert(graft.operators.EpochMarkers.maxMarkedEpoch(spark, "graft_spec_bf") == 1L)
@@ -1682,9 +1681,8 @@ class PipelineStreamingSpec extends SparkSpec {
     // postings — validateFirstBatch's one-time probe must repair first
     val tmp = Files.createTempDirectory("graft-legacy-replay").toString
     val mk = (p: String) => (1 to 30).map(i => s"$p$i").mkString(" ")
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_legacy", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_legacy",
+      s"$tmp/idx")
     graft.operators.EpochMarkers.reset(spark, s"$tmp/idx") // init markers away
     val b0 = Seq(1L -> mk("aa")).toDF("doc_id", "text")
     val b1 = Seq(2L -> mk("bb")).toDF("doc_id", "text")
@@ -1701,8 +1699,8 @@ class PipelineStreamingSpec extends SparkSpec {
     val before = postings()
     // the resumed writer replays batch 1 through the REAL step (fresh
     // closure — validateFirstBatch runs)
-    val step = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-      "graft_spec_legacy", s"$tmp/out", 8, 3, 0.5)
+    val step = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_legacy",
+      s"$tmp/out")
     step(b1, 1L)
     assert(postings() == before,
       "legacy replay changed the posting multiset (doubling or loss)")
@@ -1718,14 +1716,12 @@ class PipelineStreamingSpec extends SparkSpec {
   test("compactSwap prunes epoch markers below the max: marker count stays bounded over a stream's life") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-prune").toString
-    graft.operators.Dedup.initHammingIndexEpochGen(
-      Seq.empty[(Long, Long)].toDF("id", "sh"),
-      "graft_spec_prune", s"$tmp/idx", buckets = 4)
+    IndexKind.hamming().init(spark, "graft_spec_prune", s"$tmp/idx", buckets = 4,
+      gen = true)
     val rnd = new java.util.Random(11)
     (0 until 3).foreach { e =>
-      graft.operators.Dedup.appendHammingIndexEpoch(
-        Seq((e * 10L, rnd.nextLong())).toDF("id", "sh"),
-        "graft_spec_prune", 4, 3, e.toLong)
+      IndexKind.hamming().append(Seq((e * 10L, rnd.nextLong())).toDF("id", "sh"),
+        "graft_spec_prune", 4, e.toLong)
     }
     graft.operators.GenIndex.compactSwap(spark, "graft_spec_prune",
       s"$tmp/idx", "bk", 4)
@@ -1754,9 +1750,8 @@ class PipelineStreamingSpec extends SparkSpec {
     val src = new java.io.File(s"$tmp/b0").listFiles()
       .find(_.getName.startsWith("part-")).get
     assert(src.renameTo(new java.io.File(inDir, "b00.parquet")))
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_runaff", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_runaff",
+      s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -1764,9 +1759,8 @@ class PipelineStreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     def incoming = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    def startQ() = graft.streaming.DedupIngest.start(incoming,
-      "doc_id", "text", "graft_spec_runaff", s"$tmp/out",
-      checkpoint = s"$tmp/ck", availableNow = true)
+    def startQ() = EpochIngest.start(incoming, IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_runaff", s"$tmp/out", s"$tmp/ck", availableNow = true)
     startQ().awaitTermination()
     spark.catalog.refreshTable("graft_spec_runaff")
     assert(spark.table("graft_spec_runaff")
@@ -1790,11 +1784,10 @@ class PipelineStreamingSpec extends SparkSpec {
     // restart with a FRESH writer closure. batchId 0 == max epoch 0, but
     // the stable query id persisted in the checkpoint matches the run
     // marker, so the replay passes and converges.
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_runaff2", s"$tmp/idx2")
-    val step1 = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_runaff2", s"$tmp/out2", 8, 3, 0.5)
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_runaff2",
+      s"$tmp/idx2")
+    val step1 = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_runaff2",
+      s"$tmp/out2")
     var crashed = false
     val q = incoming.writeStream
       .option("checkpointLocation", s"$tmp/ck2")
@@ -1808,8 +1801,8 @@ class PipelineStreamingSpec extends SparkSpec {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.awaitTermination()
     }
-    val step2 = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_runaff2", s"$tmp/out2", 8, 3, 0.5)
+    val step2 = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), "graft_spec_runaff2",
+      s"$tmp/out2")
     val q2 = incoming.writeStream
       .option("checkpointLocation", s"$tmp/ck2")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1834,11 +1827,9 @@ class PipelineStreamingSpec extends SparkSpec {
       .map(_.toDF("doc_id", "text"))
     val tmp = Files.createTempDirectory("graft-outfold").toString
     def runLoop(table: String, idx: String, out: String, fold: Int): Unit = {
-      graft.operators.Dedup.initPostingIndexEpoch(
-        Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-        table, idx)
-      val step = graft.streaming.DedupIngest.ingestEpoch("doc_id", "text",
-        table, out, 8, 3, 0.5, foldOutputEvery = fold)
+      IndexKind.textPostings("doc_id", "text").init(spark, table, idx)
+      val step = EpochIngest.step(IndexKind.textPostings("doc_id", "text"), table, out,
+        foldOutputEvery = fold)
       batches.zipWithIndex.foreach { case (b, i) => step(b, i.toLong) }
     }
     runLoop("graft_spec_of_plain", s"$tmp/idx_p", s"$tmp/out_plain", 0)
@@ -1933,19 +1924,18 @@ class PipelineStreamingSpec extends SparkSpec {
       val dst = new java.io.File(inDir, f"b$i%02d.parquet")
       assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
     }
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_of_live", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_of_live",
+      s"$tmp/idx")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val q = graft.streaming.DedupIngest.start(
+    val q = EpochIngest.start(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir.toString),
-      "doc_id", "text", "graft_spec_of_live", s"$tmp/out",
-      checkpoint = s"$tmp/ck", availableNow = true, foldOutputEvery = 1)
+      IndexKind.textPostings("doc_id", "text"), "graft_spec_of_live", s"$tmp/out",
+      s"$tmp/ck", availableNow = true, foldOutputEvery = 1)
     q.awaitTermination()
     val got = IngestOutput.read(spark, s"$tmp/out")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -2069,12 +2059,10 @@ class PipelineStreamingSpec extends SparkSpec {
     val got = graft.streaming.IngestOutput.read(spark, s"$tmp/out")
       .select("id").collect().map(_.getLong(0)).toSet
     // code-assembled twin over the identical batches from a fresh index
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
+    IndexKind.textPostings("doc_id", "text").init(spark,
       "graft_spec_cfg_dedup_twin", s"$tmp/idx_twin")
-    val twinStep = graft.streaming.DedupIngest.ingestEpoch(
-      "doc_id", "text", "graft_spec_cfg_dedup_twin", s"$tmp/out_twin",
-      8, 3, 0.5)
+    val twinStep = EpochIngest.step(IndexKind.textPostings("doc_id", "text"),
+      "graft_spec_cfg_dedup_twin", s"$tmp/out_twin")
     batches.zipWithIndex.foreach { case (b, i) =>
       twinStep(b.toDF("doc_id", "text"), i.toLong) }
     val twin = spark.read.parquet(s"$tmp/out_twin")
@@ -2088,43 +2076,6 @@ class PipelineStreamingSpec extends SparkSpec {
       .map(_._2).contains(1L))
     spark.sql("DROP TABLE IF EXISTS graft_spec_cfg_dedup")
     spark.sql("DROP TABLE IF EXISTS graft_spec_cfg_dedup_twin")
-  }
-
-  test("dedup-ingest sink restart: catalog loss re-registers the posting index — never re-inits over the accepted corpus") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val mk = (p: String) => (1 to 40).map(i => s"$p$i").mkString(" ")
-    for (layout <- Seq("flat", "gen")) {
-      val tmp = Files.createTempDirectory(s"graft-cfg-dedup-restart-$layout").toString
-      val t = s"graft_spec_cfg_dre_$layout"
-      val ce = if (layout == "gen") 1 else 0
-      val cfg = GraftConfig.parse(s"""
-        sink-stage { type = dedup-ingest, index-table = $t,
-                     index-path = "$tmp/idx", out-path = "$tmp/out",
-                     layout = $layout, compact-every = $ce }""")
-        .getSection("sink-stage").get
-      def payload(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-        .select(col("text").as("body"),
-          map(lit("id"), col("doc_id").cast("string")).as("headers"))
-      val writer = graft.streaming.DedupIngestSink.writer(cfg)
-      writer(payload(Seq(1L -> mk("tok"), 2L -> mk("alt"))), 0L)
-      val before = spark.read.parquet(s"$tmp/out")
-        .select("id").collect().map(_.getLong(0)).toSet
-      assert(before == Set(1L, 2L), s"[$layout] epoch 0 accepted $before")
-      // "restart": the session catalog does not survive the JVM; the
-      // sink's writer runs afresh and must recover the index from disk
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      val writer2 = graft.streaming.DedupIngestSink.writer(cfg)
-      // epoch 1 re-sends doc 1's text verbatim (new id) plus a fresh doc
-      writer2(payload(Seq(10L -> mk("tok"), 11L -> mk("new"))), 1L)
-      val after = spark.read.parquet(s"$tmp/out")
-        .where(col("epoch") === 1).select("id")
-        .collect().map(_.getLong(0)).toSet
-      assert(!after.contains(10L),
-        s"[$layout] restart forgot the index: duplicate text re-accepted ($after)")
-      assert(after == Set(11L), s"[$layout] epoch 1 accepted $after")
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    }
   }
 
   test("streaming funnel: out-of-order buffering, cross-batch chaining, watermark flush") {
@@ -2264,19 +2215,18 @@ class PipelineStreamingSpec extends SparkSpec {
   test("marker pruning without compaction: 20 guarded appends keep the marker directory bounded") {
     import spark.implicits._
     // STREAMING context (thread-local query id, as inside foreachBatch):
-    // only then may guardedEpochAppend prune — a streaming writer can
+    // only then may appendEpochIndex prune — a streaming writer can
     // never legally revisit an epoch below the max (requireEpochAhead)
     val tmp = Files.createTempDirectory("graft-markerprune20").toString
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_prune20", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_prune20",
+      s"$tmp/idx")
     try {
       spark.sparkContext.setLocalProperty("sql.streaming.queryId", "spec-prune-q")
       (0 until 20).foreach { e =>
-        graft.operators.Dedup.appendPostingIndexEpoch(
+        IndexKind.textPostings("doc_id", "text").append(
           Seq((e.toLong, s"alpha beta gamma delta epsilon zeta eta doc$e"))
             .toDF("doc_id", "text"),
-          "doc_id", "text", "graft_spec_prune20", 8, 3, e.toLong)
+          "graft_spec_prune20", 8, e.toLong)
       }
     } finally spark.sparkContext.setLocalProperty("sql.streaming.queryId", null)
     val markers = new java.io.File(s"$tmp/idx/_graft_epochs").listFiles()
@@ -2301,14 +2251,13 @@ class PipelineStreamingSpec extends SparkSpec {
     // from epoch 0 relies on every epoch's marker for replay-skip; pruning
     // under it would re-append pruned epochs as duplicates
     val tmp = Files.createTempDirectory("graft-markernoprune").toString
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_noprune", s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_noprune",
+      s"$tmp/idx")
     def appendAll(): Unit = (0 until 20).foreach { e =>
-      graft.operators.Dedup.appendPostingIndexEpoch(
+      IndexKind.textPostings("doc_id", "text").append(
         Seq((e.toLong, s"alpha beta gamma delta epsilon zeta eta doc$e"))
           .toDF("doc_id", "text"),
-        "doc_id", "text", "graft_spec_noprune", 8, 3, e.toLong)
+        "graft_spec_noprune", 8, e.toLong)
     }
     appendAll()
     val markers = new java.io.File(s"$tmp/idx/_graft_epochs").listFiles()
@@ -2326,12 +2275,11 @@ class PipelineStreamingSpec extends SparkSpec {
   test("marker-less legacy adoption is loud and one-shot (round-15 verdict #2)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-legacyadopt").toString
-    graft.operators.Dedup.initPostingIndexEpoch(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
-      "graft_spec_legacy", s"$tmp/idx")
-    graft.operators.Dedup.appendPostingIndexEpoch(
+    IndexKind.textPostings("doc_id", "text").init(spark, "graft_spec_legacy",
+      s"$tmp/idx")
+    IndexKind.textPostings("doc_id", "text").append(
       Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
-      "doc_id", "text", "graft_spec_legacy", 8, 3, 0L)
+      "graft_spec_legacy", 8, 0L)
     // strip every marker: the pre-marker-era index state
     graft.operators.EpochMarkers.reset(spark, s"$tmp/idx")
     val before = graft.operators.GenIndex.legacyAdoptions.get()
