@@ -21,6 +21,8 @@ object Verify {
     // driver never sets it, so the gate always runs the full set
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    // an empty subset would dump nothing and gate nothing
+    require(!only.exists(_.isEmpty), "SPARK_GRAFT_ONLY is set but names no query")
     // a query that throws must still leave a dump: the driver's compare
     // keys off the dumped dirs, so a missing dir silently VANISHES from
     // CORRECTNESS_r{N}.json instead of recording a failure (round 6: nine
@@ -39,6 +41,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // a SPARK_GRAFT_ONLY run records the requested names, so the compare
+    // (tools/compare_oracle.py) holds only those to a dump; a full run
+    // removes a record a subset run left in a reused out dir
+    val subsetFile = Paths.get(s"$outDir/verify_subset.json")
+    only match {
+      case Some(names) =>
+        Files.writeString(subsetFile, names.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      case None => Files.deleteIfExists(subsetFile)
+    }
     // oracle_sql.json is written FIRST, before any dump: round 8's
     // CORRECTNESS record came back empty ({}) — consistent with the
     // harness killing a contention-slowed Verify mid-dump, after which

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 /** Distinct 64-bit hashes of the word n-gram shingles of a *normalized*
   * text (single-space separated — the output of `TextFunctions.normText`).
@@ -14,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * separated, shingle i is exactly the byte range [start(i), end(i+n-1)) of
   * the input, so each shingle is hashed in place (xxhash64, seed 42 — the
   * same function as Spark's `xxhash64()`) with no per-shingle string
-  * allocation. Result order is ascending (sort-based dedup).
+  * allocation. Result order is ascending (sort-based dedup). The kernels
+  * take the normalized bytes (see [[NormTextKernel]]).
   *
   * Exists as a native expression because the equivalent higher-order-
   * function composition re-evaluates the tokenization per shingle (HOF
@@ -24,8 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object ShingleHashUtil {
   val Seed = 42L
 
-  def shingleHashes(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.getBytes
+  def shingleHashes(bytes: Array[Byte], n: Int): ArrayData = {
     val len = bytes.length
     // token start offsets (single-space separated input)
     var m = 1
@@ -67,8 +65,7 @@ object ShingleHashUtil {
 
   /** Shared kernel: the positional n-gram hash array (empty when the text
     * has fewer than n tokens — a partial window is not a span). */
-  private def positionalArray(s: UTF8String, n: Int): Array[Long] = {
-    val bytes = s.getBytes
+  private def positionalArray(bytes: Array[Byte], n: Int): Array[Long] = {
     val len = bytes.length
     var m = 1
     var i = 0
@@ -101,8 +98,8 @@ object ShingleHashUtil {
     * `Dedup.duplicateSpans`, where the position is the payload (the first
     * HOF-composed version re-ran the tokenizer per window — measured 22 s
     * for the sf0.1 span query vs ~1 s native). */
-  def positionalShingleHashes(s: UTF8String, n: Int): ArrayData =
-    ArrayData.toArrayData(positionalArray(s, n))
+  def positionalShingleHashes(bytes: Array[Byte], n: Int): ArrayData =
+    ArrayData.toArrayData(positionalArray(bytes, n))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken 2003 — the MOSS
     * algorithm): in every window of `w` consecutive positional n-gram
@@ -121,8 +118,8 @@ object ShingleHashUtil {
     * with w a small constant; a native expression for the same reason as
     * [[positionalShingleHashes]] (per-position HOF slices re-evaluate the
     * tokenization per element). */
-  def winnowFingerprints(s: UTF8String, n: Int, w: Int): ArrayData = {
-    val hs = positionalArray(s, n)
+  def winnowFingerprints(bytes: Array[Byte], n: Int, w: Int): ArrayData = {
+    val hs = positionalArray(bytes, n)
     val k = hs.length
     if (k == 0) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     else {
@@ -148,15 +145,12 @@ object ShingleHashUtil {
 /** `positionalShingleHashes` as a codegen'd expression (see [[ShingleHashes]]
   * for why a native expression and not a HOF composition). */
 case class PositionalShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, child -> StringType)
+    extends NormTextKernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    ShingleHashUtil.positionalShingleHashes(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHashUtil.positionalShingleHashes($c, $n)")
+  override protected def kernel(norm: Array[Byte]): Any =
+    ShingleHashUtil.positionalShingleHashes(norm, n)
+  override protected def kernelCode(bytes: String): String =
+    s"graft.functions.ShingleHashUtil.positionalShingleHashes($bytes, $n)"
   override protected def withNewChildInternal(c: Expression): PositionalShingleHashes =
     copy(child = c)
   override def prettyName: String = "positional_shingle_hashes"
@@ -167,38 +161,32 @@ case class PositionalShingleHashes(child: Expression, n: Int)
   * *normalized* text's positional n-gram hashes under a w-window
   * rightmost-min winnow. */
 case class WinnowFingerprints(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
+    extends NormTextKernel {
   // constructor guards cover every path (DataFrame API, SQL builder, direct
   // construction) at analysis time — w = 0 would otherwise index past the
   // hash array mid-job, n <= 0 a negative byte range
   require(n >= 1, s"winnow_fingerprints: n (gram width) must be >= 1, got $n")
   require(w >= 1, s"winnow_fingerprints: w (window) must be >= 1, got $w")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, child -> StringType)
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
       StructField("hash", LongType, nullable = false))),
     containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    ShingleHashUtil.winnowFingerprints(v.asInstanceOf[UTF8String], n, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHashUtil.winnowFingerprints($c, $n, $w)")
+  override protected def kernel(norm: Array[Byte]): Any =
+    ShingleHashUtil.winnowFingerprints(norm, n, w)
+  override protected def kernelCode(bytes: String): String =
+    s"graft.functions.ShingleHashUtil.winnowFingerprints($bytes, $n, $w)"
   override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
     copy(child = c)
   override def prettyName: String = "winnow_fingerprints"
 }
 
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    GraftTypeCheck.expect(prettyName, child -> StringType)
+case class ShingleHashes(child: Expression, n: Int) extends NormTextKernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    ShingleHashUtil.shingleHashes(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleHashUtil.shingleHashes($c, $n)")
+  override protected def kernel(norm: Array[Byte]): Any =
+    ShingleHashUtil.shingleHashes(norm, n)
+  override protected def kernelCode(bytes: String): String =
+    s"graft.functions.ShingleHashUtil.shingleHashes($bytes, $n)"
   override protected def withNewChildInternal(c: Expression): ShingleHashes =
     copy(child = c)
   override def prettyName: String = "shingle_hashes"

@@ -9,19 +9,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Text-analysis building blocks for the training-data pipeline operators
   * (SURVEY.md §7 phase 5): tokenization, normalization, shingling, MinHash
-  * signatures, SimHash, language-ID and quality scoring — all expressed as
-  * Catalyst `Column` compositions (codegen'd, UDF-free) except SimHash,
-  * which is a small native `Expression` (a 64-bit bit-vote fold that would
-  * need 64 aggregate columns otherwise).
+  * signatures, SimHash, language-ID and quality scoring. The per-row
+  * kernels are native codegen'd expressions (UDF-free): normalization and
+  * everything that reads its output ([[NormText]], [[TextTokens]],
+  * [[ShingleHashes]]), the sketches ([[MinHashSig]], [[SimHash64]]) and
+  * the single-pass scoring profile ([[TextProfile]]); the rest are
+  * Catalyst `Column` compositions over them.
   */
 object TextFunctions {
 
-  /** Lowercase, strip non [a-z0-9 ] chars, collapse whitespace, trim. */
-  def normText(c: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9\\s]", " "), "\\s+", " "))
+  /** Lowercase, strip non [a-z0-9 ] chars, collapse whitespace, trim — one
+    * native byte pass (see [[TextNorm]]). */
+  def normText(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(NormText(expression(c)))
+  }
 
-  /** Whitespace tokens of the normalized text. */
-  def tokens(c: Column): Column = split(normText(c), " ")
+  /** Whitespace tokens of the normalized text, split straight from the
+    * normalized bytes. */
+  def tokens(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(TextTokens(NormText(expression(c))))
+  }
 
   /** BPE-ish subword count: alnum runs + individual punctuation marks each
     * count as one token (an approximation of byte-pair tokenizer output used
@@ -42,12 +51,13 @@ object TextFunctions {
   }
 
   /** Distinct 64-bit shingle hashes — the set representation used by
-    * MinHash and Jaccard near-dup. Native single-pass expression over the
-    * normalized text (see [[ShingleHashes]] for why not a HOF composition).
+    * MinHash and Jaccard near-dup. Native single-pass expression hashing
+    * the normalized bytes of the text (see [[ShingleHashes]] for why not a
+    * HOF composition).
     */
   def shingleHashes(c: Column, n: Int = 3): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(ShingleHashes(expression(normText(c)), n))
+    column(ShingleHashes(NormText(expression(c)), n))
   }
 
   // MinHash: k independent permutations h_i(x) = (a_i * x + b_i) mod p over
@@ -350,16 +360,14 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 /** Single-pass text-scoring profile (see `TextFunctions.textProfile`):
-  * normalizes ONCE with exactly the `lower → strip non-[a-z0-9\s] →
-  * collapse \s+ → trim → split(" ", -1)` pipeline the Column composition
-  * used (same `UTF8String.toLowerCase`, same Java regexes — value parity by
-  * construction), then derives every downstream quantity from that one
-  * token array: char count, token count, summed token length, punctuation
-  * count over the RAW text, and the distinct-token stopword hits per
-  * language (matching `array_intersect`'s dedup semantics). */
+  * normalizes ONCE with the shared kernel ([[TextNorm]], JVM case mapping —
+  * `UTF8String.toLowerCase`, the lower-casing this profile has always
+  * used) and splits with `split(" ", -1)`, then derives every downstream
+  * quantity from that one token array: char count, token count, summed
+  * token length, punctuation count over the RAW text, and the
+  * distinct-token stopword hits per language (matching
+  * `array_intersect`'s dedup semantics). */
 object TextProfileUtil {
-  private val NonAlnum = java.util.regex.Pattern.compile("[^a-z0-9\\s]")
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
   val LangsSorted: Seq[String] = TextFunctions.Stopwords.keys.toSeq.sorted
   private val stopSets: Array[java.util.HashSet[String]] =
     LangsSorted.map { l =>
@@ -380,9 +388,8 @@ object TextProfileUtil {
         punct += 1
       i += 1
     }
-    val lower = u.toLowerCase.toString
-    val norm = Ws.matcher(NonAlnum.matcher(lower).replaceAll(" "))
-      .replaceAll(" ").trim
+    val norm = new String(TextNorm.normalize(u, useICU = false),
+      java.nio.charset.StandardCharsets.US_ASCII)
     val toks = norm.split(" ", -1)
     var sumLen = 0L
     var j = 0

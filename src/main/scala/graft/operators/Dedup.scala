@@ -2111,11 +2111,29 @@ object Dedup {
     * of the O(corpus) re-shuffle [[incrementalSurvivors]] pays. */
   def buildPostingIndex(existing: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3): DataFrame =
-    existing.select(col(idCol).as("id"),
+    shinglePostings(existing, idCol, textCol, shingleN)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
+
+  /** `(id, n, h)`: one row per (doc, distinct shingle) with the doc's set
+    * size, the shingle kernel evaluated ONCE per row. A plain `explode` of
+    * the projected array would let `InferFiltersFromGenerate` add a
+    * `size(shingle_hashes(..)) > 0` filter below it, which re-runs the
+    * whole normalize-and-hash per row; `explode_outer` gets no inferred
+    * filter, and dropping its null row is the same result, since the
+    * array has no null elements and is never empty for non-null text.
+    * `KnownNotNull` gives `h` back the non-null type `explode` had, so the
+    * index files keep their parquet schema. */
+  private def shinglePostings(df: DataFrame, idCol: String, textCol: String,
+                              shingleN: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    df.select(col(idCol).as("id"),
         TF.shingleHashes(col(textCol), shingleN).as("hs"))
       .select(col("id"), size(col("hs")).cast("long").as("n"),
-              explode(col("hs")).as("h"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
+              explode_outer(col("hs")).as("h"))
+      .where(col("h").isNotNull)
+      .select(col("id"), col("n"), column(KnownNotNull(expression(col("h")))).as("h"))
+  }
 
   /** [[incrementalSurvivors]] against a PERSISTED posting index instead of
     * the raw corpus — same semantics (keep incoming docs that near-dup
@@ -2140,10 +2158,7 @@ object Dedup {
       idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       maxDocFreq: Long = 1000L): (DataFrame, Seq[DataFrame]) = {
-    val incBase = incoming.select(col(idCol).as("id"),
-        TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .select(col("id"), size(col("hs")).cast("long").as("n"),
-              explode(col("hs")).as("h"))
+    val incBase = shinglePostings(incoming, idCol, textCol, shingleN)
     // batch-side df; combined df for a shingle = dfi + corpus df (exactly
     // the union-window df of the non-indexed variant). With pruning off the
     // window (a shuffle over the batch) is skipped entirely.

@@ -389,6 +389,32 @@ class PlanSpec extends SparkSpec {
       s"scan did not use the bucket layout:\n$p")
   }
 
+  test("shingle postings: the executed plan evaluates shingle_hashes exactly once, regex-free") {
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(sf("documents"))
+    // an inferred `size(shingle_hashes(..)) > 0` filter below the explode
+    // would be a second evaluation of the whole normalize-and-hash kernel
+    def kernelCalls(p: String) = "shingle_hashes\\(".r.findAllIn(p).size
+    val postings = graft.operators.Dedup.buildPostingIndex(docs, "doc_id", "text")
+    // the index files keep the parquet schema of a plain explode
+    assert(!postings.schema("h").nullable, postings.schema.treeString)
+    val index = dedupPlan(postings)
+    assert(kernelCalls(index) == 1, s"buildPostingIndex:\n$index")
+    assert(index.contains("norm_text") && !index.contains("regexp_replace"),
+      s"normalization is not the native kernel:\n$index")
+    val (probe, _) = graft.operators.Dedup.incrementalSurvivorsIndexedLazy(
+      docs.where(col("doc_id") >= 250),
+      graft.operators.Dedup.buildPostingIndex(docs.where(col("doc_id") < 250),
+        "doc_id", "text"),
+      "doc_id", "text", maxDocFreq = Long.MaxValue)
+    val probePlan = dedupPlan(probe)
+    // the persisted batch postings print once per consumer, so pin the
+    // absence of a kernel-evaluating filter instead of a count
+    assert(kernelCalls(probePlan) > 0 && !probePlan.linesIterator.exists(l =>
+      l.contains("Filter") && l.contains("shingle_hashes")),
+      s"incrementalSurvivorsIndexedLazy:\n$probePlan")
+  }
+
   test("indexed incremental dedup: the corpus posting index is never re-shuffled") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.Exchange

@@ -70,7 +70,6 @@ class PropertyKernelSpec extends SparkSpec {
   }
 
   test("winnow kernel: coverage, monotone positions, and density for arbitrary token streams") {
-    import org.apache.spark.unsafe.types.UTF8String
     // random word-soup documents over a small vocabulary (forces repeated
     // grams and hash ties — the interesting winnowing cases)
     val docGen = for {
@@ -79,7 +78,7 @@ class PropertyKernelSpec extends SparkSpec {
     } yield toks.mkString(" ")
     val cases = samples(docGen, 300, seed = 7L)
     cases.foreach { text =>
-      val u = UTF8String.fromString(text)
+      val u = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val sel = ShingleHashUtil.winnowFingerprints(u, 3, 4)
       val hs = ShingleHashUtil.positionalShingleHashes(u, 3).toLongArray()
       val k = hs.length
@@ -119,7 +118,7 @@ class PropertyKernelSpec extends SparkSpec {
     val textGen = Gen.chooseNum(0, 30).flatMap(n =>
       Gen.listOfN(n, word).map(_.mkString(" ")))
     samples(textGen, 300, seed = 11L).foreach { norm =>
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(norm)
+      val u = norm.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val pos = ShingleHashUtil.positionalShingleHashes(u, 3)
       val set = ShingleHashUtil.shingleHashes(u, 3)
       val tokens = norm.split(" ", -1).length

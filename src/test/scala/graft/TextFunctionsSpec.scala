@@ -85,6 +85,91 @@ class TextFunctionsSpec extends SparkSpec {
     }
   }
 
+  /** The regex normalization chain the native kernel replaced, as Spark SQL. */
+  private val regexNormSql =
+    "trim(regexp_replace(regexp_replace(lower(t), '[^a-z0-9\\\\s]', ' '), '\\\\s+', ' '))"
+
+  /** `body` under each ICU case-mapping setting, codegen'd and interpreted. */
+  private def underEveryMode(body: String => Unit): Unit =
+    for (icu <- Seq("true", "false"); factory <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", (factory == "CODEGEN_ONLY").toString)
+      try body(s"icu=$icu $factory")
+      finally Seq("spark.sql.icu.caseMappings.enabled", "spark.sql.codegen.factoryMode",
+        "spark.sql.codegen.wholeStage").foreach(spark.conf.unset)
+    }
+
+  /** Texts as raw UTF-8 bytes (cast to STRING unchecked, so invalid
+    * sequences reach the kernels as they are). */
+  private def textFrame(texts: Seq[Array[Byte]]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    texts.map(Option(_)).toDF("b").select(col("b").cast("string").as("t"))
+  }
+
+  private def utf8(s: String): Array[Byte] =
+    if (s == null) null else s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  test("normText: native kernel equals the lower/regexp_replace/trim chain, both ICU settings") {
+    val texts = Seq(
+      "Hello, World! It's 2024...", "a\tb\t\tc", "a\u000Bb", "a\u001Cb\u001Fc",
+      "x\r\n\r\ny\n", "  leading", "trailing \t ", "--x--y--", "\t\n x \r",
+      "007 Agent 4d5 0x1F", "", "   ", "\t\u000B\f\r\n", null,
+      "İstanbul İI", "Kelvin 5K", "Straße STRASSE",
+      "ΟΔΟΣ ΣΟΦΟΣ σς",
+      "emoji 😀 here👍x", "a😀b", "😀",
+      "ÁB café CAFÉ", "ÀÉÎÕÜ MiXeD",
+      " nbsp  em　ideo", "fullＡＢwidth",
+      "ıIi dotless", "ﬁligature ǅ")
+    val invalid = Seq(Array(0x41, 0xC3, 0x42), Array(0xE2, 0x82, 0x41, 0x62),
+      Array(0xFF, 0x61, 0xFE), Array(0xF0, 0x9F, 0x98), Array(0x80, 0x5A, 0xBF),
+      Array(0xC0, 0xAF, 0x31), Array(0xED, 0xA0, 0x80, 0x78))
+      .map(_.map(_.toByte))
+    val df = textFrame(texts.map(utf8) ++ invalid)
+    underEveryMode { mode =>
+      val rows = df.select(col("t"), TF.normText(col("t")).as("n"),
+        expr(regexNormSql).as("r")).collect()
+      assert(rows.length == texts.length + invalid.length)
+      rows.foreach { r =>
+        assert(r.getString(1) == r.getString(2),
+          s"[$mode] input ${Option(r.getString(0)).map(_.map(_.toInt.toHexString))}")
+      }
+    }
+  }
+
+  test("normText kernels: shingles, tokens, positional and winnow outputs unchanged over a generated corpus") {
+    import graft.functions.{NormText, PositionalShingleHashes, ShingleHashes, WinnowFingerprints}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    // word soup over ASCII words, every separator class, case pairs and
+    // non-ASCII letters that lower-case to ASCII ones
+    val rnd = new scala.util.Random(20261018L)
+    val pieces = Seq("the", "Dog", "RUN", "a1", "42", "x", "İs", "K9",
+      "straße", "Σσ", "😀", "café", " ", "  ", "\t",
+      "\n", "\r\n", "\u000B", "\u001C", ",", "'s", "--", " ", ".")
+    val corpus = Seq.fill(600)(Seq.fill(rnd.nextInt(40))(
+      pieces(rnd.nextInt(pieces.size))).mkString) ++ Seq("", " ", null)
+    val df = textFrame(corpus.map(utf8)).union(
+      docs.select(col("text").as("t")).limit(200))
+    val raw = expression(col("t"))
+    val old = expression(expr(regexNormSql))
+    def pair(f: Expression => Expression, name: String) =
+      Seq(column(f(NormText(raw))).as(s"${name}_new"), column(f(old)).as(s"${name}_old"))
+    underEveryMode { mode =>
+      val out = df.select(Seq(TF.tokens(col("t")).as("tok_new"),
+          split(expr(regexNormSql), " ").as("tok_old")) ++
+        pair(ShingleHashes(_, 3), "sh3") ++ pair(ShingleHashes(_, 1), "sh1") ++
+        pair(PositionalShingleHashes(_, 4), "pos") ++
+        pair(WinnowFingerprints(_, 4, 5), "win"): _*).collect()
+      assert(out.length == corpus.length + 200)
+      Seq("tok", "sh3", "sh1", "pos", "win").foreach { k =>
+        out.foreach { r =>
+          assert(r.getAs[Any](s"${k}_new") == r.getAs[Any](s"${k}_old"), s"[$mode] $k")
+        }
+      }
+    }
+  }
+
   test("shingleHashes: identical texts get identical sets; distinct order sorted") {
     val df = spark.range(2).select(lit("a b c d e").as("t"))
     val hs = df.select(TF.shingleHashes(col("t"), 3)).collect()

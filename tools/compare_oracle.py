@@ -5,6 +5,14 @@ with the Spark results dumped by `graft.Verify`.
 
 Usage: python3 tools/compare_oracle.py <verify_out_dir> <sf_dir> [jobs]
 
+Subset runs: a `SPARK_GRAFT_ONLY=a,b` run of `graft.Verify` writes the
+requested names to <verify_out_dir>/verify_subset.json. The compare then
+checks only those names, and a requested name without a dump fails
+(`DECLARED-BUT-NOT-DUMPED`, or `REQUESTED-BUT-NOT-DUMPED` for a name no
+oracle declares), so the exit status gates the subset; a record that names
+no query fails. A full run writes no such record, and every declared query
+without a dump fails.
+
 Round-10 hardening (VERDICT r9 "Next round" #1-2):
   * each oracle runs in a process-pool worker (default jobs = min(8, cpus))
   * per-oracle wall time is measured, printed, and BUDGETED: any oracle
@@ -130,6 +138,16 @@ def main(out_dir: str, sf_dir: str, jobs: int) -> int:
     # discover all dumped queries (dirs with parquet inside)
     dumped = {os.path.basename(d) for d in glob.glob(f"{out_dir}/*")
               if os.path.isdir(d)}
+    subset_path = f"{out_dir}/verify_subset.json"
+    requested = (set(json.load(open(subset_path)))
+                 if os.path.exists(subset_path) else None)
+    if requested is not None:
+        if not requested:
+            print(f"FAIL: {subset_path} requests no query; nothing is checked")
+            return 1
+        print(f"subset run: {len(requested)} requested "
+              f"({', '.join(sorted(requested))})")
+        dumped &= requested
     tasks = [(name, out_dir, sf_dir, oracle.get(name))
              for name in sorted(dumped)]
     results, times = {}, {}
@@ -161,9 +179,10 @@ def main(out_dir: str, sf_dir: str, jobs: int) -> int:
             n_rows_only += 1
         else:
             n_fail += 1
-    missing = set(oracle) - dumped
-    for m in sorted(missing):
-        print(f"  FAIL {m}: DECLARED-BUT-NOT-DUMPED")
+    expected = set(oracle) if requested is None else requested
+    for m in sorted(expected - dumped):
+        why = "DECLARED" if m in oracle else "REQUESTED"
+        print(f"  FAIL {m}: {why}-BUT-NOT-DUMPED")
         n_fail += 1
     slow = sorted(times.items(), key=lambda kv: -kv[1])[:10]
     print("\nslowest oracles: " +
