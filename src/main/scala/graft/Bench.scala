@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
@@ -122,28 +121,18 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = DriverSession("graft-bench", cpus, extra = Map(
       // session-age hygiene: the status stores retain 1000 jobs/stages/
       // executions by default; a 60-query × 2-pass run (plus AQE's
       // per-stage jobs) crosses those thresholds mid-run, and InMemoryStore
       // eviction is O(retained) on every event after that — late queries
       // pay it. Keep the stores small; a bench (or production driver loop)
       // doesn't serve a UI.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.worker.ui.retainedExecutors", "20")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.ui.retainedJobs" -> "100",
+      "spark.ui.retainedStages" -> "100",
+      "spark.ui.retainedTasks" -> "1000",
+      "spark.sql.ui.retainedExecutions" -> "20",
+      "spark.worker.ui.retainedExecutors" -> "20"))
 
     var ticks = 0
     // Mid-run contention localization (round-7 item 3): the before/after

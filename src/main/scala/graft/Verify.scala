@@ -7,15 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession("graft-verify", cpus, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump (local iteration); the
     // driver never sets it, so the gate always runs the full set
@@ -57,7 +49,8 @@ object Verify {
     // a partially-killed run degrade to a PARTIAL correctness record
     // (dumped queries compare; missing ones show as declared-but-not-
     // dumped) instead of an empty one.
-    val json = SparkEntry.oracleSql
+    // keys sorted by name, so two dumps compare byte for byte
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

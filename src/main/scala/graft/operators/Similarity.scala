@@ -992,11 +992,16 @@ object Similarity {
       TF.shingleHashes(lit(queryText), shingleN).as("qhs"))
     val scored = sets.join(broadcast(q))
       .withColumn("inter", size(array_intersect(col("hs"), col("qhs"))))
-      .where(col("inter") > 0)
       .withColumn("jaccard", col("inter").cast("double") /
         (col("n") + size(col("qhs")) - col("inter")))
       .select(col("id"), col("jaccard"))
+    // zero-overlap rows drop AFTER the top-k cut: a filter below the
+    // projection is pushed into the scan side with `hs` inlined, which
+    // runs the shingle kernel a second time per corpus row. A zero row
+    // ranks below every match, so it only reaches the top k when fewer
+    // than k rows match, and then this filter drops it.
     scored.orderBy(col("jaccard").desc, col("id").asc).limit(k)
+      .where(col("jaccard") > 0)
   }
 
   /** Top principal component of an embedding corpus via the Gram-matrix

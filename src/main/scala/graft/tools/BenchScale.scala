@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.DriverSession
+
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -253,17 +255,7 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val sf01 = "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession("graft-bench-scale", cpus)
 
     synthesize(spark, sf01)
     val nSmall = spark.read.parquet(s"$sf01/documents.parquet").count()
@@ -546,17 +538,7 @@ object BenchScale100 {
   def main(args: Array[String]): Unit = {
     val sf01 = "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-scale-100x")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession("graft-bench-scale-100x", cpus)
 
     BenchScale.synthesize(spark, sf01, Factor, ScaleDir)
     BenchScale.synthesizeEvents(spark, sf01, Factor, ScaleDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.DriverSession
 
 /** Bulk physical-plan audit of every declared query: dumps per-query
   * operator-level red-flag counts (CartesianProduct, SortMergeJoin,
@@ -12,16 +12,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1) else "/tmp/plan_audit"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession("graft-plan-audit", "8")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

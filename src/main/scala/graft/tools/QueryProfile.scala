@@ -1,7 +1,9 @@
 package graft.tools
 
+import graft.DriverSession
+import graft.gates.GateRegistry
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -15,17 +17,7 @@ object QueryProfile {
     val name = args.headOption.getOrElse("q1_agg")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-query-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession("graft-query-profile", cpus)
 
     case class Job(id: Int, desc: String, t0: Long, var t1: Long = 0L)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
@@ -47,7 +39,8 @@ object QueryProfile {
     def pass(label: String): Double = {
       jobs.synchronized(jobs.clear())
       val t0 = System.nanoTime()
-      SparkEntryAccess.run(name, spark, dir)
+      GateRegistry(name).build(spark, dir)
+        .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // listener bus is async; let job-end events drain
       val snap = jobs.synchronized(jobs.values.toVector)
@@ -66,10 +59,4 @@ object QueryProfile {
     pass("warm")
     spark.stop()
   }
-}
-
-private object SparkEntryAccess {
-  def run(name: String, spark: SparkSession, dir: String): Unit =
-    graft.SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
 }

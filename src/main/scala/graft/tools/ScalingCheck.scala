@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.DriverSession
 
 /** Core-scaling spot check at a corpus size where parallelism is
   * measurable (round-16 verdict #7: at sf0.1 every query is 2-7 s and
@@ -35,17 +35,7 @@ object ScalingCheck {
     val cpus = args.headOption.getOrElse("32")
     val srcDir = if (args.length > 1 && !args(1).startsWith("--")) args(1)
                  else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling-check")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession("graft-scaling-check", cpus)
     val dir = BenchScale.ScaleDir
     val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val fs = docsPath.getFileSystem(spark.sessionState.newHadoopConf())

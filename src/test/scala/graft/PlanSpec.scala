@@ -415,6 +415,13 @@ class PlanSpec extends SparkSpec {
       s"incrementalSurvivorsIndexedLazy:\n$probePlan")
   }
 
+  test("text_topk: the executed plan evaluates shingle_hashes once per corpus row") {
+    // a zero-overlap filter pushed below the scoring projection inlines the
+    // corpus shingle set and evaluates the kernel again per row
+    val p = plan("text_topk")
+    assert("shingle_hashes\\(".r.findAllIn(p).size == 1, s"text_topk:\n$p")
+  }
+
   test("indexed incremental dedup: the corpus posting index is never re-shuffled") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
