@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.streaming.Streams
+
 /** Helpers shared by the gate families: cached testdata table handles, the
   * event projection, money canonicalization, layout tags, and the staging
   * and draining of the live streaming twins. */
@@ -165,17 +167,15 @@ object GateSupport {
     * memory table. */
   private[gates] def runToCompletion(df: DataFrame, work: Path,
                                      memoryTable: Option[String] = None): DataFrame = {
-    val w = df.writeStream
-      .option("checkpointLocation", work.resolve("ck").toString)
-      .trigger(Trigger.AvailableNow())
     val out = work.resolve("out").toString
-    memoryTable match {
-      case Some(table) =>
-        w.outputMode("complete").format("memory").queryName(table).start().awaitTermination()
-        df.sparkSession.table(table)
-      case None =>
-        w.outputMode("append").format("parquet").option("path", out).start().awaitTermination()
-        df.sparkSession.read.parquet(out)
-    }
+    Streams.start(df) { w =>
+      val ck = w.option("checkpointLocation", work.resolve("ck").toString)
+        .trigger(Trigger.AvailableNow())
+      memoryTable match {
+        case Some(table) => ck.outputMode("complete").format("memory").queryName(table)
+        case None        => ck.outputMode("append").format("parquet").option("path", out)
+      }
+    }.awaitTermination()
+    memoryTable.map(df.sparkSession.table).getOrElse(df.sparkSession.read.parquet(out))
   }
 }

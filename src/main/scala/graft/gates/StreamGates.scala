@@ -1,6 +1,6 @@
 package graft.gates
 
-import graft.streaming.{EpochIngest, IndexKind, IngestOutput}
+import graft.streaming.{EpochIngest, IndexKind, IngestOutput, Streams}
 import graft.OracleXX
 import graft.operators.{Analytics, Multimodal, Similarity, TextAnalysis}
 
@@ -289,7 +289,7 @@ object StreamGates {
         val incoming = stagedStream(s, work,
           (0 to 2).map(i => ev.where(pmod(col("event_id"), lit(3)) === i)))
         val statePath = new java.util.concurrent.atomic.AtomicReference[String](null)
-        val q = incoming.writeStream
+        val q = Streams.start(incoming)(_
           .option("checkpointLocation", work.resolve("ck").toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
@@ -312,8 +312,7 @@ object StreamGates {
             best.write.mode("overwrite").parquet(next)
             statePath.set(next)
             ()
-          }
-          .start()
+          })
         q.awaitTermination()
         s.read.parquet(statePath.get())
           .orderBy("user_id")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.util.CacheSalt.SaltedPersistOps
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{LongParam, TextFunctions => TF, VectorFunctions => VF}
 import graft.util.Materialize
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -837,7 +837,7 @@ object Dedup {
       if (EpochMarkers.epochAttempted(spark, table, epoch))
         repairPartialEpoch(spark, table, epoch)
       EpochMarkers.markAttempt(spark, table, epoch)
-      postings.withColumn("epoch", lit(epoch))
+      postings.withColumn("epoch", LongParam.column(epoch))
         .write.mode("append").format("parquet")
         .bucketBy(buckets, key).sortBy(key)
         .saveAsTable(table)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.config.GraftConfig
+import graft.functions.LongParam
 import graft.operators.{Dedup, GenIndex, Multimodal}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -199,7 +200,7 @@ object EpochIngest {
         validated = true
       }
       val (survLazy, caches) = kind.probe(batch,
-        spark.table(indexTable).where(col("epoch") < lit(batchId)))
+        spark.table(indexTable).where(col("epoch") < LongParam.column(batchId)))
       val surv = writeEpochBarrier(survLazy, caches, outPath, batchId)
       kind.append(kind.toPostingsInput(surv), indexTable, buckets, batchId)
       if (compactEvery > 0 && indexPath != null &&
@@ -219,13 +220,12 @@ object EpochIngest {
             availableNow: Boolean = false, indexPath: String = null,
             compactEvery: Int = 0,
             foldOutputEvery: Int = 0): StreamingQuery = {
-    val writer = incoming.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .foreachBatch(step(kind, indexTable, outPath, buckets, indexPath,
-        compactEvery, foldOutputEvery))
-      .start()
+    Streams.start(incoming) { w =>
+      val writer = w.outputMode("append").option("checkpointLocation", checkpoint)
+      (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+        .foreachBatch(step(kind, indexTable, outPath, buckets, indexPath,
+          compactEvery, foldOutputEvery))
+    }
   }
 
   /** The config-sink writer the three ingest sinks share. Keys:

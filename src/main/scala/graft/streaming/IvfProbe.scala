@@ -43,16 +43,15 @@ object IvfProbe {
             outPath: String, checkpoint: String,
             k: Int = 10, nProbe: Int = 4,
             availableNow: Boolean = false): StreamingQuery = {
-    val writer = queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        probeBatch(batch.sparkSession.table(indexTable), batch,
-            queryId, queryVec, cents, k, nProbe)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+    Streams.start(queries) { w =>
+      val writer = w.outputMode("append").option("checkpointLocation", checkpoint)
+      (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          probeBatch(batch.sparkSession.table(indexTable), batch,
+              queryId, queryVec, cents, k, nProbe)
+            .write.mode("append").parquet(outPath)
+          ()
+        }
+    }
   }
 }

@@ -189,7 +189,7 @@ object Pipeline {
       case None => Trigger.ProcessingTime(0L)
     }
 
-    transformed.toDF().writeStream
+    Streams.start(transformed.toDF())(_
       .queryName(s"graft-$name")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -198,7 +198,6 @@ object Pipeline {
           skipAcceptCheckOnSingle =
             sc.getString("sink-select-strategy", "skip-accept-check-on-single") ==
               "skip-accept-check-on-single")
-      }
-      .start()
+      })
   }
 }
