@@ -35,9 +35,9 @@ import java.nio.file.{Files, Paths}
   * repeats the query sweep N times and records every pass total:
   * pass-over-pass drift is the session-age failure shape.
   *
-  * Session-age hygiene (the round-3 89.2s regression): after each query
-  * the harness frees that query's materialization-cut blocks
-  * (`Materialize.release()` — deterministic, no GC dependence) and
+  * Session-age hygiene (the round-3 89.2s regression): each query runs in
+  * its own `Materialize.scope`, whose exit frees that query's cut and
+  * persisted blocks (deterministic, no GC dependence), and the harness
   * periodically forces a GC so the ContextCleaner's weak-ref queue drains
   * shuffle/broadcast state from completed queries instead of letting ~116
   * executions' worth pile up and throttle late-session scheduling. Both
@@ -147,21 +147,20 @@ object Bench {
     val lastTick = scala.collection.mutable.HashMap.empty[(String, Int), Int]
     def probePoint(): Unit = probeSeries += ((ticks, calibrationProbe(), loadAvg()))
     def runOnce(name: String, pass_ : Int): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val t = (System.nanoTime() - t0) / 1e9
-      // post-query hygiene, outside the timer (see scaladoc); leaked
-      // salted cache entries only exist after a FAILED query
-      val released = graft.util.Materialize.release()
-      graft.util.CacheSalt.releaseLeaked()
+      // the query's scope frees its blocks after the timer stops
+      val (t, ok) = graft.util.Materialize.scope {
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            SparkEntry.queries(name)(spark, sfDir)
+              .write.format("noop").mode("overwrite").save()
+            true
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
+        ((System.nanoTime() - t0) / 1e9, ok)
+      }
       ticks += 1
       lastTick((name, pass_)) = ticks
       if (ticks % 16 == 0) { System.gc(); probePoint() } // drain weak refs + contention sample
@@ -169,7 +168,7 @@ object Bench {
         val (nRdd, mem, disk) = graft.util.Materialize.storageSummary(spark)
         val rt = Runtime.getRuntime
         System.err.println(
-          f"[bench-debug] $name%-28s t=$t%7.2fs released=$released " +
+          f"[bench-debug] $name%-28s t=$t%7.2fs " +
           f"cachedRdds=$nRdd mem=${mem / 1e6}%.1fMB disk=${disk / 1e6}%.1fMB " +
           f"heap=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0fMB")
       }
@@ -382,9 +381,6 @@ object Bench {
                        passes, degradedNames.size)
       catch { case e: Throwable =>
         System.err.println(s"[bench] README update skipped: ${e.getMessage}") }
-    // owner-agnostic end sweep (no query in flight): frees entries leaked
-    // by a failed query even if this thread isn't their owner
-    graft.util.CacheSalt.releaseAll()
     println(compact) // LAST stdout line — the one the driver parses
     spark.stop()
   }

@@ -64,8 +64,8 @@ object Verify {
     // Spark schedules concurrent jobs fine from one session, the gate
     // queries share no mutable session state (view/table/checkpoint names
     // are per-query, no session-conf mutation on any query path), and
-    // Materialize.release() is THREAD-scoped — each worker frees only its
-    // own cuts (the ownership tag exists for exactly this shape). Cuts the
+    // each query runs in its own Materialize.scope on its worker's
+    // thread-local scope stack, so a worker frees only its own blocks. Cuts the
     // 183-query dump ~2-3x, which matters because the driver's gate has a
     // wall-time budget that a contended box can blow (round-8's empty
     // correctness record).
@@ -77,9 +77,11 @@ object Verify {
       scala.jdk.CollectionConverters.SeqHasAsJava(work).asJava)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // the query's scope frees its cut and persisted blocks before the
+      // worker's next query, on success and failure alike
+      try graft.util.Materialize.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
         errors.synchronized { errors(name) = msg; flushErrors() }
@@ -89,13 +91,6 @@ object Verify {
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case _: Throwable => () }
       }
-      // free THIS thread's materialization-cut blocks before its next
-      // query — the long-session shape that otherwise accumulates dead
-      // checkpoint blocks (round-3 bench pollution)
-      graft.util.Materialize.release()
-      // failure-leaked salted cache entries (normal paths already freed
-      // theirs) — thread-scoped, so concurrent queries are untouched
-      graft.util.CacheSalt.releaseLeaked()
       System.err.println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
     val threads = (1 to par).map { _ =>
@@ -109,12 +104,6 @@ object Verify {
       th.setDaemon(true); th.start(); th
     }
     threads.foreach(_.join())
-    // owner-agnostic end sweep: a pool thread that died after a failure
-    // never ran its own releaseLeaked; with no query in flight the
-    // per-thread ownership discipline is vacuous, so free everything
-    val endSwept = graft.util.CacheSalt.releaseAll()
-    if (endSwept > 0)
-      System.err.println(s"[verify] end sweep freed $endSwept leaked cache entries")
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     spark.stop()

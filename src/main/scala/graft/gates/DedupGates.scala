@@ -63,11 +63,7 @@ object DedupGates {
       oracleSql = s"""
       WITH ${OracleXX.minhashBandCtes(numHashes = 128, bands = 64)},
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh3),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
-               any_value(a.n) AS na, any_value(b.n) AS nb
-        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+      ${OracleCtes.postingPairs}
       SELECT id_a, id_b, inter::DOUBLE / (na + nb - inter) AS jaccard
       FROM pairs CROSS JOIN guard WHERE inter::DOUBLE / (na + nb - inter) >= 0.5
       ORDER BY id_a, id_b"""),
@@ -381,16 +377,10 @@ object DedupGates {
       toks AS (SELECT doc_id, $sqlToks AS tk FROM corpus),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
-               any_value(a.n) AS na, any_value(b.n) AS nb
-        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      ${OracleCtes.postingPairs},
       ok AS (
         SELECT CASE WHEN na < nb THEN id_a ELSE id_b END AS contained_id,
                CASE WHEN na < nb THEN id_b ELSE id_a END AS container_id,
@@ -556,12 +546,7 @@ object DedupGates {
       oracleSql = s"""
       WITH RECURSIVE ${ngramJaccardCtes(0.5)},
       jp AS MATERIALIZED (SELECT id_a, id_b FROM ok),
-      e AS (SELECT id_a AS src, id_b AS dst FROM jp
-            UNION SELECT id_b, id_a FROM jp),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS r FROM documents
-        UNION
-        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id),
+      ${OracleCtes.reachFromPairs},
       cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
       qc AS (
         SELECT doc_id, len($sqlToks)::BIGINT AS n_tokens,
@@ -618,9 +603,7 @@ object DedupGates {
         SELECT id_a, id_b FROM ag WHERE agree::DOUBLE / 128 >= 0.4),
       xsh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       xpost AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM xsh),
       xpairs AS (
@@ -671,9 +654,7 @@ object DedupGates {
         SELECT id_a, id_b FROM ag WHERE agree::DOUBLE / 128 >= 0.4),
       xsh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       xpost AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM xsh),
       xpairs AS (
@@ -726,12 +707,7 @@ object DedupGates {
       oracleSql = s"""
       WITH RECURSIVE ${ngramJaccardCtes(0.5)},
       jp AS MATERIALIZED (SELECT id_a, id_b FROM ok),
-      e AS (SELECT id_a AS src, id_b AS dst FROM jp
-            UNION SELECT id_b, id_a FROM jp),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS r FROM documents
-        UNION
-        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id),
+      ${OracleCtes.reachFromPairs},
       cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
       qc AS (
         SELECT doc_id, len($sqlToks)::BIGINT AS n_tokens,
@@ -859,9 +835,7 @@ object DedupGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS (SELECT doc_id, unnest(hs) AS h FROM sh),
       nd AS (SELECT count(*)::BIGINT AS n FROM documents),
@@ -916,16 +890,10 @@ object DedupGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
-               any_value(a.n) AS na, any_value(b.n) AS nb
-        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      ${OracleCtes.postingPairs},
       dups AS (
         SELECT DISTINCT id_b FROM pairs
         WHERE inter::DOUBLE / (na + nb - inter) >= 0.5)
@@ -990,25 +958,14 @@ object DedupGates {
       WITH RECURSIVE toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
-               any_value(a.n) AS na, any_value(b.n) AS nb
-        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      ${OracleCtes.postingPairs},
       jp AS MATERIALIZED (
         SELECT id_a, id_b FROM pairs
         WHERE inter::DOUBLE / (na + nb - inter) >= 0.5),
-      e AS (SELECT id_a AS src, id_b AS dst FROM jp
-            UNION SELECT id_b, id_a FROM jp),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS r FROM documents
-        UNION
-        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id)
+      ${OracleCtes.reachFromPairs}
       SELECT id AS doc_id, min(r) AS cluster_id FROM reach
       GROUP BY id ORDER BY doc_id"""),
     /** The fuzzy-dedup pipeline production corpora actually run, end to end
@@ -1035,12 +992,7 @@ object DedupGates {
       jp AS MATERIALIZED (
         SELECT id_a, id_b FROM ag
         WHERE agree::DOUBLE / $fuzzyHashes >= $fuzzyThreshold),
-      e AS (SELECT id_a AS src, id_b AS dst FROM jp
-            UNION SELECT id_b, id_a FROM jp),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS r FROM documents
-        UNION
-        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id),
+      ${OracleCtes.reachFromPairs},
       cl AS MATERIALIZED (
         SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
       m AS (SELECT cluster_id, count(*)::BIGINT AS n_members FROM cl GROUP BY 1)
@@ -1317,9 +1269,7 @@ object DedupGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS MATERIALIZED (
         SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
@@ -1338,9 +1288,7 @@ object DedupGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
       pairs AS (

@@ -1,5 +1,6 @@
 package graft.gates
 
+import graft.util.Materialize
 import graft.OracleXX
 import graft.operators.{Analytics, TextAnalysis}
 
@@ -244,12 +245,12 @@ object EventsGates {
         // several subtrees (median, deviation join), and the uncut residual
         // pipeline (scan + two aggregates + join) re-ran per subtree — the
         // 23-exchange plan the round-16 audit flagged
-        val resid = graft.util.Materialize.cut(
+        val resid = Materialize.cut(
           hourly.join(expected, Seq("event_type", "hod"))
             .select(col("event_type"), col("hour"), col("y"), col("mu"),
               (col("y") - col("mu")).as("resid")))
         val flagged = Analytics.madOutliers(resid, "event_type", "resid", nMads = 3.0)
-        graft.util.Materialize.releaseNow(resid) // madOutliers is eager — resid is dead
+        Materialize.release(resid) // madOutliers is eager — resid is dead
         flagged
           .select("event_type", "hour", "y", "mu", "resid", "dev", "mad")
           .orderBy("event_type", "hour")

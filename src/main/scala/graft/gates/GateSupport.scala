@@ -19,7 +19,7 @@ object GateSupport {
     * the per-query floor). The cached DataFrame is an immutable logical
     * plan: thread-safe under Verify's pool, and reusing it never shares
     * executed state between queries (no persist — see
-    * [[graft.util.CacheSalt]] for why that matters). Keyed weakly by
+    * [[graft.util.Materialize.persist]] for why that matters). Keyed weakly by
     * session; the VALUE holds the DataFrame only SOFTLY — a Dataset
     * strongly references its session, so a strong (or even weak-map-value)
     * DataFrame would pin its own key and the weak keying would be a lie

@@ -65,12 +65,7 @@ object GraphGates {
       oracleSql = s"""
       WITH RECURSIVE ${ngramJaccardCtes(0.5)},
       jp AS MATERIALIZED (SELECT id_a, id_b FROM ok),
-      e AS (SELECT id_a AS src, id_b AS dst FROM jp
-            UNION SELECT id_b, id_a FROM jp),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS r FROM documents
-        UNION
-        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id),
+      ${OracleCtes.reachFromPairs},
       cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       szs AS (SELECT cluster_id, count(*)::BIGINT AS sz FROM cl GROUP BY 1)
       SELECT sz AS cluster_size, count(*)::BIGINT AS n_clusters

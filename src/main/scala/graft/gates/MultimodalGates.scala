@@ -376,7 +376,7 @@ object MultimodalGates {
       *
       * Deliberately re-runs the pipeline rather than sharing state with the
       * card gate: cross-query result sharing is exactly the CacheManager
-      * coupling this repo abolished (util.CacheSalt — a shared entry freed
+      * coupling this repo abolished (`Materialize.persist` salting — a shared entry freed
       * by whichever query finishes first corrupted results at 1-in-7 sweep
       * odds), and within ONE gate the extra cost is a 4-row data-card
       * checkpoint over the already-persisted slim fingerprint projection

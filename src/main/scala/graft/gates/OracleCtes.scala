@@ -7,6 +7,43 @@ import graft.operators.Similarity
 /** DuckDB SQL fragments and oracles shared by more than one gate family. */
 object OracleCtes {
 
+  /** The distinct 3-token shingle set `hs` of a token list `tk` as one
+    * SELECT item, laid out for a CTE body at the gates' indentation. */
+  private[gates] val tokenShingles: String =
+    """CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
+                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
+                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs"""
+
+  /** CTE `pairs(id_a, id_b, inter, na, nb)`: the posting self-join of
+    * `posting(doc_id, n, h)` — shared-shingle count per doc pair. */
+  private[gates] val postingPairs: String =
+    """pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
+               any_value(a.n) AS na, any_value(b.n) AS nb
+        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)"""
+
+  /** CTEs `e` (the symmetric edges of pair table `jp`) and `reach(id, r)`:
+    * every document with every root that reaches it, recursively — the
+    * connected-components oracle takes `min(r)` per `id`. */
+  private[gates] val reachFromPairs: String =
+    """e AS (SELECT id_a AS src, id_b AS dst FROM jp
+            UNION SELECT id_b, id_a FROM jp),
+      reach AS (
+        SELECT doc_id AS id, doc_id AS r FROM documents
+        UNION
+        SELECT e.dst AS id, reach.r AS r FROM reach JOIN e ON e.src = reach.id)"""
+
+  /** The stopword-score argmax over the five languages (`s_de` … `s_zh`,
+    * ties to the later language, all-zero = `und`) as SELECT item `alias`;
+    * `indent` is the column of its continuation lines. */
+  private[gates] def langArgmax(alias: String, indent: Int = 20): String = {
+    val when = Seq("zh", "fr", "es", "en").map(l =>
+      s"WHEN s_$l = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN '$l'")
+    (("CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'" +: when) :+
+      s"ELSE 'de' END AS $alias").mkString("\n" + " " * indent)
+  }
+
   /** DuckDB replica of the bottom-k quantile sketch gate — see the
     * `text_length_sketch` gate for the determinism argument. */
   private[gates] def lengthSketchOracle(k: Int): String = {
@@ -124,16 +161,10 @@ object OracleCtes {
       toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               $tokenShingles
         FROM toks),
       posting AS (SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS inter,
-               any_value(a.n) AS na, any_value(b.n) AS nb
-        FROM posting a JOIN posting b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
+      $postingPairs,
       ok AS (
         SELECT id_a, id_b, inter::DOUBLE / (na + nb - inter) AS jaccard
         FROM pairs WHERE inter::DOUBLE / (na + nb - inter) >= $threshold)"""
@@ -271,12 +302,7 @@ object OracleCtes {
                (least(n_tokens, 200) * 2 +
                 CASE WHEN punct_pm <= 80 THEN 300 ELSE 100 END +
                 least(stop_hits * 30, 300)) AS quality,
-               CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS lang_pred
+               ${langArgmax("lang_pred")}
         FROM c),
       kept AS (
         SELECT doc_id, lang, source FROM scored
@@ -399,9 +425,7 @@ object OracleCtes {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               $tokenShingles
         FROM toks),
       posting AS MATERIALIZED (
         SELECT doc_id, len(hs) AS n, unnest(hs) AS h FROM sh),

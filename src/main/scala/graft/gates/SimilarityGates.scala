@@ -1,6 +1,6 @@
 package graft.gates
 
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 import graft.operators.Similarity
 
 import org.apache.spark.sql.DataFrame
@@ -263,13 +263,14 @@ object SimilarityGates {
       * computed once and persisted; each method contributes one slim
       * (qid, id) equi-join + counts. */
     GateQuery("sim_recall_matrix", family,
-      build = (s, dir) => {
+      build = (s, dir) => Materialize.scope {
         val methods = Seq(
           "hamming" -> "sim_hamming_topk",
           "ivf" -> "sim_ivf_verified", "lsh" -> "sim_lsh_topk",
           "matryoshka" -> "sim_matryoshka_topk", "pq" -> "sim_pq_topk",
           "rp" -> "sim_rp_topk")
-        val brute = GateRegistry("sim_topk").build(s, dir).select("qid", "id").saltedPersist()
+        val brute = Materialize.persist(
+          GateRegistry("sim_topk").build(s, dir).select("qid", "id"))
         val truthN = brute.agg(count(lit(1)).as("n_truth"))
         val rows = methods.map { case (label, qname) =>
           val got = GateRegistry(qname).build(s, dir).select("qid", "id")
@@ -284,10 +285,7 @@ object SimilarityGates {
                            col("n_truth").cast("double"))
                 .as("recall"))
         }
-        val out = rows.reduce(_ unionByName _).orderBy("method")
-        val res = graft.util.Materialize.cut(out)
-        brute.unpersist()
-        res
+        Materialize.result(rows.reduce(_ unionByName _).orderBy("method"))
       },
       oracleSql = {
         val reps = Seq(

@@ -57,12 +57,7 @@ object TextGates {
         FROM documents),
       p AS (
         SELECT lang,
-               CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS lang_pred
+               ${OracleCtes.langArgmax("lang_pred")}
         FROM s),
       c AS (SELECT lang, lang_pred, count(*)::BIGINT AS n FROM p GROUP BY 1, 2)
       SELECT lang, lang_pred, n,
@@ -132,12 +127,7 @@ object TextGates {
                ${langScoreSql("zh")} AS s_zh
         FROM documents)
       SELECT doc_id, s_de, s_en, s_es, s_fr, s_zh,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                  WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                  WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                  WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                  WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                  ELSE 'de' END AS lang_pred
+             ${OracleCtes.langArgmax("lang_pred", indent = 18)}
       FROM s ORDER BY doc_id"""),
     /** Span-level language ID: every 25-token window scored and argmaxed —
       * see [[TextAnalysis.windowLangid]]. */
@@ -159,12 +149,7 @@ object TextGates {
                ${langScoreSql("zh", "list_slice(tk, win_start + 1, win_start + 50)")} AS s_zh
              FROM st)
       SELECT doc_id, win_start, s_de, s_en, s_es, s_fr, s_zh,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS lang_win
+             ${OracleCtes.langArgmax("lang_win")}
       FROM sc ORDER BY doc_id, win_start"""),
     /** Per-document code-switching fractions over the window IDs — see
       * [[TextAnalysis.codeSwitchReport]]. */
@@ -180,12 +165,7 @@ object TextGates {
                ${langScoreSql("es")} AS s_es, ${langScoreSql("fr")} AS s_fr,
                ${langScoreSql("zh")} AS s_zh
              FROM documents),
-      dl AS (SELECT doc_id, CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS doc_lang_pred FROM ds0),
+      dl AS (SELECT doc_id, ${OracleCtes.langArgmax("doc_lang_pred")} FROM ds0),
       st AS (SELECT doc_id, tk,
                unnest(range(0, (len(tk) - 1) // 25 + 1)) * 25 AS win_start
              FROM t),
@@ -196,12 +176,7 @@ object TextGates {
                ${langScoreSql("fr", "list_slice(tk, win_start + 1, win_start + 50)")} AS s_fr,
                ${langScoreSql("zh", "list_slice(tk, win_start + 1, win_start + 50)")} AS s_zh
              FROM st),
-      wl AS (SELECT doc_id, CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS lang_win FROM sc)
+      wl AS (SELECT doc_id, ${OracleCtes.langArgmax("lang_win")} FROM sc)
       SELECT w.doc_id, d.doc_lang_pred, count(*)::BIGINT AS n_windows,
              sum(CASE WHEN w.lang_win <> d.doc_lang_pred
                        AND w.lang_win <> 'und' THEN 1 ELSE 0 END)::BIGINT
@@ -835,9 +810,7 @@ object TextGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       bench AS (SELECT DISTINCT unnest(hs) AS h FROM sh WHERE doc_id < 20),
       corp AS (SELECT doc_id, unnest(hs) AS h FROM sh WHERE doc_id >= 20),
@@ -864,9 +837,7 @@ object TextGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       bench AS (SELECT DISTINCT unnest(hs) AS h FROM sh WHERE doc_id < 20),
       corp AS (SELECT doc_id, unnest(hs) AS h FROM sh WHERE doc_id >= 20),
@@ -1078,9 +1049,7 @@ object TextGates {
       oracleSql = s"""
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
              FROM toks),
       posting AS (SELECT doc_id, unnest(hs) AS h FROM sh),
       dfreq AS (SELECT h, count(*)::BIGINT AS dfh FROM posting GROUP BY 1)
@@ -1132,12 +1101,7 @@ object TextGates {
                ${langScoreSql("zh", "string_split(seg, \' \')")} AS s_zh
              FROM segx),
       pr AS (SELECT doc_id,
-               CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                    WHEN s_zh = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'zh'
-                    WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-                    WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-                    WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-                    ELSE 'de' END AS seg_lang
+               ${OracleCtes.langArgmax("seg_lang")}
              FROM sc),
       cnt AS (SELECT doc_id, seg_lang, count(*)::BIGINT AS n
               FROM pr GROUP BY 1, 2),
@@ -1209,9 +1173,7 @@ object TextGates {
       WITH toks AS (SELECT doc_id, $sqlToks AS tk FROM documents),
       sh AS (
         SELECT doc_id,
-               CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                    ELSE list_distinct(list_transform(range(1, len(tk) - 1),
-                         i -> array_to_string(list_slice(tk, i, i + 2), ' '))) END AS hs
+               ${OracleCtes.tokenShingles}
         FROM toks),
       corpus AS (SELECT DISTINCT unnest(hs) AS h FROM sh WHERE doc_id >= 20),
       bench AS (SELECT doc_id AS bench_id, unnest(hs) AS h FROM sh WHERE doc_id < 20),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -110,16 +110,15 @@ object Analytics {
     * outliers only.
     *
     * EAGER/MATERIALIZING (round-16 ADVICE): this operator runs Spark jobs
-    * at CALL time (`Materialize.cut` — under `materialize = none` it still
-    * cuts locally, like `dedupIngest` and unlike the lazy-passthrough
-    * dedup pair operators). The `dev` table feeds two consumers, so a lazy
-    * return would re-run the caller's whole upstream per consumer — the
-    * 23-exchange plan this fixed. Same contract holds for the per-round
-    * cuts inside `markovStationary`, `Similarity.mmrTopK` and
+    * at CALL time (`Materialize.result`; under the plan-inspection mode
+    * `none` it returns the lazy plan over its persisted `dev`). The `dev`
+    * table feeds two consumers, so an unpersisted lazy return would re-run
+    * the caller's whole upstream per consumer — the 23-exchange plan this
+    * fixed. Same contract holds for the per-round cuts inside
+    * `markovStationary`, `Similarity.mmrTopK` and
     * `TextAnalysis.applySpanCorruption`. */
   def madOutliers(df: DataFrame, keyCol: String, valueCol: String,
-                  nMads: Double = 5.0): DataFrame = {
-    import graft.util.CacheSalt.SaltedPersistOps
+                  nMads: Double = 5.0): DataFrame = Materialize.scope {
     val med = df.groupBy(col(keyCol))
       .agg(expr(s"percentile($valueCol, 0.5)").as("__med"))
     // `dev` feeds TWO consumers (the MAD aggregate and the final flag
@@ -129,17 +128,13 @@ object Analytics {
     // two-shuffle pipeline SIX times through this operator's subtrees:
     // 23 exchanges in one plan). The two median passes over `df` stay —
     // MAD needs the group median before deviations exist.
-    val dev = df.join(med, Seq(keyCol))
-      .withColumn("dev", abs(col(valueCol) - col("__med")))
-      .saltedPersist()
+    val dev = Materialize.persist(df.join(med, Seq(keyCol))
+      .withColumn("dev", abs(col(valueCol) - col("__med"))))
     val mad = dev.groupBy(col(keyCol))
       .agg(expr("percentile(dev, 0.5)").as("mad"))
-    val out = graft.util.Materialize.cut(
-      dev.join(mad, Seq(keyCol))
-        .where(col("dev") > lit(nMads) * col("mad"))
-        .drop("__med"))
-    dev.unpersist()
-    out
+    Materialize.result(dev.join(mad, Seq(keyCol))
+      .where(col("dev") > lit(nMads) * col("mad"))
+      .drop("__med"))
   }
 
   /** Per-user activity bitmaps + bit-trick retention — the roaring-bitmap
@@ -487,7 +482,7 @@ object Analytics {
     * BIGINT to ~10^9 users (ANSI fails loudly beyond). */
   def abTestReport(df: DataFrame, userCol: String, typeCol: String,
                    valueCentsCol: String, conversionType: String,
-                   seed: Long = 5L): DataFrame = {
+                   seed: Long = 5L): DataFrame = Materialize.scope {
     val perUser = df.groupBy(col(userCol).as("u"))
       .agg(max(when(col(typeCol) === conversionType, 1L).otherwise(0L))
              .as("conv"),
@@ -495,25 +490,20 @@ object Analytics {
              .otherwise(0L)).as("rev"))
       .withColumn("var", pmod(xxhash64(lit(seed), col("u")), lit(2L)))
     val grouped = perUser.groupBy(col("rev")).agg(count(lit(1)).as("g"))
-    val (offs, persisted) =
-      TextAnalysis.withPrefixOffsets(grouped, "rev", col("g"), "g")
-    try {
-      val ranks = graft.util.Materialize.cut(
-        offs.select(col("rev"),
-          (lit(2L) * col("offset") + col("g") + 1L).as("r2")))
-      val out = perUser.join(ranks, "rev")
-        .groupBy(when(col("var") === 0L, "A").otherwise("B").as("variant"))
-        .agg(count(lit(1)).as("n_users"),
-             sum(col("conv")).as("n_conv"),
-             sum(col("rev")).as("revenue_cents"),
-             sum(col("r2")).as("r2"))
-        .select(col("variant"), col("n_users"), col("n_conv"),
-          expr("n_conv * 1000000 DIV n_users").as("conv_ppm"),
-          col("revenue_cents"),
-          expr("revenue_cents DIV n_users").as("arpu_cents"),
-          (col("r2") - col("n_users") * (col("n_users") + 1L)).as("u2"))
-      graft.util.Materialize.cut(out)
-    } finally { persisted.unpersist(); () }
+    val offs = TextAnalysis.withPrefixOffsets(grouped, "rev", col("g"), "g")
+    val ranks = Materialize.cut(
+      offs.select(col("rev"), (lit(2L) * col("offset") + col("g") + 1L).as("r2")))
+    Materialize.result(perUser.join(ranks, "rev")
+      .groupBy(when(col("var") === 0L, "A").otherwise("B").as("variant"))
+      .agg(count(lit(1)).as("n_users"),
+           sum(col("conv")).as("n_conv"),
+           sum(col("rev")).as("revenue_cents"),
+           sum(col("r2")).as("r2"))
+      .select(col("variant"), col("n_users"), col("n_conv"),
+        expr("n_conv * 1000000 DIV n_users").as("conv_ppm"),
+        col("revenue_cents"),
+        expr("revenue_cents DIV n_users").as("arpu_cents"),
+        (col("r2") - col("n_users") * (col("n_users") + 1L)).as("u2")))
   }
 
   /** Two-sided CUSUM changepoint detection over per-(group, bucket)
@@ -611,23 +601,22 @@ object Analytics {
   def markovStationary(transitions: DataFrame, fromCol: String, toCol: String,
                        cntCol: String, iters: Int = 8,
                        pScale: Long = 1000000L,
-                       piScale: Long = 1000000000000L): DataFrame = {
+                       piScale: Long = 1000000000000L): DataFrame = Materialize.scope {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     // cut the (#states²-row) transition counts ONCE: `tr` feeds three
     // independent subtrees (row totals, the state universe, the
     // probability table) and the caller's `transitions` is typically an
     // expensive aggregation (a session window over the event log) that
     // would otherwise re-run per subtree
-    val tr = graft.util.Materialize.cut(
+    val tr = Materialize.cut(
       transitions.select(col(fromCol).as("f"), col(toCol).as("j"),
         col(cntCol).cast("long").as("c")))
     val tot = tr.groupBy("f").agg(sum(col("c")).as("t"))
     val states = tr.select(col("f").as("st")).distinct()
-    val p = tr
+    val p = Materialize.persist(tr
       .join(states.withColumnRenamed("st", "j"), Seq("j"), "left_semi")
       .join(tot, "f")
-      .select(col("f"), col("j"), expr(s"c * $pScale DIV t").as("p"))
-      .saltedPersist()
+      .select(col("f"), col("j"), expr(s"c * $pScale DIV t").as("p")))
     val n = states.agg(count(lit(1)).as("n"))
     var pi = states.crossJoin(broadcast(n))
       .select(col("st"), expr(s"CAST($piScale AS BIGINT) DIV n").as("pi"))
@@ -636,10 +625,7 @@ object Analytics {
         .select(col("j"), expr(s"pi * p DIV $pScale").as("m"))
         .groupBy(col("j").as("st")).agg(sum(col("m")).as("pi"))
     }
-    val out = graft.util.Materialize.cut(pi.select(col("st"), col("pi")))
-    p.unpersist()
-    graft.util.Materialize.releaseNow(tr)
-    out
+    Materialize.result(pi.select(col("st"), col("pi")))
   }
 
   /** RFM (recency / frequency / monetary) segmentation — the classic
@@ -775,7 +761,7 @@ object Analytics {
     // feeds BOTH sides of the self-join — cut each once
     // ([[graft.util.Materialize]]) or the dominant scan+distinct subtree
     // replans per reference (measured: the uncut plan computes fb twice)
-    val baskets = graft.util.Materialize.cut(df
+    val baskets = Materialize.cut(df
       .select(col(basketCol).as("bk"), col(itemCol).as("it")).distinct())
     val itemN = baskets.groupBy("it").agg(count(lit(1)).as("n_item"))
     val freq = itemN.where(col("n_item") >= minItemSupport)
@@ -783,7 +769,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_baskets"))
     // frequent-item view of each basket, mega-baskets capped OUT of pair
     // generation (width counted over frequent items only)
-    val fb = graft.util.Materialize.cut(baskets.join(freq, Seq("it"))
+    val fb = Materialize.cut(baskets.join(freq, Seq("it"))
       .withColumn("__w", count(lit(1)).over(
         Window.partitionBy(col("bk"))))
       .where(col("__w") <= maxBasketItems)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.util.CacheSalt.SaltedPersistOps
 import graft.functions.{LongParam, TextFunctions => TF, VectorFunctions => VF}
 import graft.util.Materialize
 
@@ -44,38 +43,6 @@ object Dedup {
     df.groupBy(md5(to_binary(TF.normText(col(textCol)), lit("utf-8"))).as("text_hash"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
 
-  /** Eagerly materialize `out` (a distributed job — nothing is collected to
-    * the driver) and release the persisted intermediates that back it.
-    * `localCheckpoint` blocks live outside the CacheManager and are freed by
-    * the ContextCleaner when the result is GC'd, so repeated operator
-    * invocations neither leak cached blocks nor warn "already cached". The
-    * eager cut is also the point where the persist()-barrier intermediates
-    * become safely releasable — unpersisting *lazily*-consumed caches would
-    * re-expose the CollapseProject blowup the barrier exists to prevent.
-    *
-    * Fault-tolerance tradeoff: `localCheckpoint` truncates lineage and keeps
-    * blocks on executors WITHOUT reliable storage — on a multi-executor
-    * cluster, losing one executor after materialization makes the result
-    * unrecoverable (job failure instead of recompute). That is the right
-    * trade for single-node / gate runs (this sandbox) but not for a
-    * 1000-executor job, so the cut strategy is selectable via the session
-    * conf `spark.graft.dedup.materialize`:
-    *
-    *   - `"local"` (default): eager `localCheckpoint` — fastest, lineage
-    *     truncated, not executor-loss-safe;
-    *   - `"reliable"`: eager `checkpoint` to the configured
-    *     `SparkContext.setCheckpointDir` (HDFS/S3) — survives executor loss;
-    *     the cluster-mode setting;
-    *   - `"none"`: return the lazy plan unchanged and KEEP the persisted
-    *     intermediates (unpersisting them lazily would re-expose the
-    *     CollapseProject blowup) — caller owns cache release, e.g. via
-    *     `spark.sharedState.cacheManager.clearCache()`.
-    *
-    * Either eager mode registers the cut with `Materialize` so a long-lived
-    * driver session can free the blocks deterministically between jobs
-    * (`Materialize.release()`) instead of waiting on GC + ContextCleaner —
-    * accumulated dead checkpoint blocks measurably throttle queries ~60
-    * jobs into a session (round-3 bench pollution). */
   /** The ingest LOOPS are incompatible with the plan-inspection
     * materialize mode by design: each step's survivor set must be CUT
     * before its postings extend the index, or a later consumption of the
@@ -83,23 +50,12 @@ object Dedup {
     * accepted row then meets its own postings and silently flips to
     * dropped. Loud failure beats a silently empty result. */
   private[graft] def requireMaterializing(spark: org.apache.spark.sql.SparkSession,
-                                   op: String): Unit = {
-    val mode = spark.conf.get("spark.graft.dedup.materialize", "local")
-    require(mode != "none",
+                                   op: String): Unit =
+    require(Materialize.mode(spark) != Materialize.Lazy,
       s"$op mutates the index between steps and needs its per-step results " +
-      "cut: spark.graft.dedup.materialize=none (plan-inspection mode) would " +
+      s"cut: ${Materialize.ConfKey}=none (plan-inspection mode) would " +
       "re-execute each step's plan against the grown index and return an " +
       "empty survivor set — unset it, or inspect the one-step operators")
-  }
-
-  private def materializeAndRelease(out: DataFrame, cached: DataFrame*): DataFrame =
-    out.sparkSession.conf.get("spark.graft.dedup.materialize", "local") match {
-      case "local"    => val m = Materialize.track(out.localCheckpoint(true)); cached.foreach(_.unpersist()); m
-      case "reliable" => val m = Materialize.track(out.checkpoint(true));      cached.foreach(_.unpersist()); m
-      case "none"     => out
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.dedup.materialize must be local|reliable|none, got '$other'")
-    }
 
   /** Skew-capped blocked self-join over a SLIM `(id, key)` projection.
     * `blocked` must contain exactly the `id` column and the blocking key
@@ -124,15 +80,13 @@ object Dedup {
     *
     * The two regimes are split BEFORE the join so the hot bucket's
     * quadratic match set is never generated inside the join operator.
-    * Returns (candidate id pairs, the persisted window-sized intermediate) —
-    * the caller hands the latter to `materializeAndRelease`. */
+    * The window-sized intermediate is persisted in the caller's scope. */
   private def cappedCandidatePairs(blocked: DataFrame, key: String,
-                                   cap: Long): (DataFrame, DataFrame) = {
+                                   cap: Long): DataFrame = {
     val w = Window.partitionBy(col(key))
-    val sized = blocked.select(col("id"), col(key))
+    val sized = Materialize.persist(blocked.select(col("id"), col(key))
       .withColumn("__bsz", count(lit(1)).over(w))
-      .withColumn("__bmin", min(col("id")).over(w))
-      .saltedPersist()
+      .withColumn("__bmin", min(col("id")).over(w)))
     // each side packed into one struct column so the small/star unions have
     // a clean 2-column schema; `col("a.id")` etc. resolve as struct fields
     val a = sized.select(struct(col("*")).as("a"))
@@ -145,7 +99,7 @@ object Dedup {
     val pairs = smallPairs.unionByName(bigPairs)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    (pairs, sized)
+    pairs
   }
 
   /** MinHash+LSH near-dup candidates: shingle → 64-bit hash set → k-perm
@@ -158,8 +112,7 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 128, bands: Int = 16,
                       threshold: Double = 0.7, shingleN: Int = 3,
-                      maxBucketSize: Long = 4096L,
-                      materialize: Boolean = true): DataFrame = {
+                      maxBucketSize: Long = 4096L): DataFrame = Materialize.scope {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands) — a " +
       "truncated signature tail would silently weaken the LSH S-curve")
@@ -168,16 +121,15 @@ object Dedup {
     // 128-perm signature expression into the band-key lambda (evaluated per
     // band) and again into both join sides — measured 500× slower. One
     // materialization, reused by the explode and both sides of the join.
-    val sigs = df.select(
+    val sigs = Materialize.persist(df.select(
         col(idCol).as("id"),
-        TF.minhashSignature(TF.shingleHashes(col(textCol), shingleN), numHashes).as("sig"))
-      .saltedPersist()
+        TF.minhashSignature(TF.shingleHashes(col(textCol), shingleN), numHashes).as("sig")))
     // blocking runs over (id, band) ONLY — signatures re-join onto the small
     // candidate set below, so the 128-long arrays never transit the sizing
     // window shuffle or its persist (the round-2 dedup_minhash regression)
     val banded = sigs.select(col("id"),
       explode(TF.lshBandKeys(col("sig"), bands, rows)).as("band"))
-    val (cand, sizedCache) = cappedCandidatePairs(banded, "band", maxBucketSize)
+    val cand = cappedCandidatePairs(banded, "band", maxBucketSize)
     val out = cand
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -189,8 +141,7 @@ object Dedup {
       .withColumn("est_jaccard", col("agree").cast("double") / numHashes)
       .where(col("est_jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard")
-    if (materialize) materializeAndRelease(out, sigs, sizedCache)
-    else out // plan-inspection mode: caller owns the cached intermediates
+    Materialize.result(out)
   }
 
   /** IDF-weighted Jaccard near-dup pairs: shingles weighted by the
@@ -224,14 +175,13 @@ object Dedup {
     * reasonable cap. */
   def weightedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                            shingleN: Int = 3, threshold: Double = 0.5,
-                           maxDocFreq: Long = 1000L,
-                           materialize: Boolean = true): DataFrame = {
+                           maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val nd = df.agg(count(lit(1)).as("n_docs"))
-    val sets = df.select(col(idCol).as("id"),
-        TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .saltedPersist() // posting table consumed by df-reduction AND both join sides
+    // posting table consumed by df-reduction AND both join sides
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
+        TF.shingleHashes(col(textCol), shingleN).as("hs")))
     val posting = sets.select(col("id"), explode(col("hs")).as("h"))
     val dfreq = posting.groupBy("h").agg(count(lit(1)).as("dfh"))
     val wpost = posting.join(dfreq, "h")
@@ -249,7 +199,7 @@ object Dedup {
         (col("wa") + col("wb") - col("shared_w")).cast("double"))
       .where(col("wjaccard") >= threshold)
       .select("id_a", "id_b", "shared_w", "wjaccard")
-    if (materialize) materializeAndRelease(out, sets) else out
+    Materialize.result(out)
   }
 
   /** Weighted MinHash near-dup pairs — the SKETCH counterpart of
@@ -276,11 +226,10 @@ object Dedup {
   def weightedMinhashPairs(df: DataFrame, idCol: String, textCol: String,
                            numHashes: Int = 128, bands: Int = 16,
                            threshold: Double = 0.4, shingleN: Int = 3,
-                           capWeight: Int = 8, maxBucketSize: Long = 4096L,
-                           materialize: Boolean = true): DataFrame =
+                           capWeight: Int = 8, maxBucketSize: Long = 4096L): DataFrame =
     weightedMinhashPairsFrom(
       weightedPostings(df, idCol, textCol, shingleN, capWeight),
-      numHashes, bands, threshold, capWeight, maxBucketSize, materialize)
+      numHashes, bands, threshold, capWeight, maxBucketSize)
 
   /** Capped-IDF weighted postings `(id, h, w)` with
     * `w = min(n_docs DIV df(h), capWeight)` — the ONE shingle pass + ONE
@@ -306,8 +255,7 @@ object Dedup {
     * here — the caller owns `wpost`). */
   private def weightedMinhashPairsFrom(wpost: DataFrame, numHashes: Int,
                                        bands: Int, threshold: Double,
-                                       capWeight: Int, maxBucketSize: Long,
-                                       materialize: Boolean): DataFrame = {
+                                       capWeight: Int, maxBucketSize: Long): DataFrame = Materialize.scope {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
     require(capWeight >= 1 && capWeight <= 64,
@@ -321,13 +269,12 @@ object Dedup {
     // persist() load-bearing for the same CollapseProject reason as
     // minhashLshPairs: one signature materialization feeds the band
     // explode and both join sides
-    val sigs = expanded.groupBy("id")
+    val sigs = Materialize.persist(expanded.groupBy("id")
       .agg(collect_list(col("v")).as("vs"))
-      .select(col("id"), TF.minhashSignature(col("vs"), numHashes).as("sig"))
-      .saltedPersist()
+      .select(col("id"), TF.minhashSignature(col("vs"), numHashes).as("sig")))
     val banded = sigs.select(col("id"),
       explode(TF.lshBandKeys(col("sig"), bands, rows)).as("band"))
-    val (cand, sizedCache) = cappedCandidatePairs(banded, "band", maxBucketSize)
+    val cand = cappedCandidatePairs(banded, "band", maxBucketSize)
     val out = cand
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -339,8 +286,7 @@ object Dedup {
       .withColumn("est_wjaccard", col("agree").cast("double") / numHashes)
       .where(col("est_wjaccard") >= threshold)
       .select("id_a", "id_b", "est_wjaccard")
-    if (materialize) materializeAndRelease(out, sigs, sizedCache)
-    else out
+    Materialize.result(out)
   }
 
   /** Weighted MinHash candidates VERIFIED by the exact capped-weight
@@ -359,15 +305,15 @@ object Dedup {
                                    candidateThreshold: Double = 0.3,
                                    threshold: Double = 0.4,
                                    shingleN: Int = 3, capWeight: Int = 8,
-                                   maxBucketSize: Long = 4096L): DataFrame = {
+                                   maxBucketSize: Long = 4096L): DataFrame = Materialize.scope {
     // ONE weighted posting table serves both stages — the sketch's
     // multiset expansion and the exact verification used to each run
     // their own shingle pass + document-frequency aggregate over the
     // corpus (two full scans; guide §1.2 step 1: don't compute twice)
-    val wpost = weightedPostings(df, idCol, textCol, shingleN, capWeight)
-      .saltedPersist() // consumed by the expansion, the totals AND both verify probes
+    // consumed by the expansion, the totals AND both verify probes
+    val wpost = Materialize.persist(weightedPostings(df, idCol, textCol, shingleN, capWeight))
     val cand = weightedMinhashPairsFrom(wpost, numHashes, bands,
-        candidateThreshold, capWeight, maxBucketSize, materialize = true)
+        candidateThreshold, capWeight, maxBucketSize)
       .select("id_a", "id_b")
     val docw = wpost.groupBy("id").agg(sum(col("w")).as("wt"))
     val out = broadcast(cand)
@@ -382,7 +328,7 @@ object Dedup {
         (col("wa") + col("wb") - col("shared_w")).cast("double"))
       .where(col("wjaccard") >= threshold)
       .select("id_a", "id_b", "shared_w", "wjaccard")
-    materializeAndRelease(out, wpost)
+    Materialize.result(out)
   }
 
   /** Per-copy XOR salts for the weighted-minhash multiset expansion:
@@ -410,12 +356,11 @@ object Dedup {
   def minhashBBitPairs(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 128, bands: Int = 16,
                        threshold: Double = 0.4, shingleN: Int = 3,
-                       maxBucketSize: Long = 4096L): DataFrame = {
+                       maxBucketSize: Long = 4096L): DataFrame = Materialize.scope {
     require(numHashes == 128, "the 2-word packing is specified for k = 128")
-    val sigs = df.select(
+    val sigs = Materialize.persist(df.select(
         col(idCol).as("id"),
-        TF.minhashSignature(TF.shingleHashes(col(textCol), shingleN), numHashes).as("sig"))
-      .saltedPersist()
+        TF.minhashSignature(TF.shingleHashes(col(textCol), shingleN), numHashes).as("sig")))
     // pack parity bits: word 0 = perms 0..63, word 1 = perms 64..127
     def word(off: Int): Column = expr(
       s"""aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->
@@ -423,7 +368,7 @@ object Dedup {
     val packed = sigs.select(col("id"), word(0).as("w0"), word(64).as("w1"))
     val banded = sigs.select(col("id"),
       explode(TF.lshBandKeys(col("sig"), bands, numHashes / bands)).as("band"))
-    val (cand, sizedCache) = cappedCandidatePairs(banded, "band", maxBucketSize)
+    val cand = cappedCandidatePairs(banded, "band", maxBucketSize)
     val out = cand
       .join(packed.select(col("id").as("id_a"), col("w0").as("a0"), col("w1").as("a1")), "id_a")
       .join(packed.select(col("id").as("id_b"), col("w0").as("b0"), col("w1").as("b1")), "id_b")
@@ -434,7 +379,7 @@ object Dedup {
         (col("agree") * 2L - numHashes).cast("double") / numHashes)
       .where(col("est_jaccard_b1") >= threshold)
       .select("id_a", "id_b", "est_jaccard_b1")
-    materializeAndRelease(out, sigs, sizedCache)
+    Materialize.result(out)
   }
 
   /** MinHash-LSH candidate generation followed by EXACT n-gram Jaccard
@@ -448,21 +393,20 @@ object Dedup {
   def minhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
                            numHashes: Int = 128, bands: Int = 64,
                            threshold: Double = 0.5, shingleN: Int = 3,
-                           maxBucketSize: Long = 4096L): DataFrame = {
+                           maxBucketSize: Long = 4096L): DataFrame = Materialize.scope {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sets = df.select(col(idCol).as("id"),
+    // barrier + reused by signature build and both verify joins
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
                          TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .saltedPersist() // barrier + reused by signature build and both verify joins
-    val sigs = sets.select(col("id"),
-        TF.minhashSignature(col("hs"), numHashes).as("sig"))
-      .saltedPersist()
+      .withColumn("n", size(col("hs"))))
+    val sigs = Materialize.persist(sets.select(col("id"),
+        TF.minhashSignature(col("hs"), numHashes).as("sig")))
     val banded = sigs.select(col("id"),
       explode(TF.lshBandKeys(col("sig"), bands, numHashes / bands)).as("band"))
-    val (cand, sizedCache) = cappedCandidatePairs(banded, "band", maxBucketSize)
+    val cand = cappedCandidatePairs(banded, "band", maxBucketSize)
     val out = verifyExactJaccard(cand, sets, threshold)
-    materializeAndRelease(out, sets, sigs, sizedCache)
+    Materialize.result(out)
   }
 
   /** The verification tail every "approximate candidates, exact output"
@@ -483,7 +427,7 @@ object Dedup {
       // queries' plan-equal sigs/sets caches reused) — the cross-query
       // CacheManager share + mid-flight-unpersist race. The CLASS is now
       // fixed at the source: every operator-internal persist is salted
-      // per-invocation ([[graft.util.CacheSalt]]), so plan-equal sharing
+      // per-invocation ([[graft.util.Materialize.persist]]), so plan-equal sharing
       // can no longer happen. This boundary re-dedup on the tiny candidate
       // set (one micro-shuffle) stays as a belt-and-braces invariant.
       .dropDuplicates("id_a", "id_b")
@@ -508,8 +452,7 @@ object Dedup {
     * blocks (near-identical boilerplate) are skew-capped the same way as
     * the minhash band buckets. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBucketSize: Long = 4096L,
-                   materialize: Boolean = true): DataFrame = {
+                   maxHamming: Int = 3, maxBucketSize: Long = 4096L): DataFrame = {
     // pigeonhole blocking needs >= 2 fragments (maxHamming = 0 would give
     // bitsPer = 64, where (1L << 64) == 1 in JVM shift semantics and the
     // mask silently becomes 0 — every doc in ONE bucket, recall collapses);
@@ -518,7 +461,7 @@ object Dedup {
       s"maxHamming must be in [1, 31], got $maxHamming")
     val hashed = df.select(col(idCol).as("id"),
       TF.simhash64(transform(TF.tokens(col(textCol)), t => xxhash64(t))).as("sh"))
-    hammingPairs64(hashed, maxHamming, maxBucketSize, materialize)
+    hammingPairs64(hashed, maxHamming, maxBucketSize)
   }
 
   /** Pigeonhole hamming join over ANY 64-bit fingerprint column — the
@@ -532,10 +475,9 @@ object Dedup {
     * (skew-capped at `maxBucketSize`), never all-pairs. */
   def hammingPairs64(hashes: DataFrame, maxHamming: Int,
                      maxBucketSize: Long = 4096L,
-                     materialize: Boolean = true,
                      keepAllCandidates: Boolean = false): DataFrame =
     hammingPairs64Impl(hashes, grpCol = None, maxHamming, maxBucketSize,
-      materialize, keepAllCandidates)
+      keepAllCandidates)
 
   /** [[hammingPairs64]] with a GROUP key: fingerprints only pair within
     * the same group (modality family, tenant, shard...) because the group
@@ -547,22 +489,20 @@ object Dedup {
     * `(grp, id_a, id_b, hamming)`. */
   def hammingPairs64Keyed(hashes: DataFrame, maxHamming: Int,
                           maxBucketSize: Long = 4096L,
-                          materialize: Boolean = true,
                           keepAllCandidates: Boolean = false): DataFrame =
     hammingPairs64Impl(hashes, grpCol = Some("grp"), maxHamming,
-      maxBucketSize, materialize, keepAllCandidates)
+      maxBucketSize, keepAllCandidates)
 
   private def hammingPairs64Impl(hashes: DataFrame, grpCol: Option[String],
                                  maxHamming: Int, maxBucketSize: Long,
-                                 materialize: Boolean,
-                                 keepAllCandidates: Boolean): DataFrame = {
+                                 keepAllCandidates: Boolean): DataFrame = Materialize.scope {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
     val nBlocks = maxHamming + 1
     val bitsPer = 64 / nBlocks
-    val hashed = hashes
-      .select(col("id") +: col("sh") +: grpCol.map(col).toSeq: _*)
-      .saltedPersist() // reused by both join sides — see minhashLshPairs note
+    // reused by both join sides — see minhashLshPairs note
+    val hashed = Materialize.persist(hashes
+      .select(col("id") +: col("sh") +: grpCol.map(col).toSeq: _*))
     val blocked = hashed.select(col("id"), explode(
       transform(sequence(lit(0), lit(nBlocks - 1)), i => {
         val bits = call_function("shiftrightunsigned", col("sh"), i * bitsPer)
@@ -574,7 +514,7 @@ object Dedup {
           case None    => struct(i.as("i"), bits)
         }
       })).as("blk"))
-    val (cand, sizedCache) = cappedCandidatePairs(blocked, "blk", maxBucketSize)
+    val cand = cappedCandidatePairs(blocked, "blk", maxBucketSize)
     val aSide = hashed.select(
       col("id").as("id_a") +: col("sh").as("sh_a") +: grpCol.map(col).toSeq: _*)
     val out = cand
@@ -585,8 +525,7 @@ object Dedup {
     // keepAllCandidates = the blocking-recall diagnostic: every banded
     // candidate with its exact hamming, unthresholded
     val cut = if (keepAllCandidates) out else out.where(col("hamming") <= maxHamming)
-    if (materialize) materializeAndRelease(cut, hashed, sizedCache)
-    else cut
+    Materialize.result(cut)
   }
 
   // ==== persisted fragment-bucketed hamming index (fingerprint ingest) ====
@@ -654,25 +593,24 @@ object Dedup {
     * production bounds them UPSTREAM by dropping degenerate payloads at
     * decode (the quality-filter stage), not by pruning the index. */
   def hammingSurvivorsIndexed(incoming: DataFrame, index: DataFrame,
-                              maxHamming: Int = 3): DataFrame = {
-    val (out, caches) = hammingSurvivorsIndexedLazy(incoming, index, maxHamming)
-    materializeAndRelease(out, caches: _*)
+                              maxHamming: Int = 3): DataFrame = Materialize.scope {
+    Materialize.result(hammingSurvivorsIndexedLazy(incoming, index, maxHamming))
   }
 
   /** [[hammingSurvivorsIndexed]] WITHOUT the eager cut: returns the lazy
-    * decision plan plus the persisted intermediates the caller must
-    * release once ITS materialization barrier has run. Used by the
-    * streaming ingest steps, whose epoch parquet write IS the barrier —
-    * cutting first would run one extra job per epoch just to hand the
-    * write already-materialized rows (round-16 verdict: the top remaining
-    * ingest cost). The caches MUST outlive the first consumption (the
-    * CollapseProject-blowup contract of materializeAndRelease). */
+    * decision plan; its persisted intermediates belong to the caller's
+    * scope, which frees them once ITS materialization barrier has run.
+    * Used by the streaming ingest steps, whose epoch parquet write IS the
+    * barrier — cutting first would run one extra job per epoch just to
+    * hand the write already-materialized rows (round-16 verdict: the top
+    * remaining ingest cost). The persists MUST outlive the first
+    * consumption (the CollapseProject blowup they exist to prevent). */
   private[graft] def hammingSurvivorsIndexedLazy(
       incoming: DataFrame, index: DataFrame,
-      maxHamming: Int = 3): (DataFrame, Seq[DataFrame]) = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
-    val inc = incoming.select(col("id"), col("sh")).saltedPersist()
+    val inc = Materialize.persist(incoming.select(col("id"), col("sh")))
     val incPost = buildHammingPostings(inc, maxHamming)
     val cross = incPost.as("a").join(index.as("b"), col("a.bk") === col("b.bk"))
       .where(TF.hammingDist64(col("a.sh"), col("b.sh")) <= maxHamming)
@@ -691,7 +629,7 @@ object Dedup {
         coalesce(col("n_dup_batch"), lit(0L)).as("n_dup_batch"),
         (coalesce(col("n_dup_corpus"), lit(0L)) === 0L &&
          coalesce(col("n_dup_batch"), lit(0L)) === 0L).as("survives"))
-    (out, Seq(inc))
+    out
   }
 
   /** [[buildHammingPostings]] with a GROUP key carried beside the packed
@@ -882,20 +820,18 @@ object Dedup {
     * ingest. Input `(id, sh, grp)`; index from
     * [[buildHammingPostingsKeyed]] bucketed on `bk`. Output adds `grp`. */
   def hammingSurvivorsIndexedKeyed(incoming: DataFrame, index: DataFrame,
-                                   maxHamming: Int = 3): DataFrame = {
-    val (out, caches) =
-      hammingSurvivorsIndexedKeyedLazy(incoming, index, maxHamming)
-    materializeAndRelease(out, caches: _*)
+                                   maxHamming: Int = 3): DataFrame = Materialize.scope {
+    Materialize.result(hammingSurvivorsIndexedKeyedLazy(incoming, index, maxHamming))
   }
 
   /** Lazy twin of [[hammingSurvivorsIndexedKeyed]] — see
     * [[hammingSurvivorsIndexedLazy]] for the contract. */
   private[graft] def hammingSurvivorsIndexedKeyedLazy(
       incoming: DataFrame, index: DataFrame,
-      maxHamming: Int = 3): (DataFrame, Seq[DataFrame]) = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 31,
       s"maxHamming must be in [1, 31], got $maxHamming")
-    val inc = incoming.select(col("id"), col("sh"), col("grp")).saltedPersist()
+    val inc = Materialize.persist(incoming.select(col("id"), col("sh"), col("grp")))
     val incPost = buildHammingPostingsKeyed(inc, maxHamming)
     val cross = incPost.as("a").join(index.as("b"),
         col("a.bk") === col("b.bk") && col("a.grp") === col("b.grp"))
@@ -916,7 +852,7 @@ object Dedup {
         coalesce(col("n_dup_batch"), lit(0L)).as("n_dup_batch"),
         (coalesce(col("n_dup_corpus"), lit(0L)) === 0L &&
          coalesce(col("n_dup_batch"), lit(0L)) === 0L).as("survives"))
-    (out, Seq(inc))
+    out
   }
 
   /** Fingerprint ingest loop — the modality twin of [[dedupIngest]]:
@@ -949,11 +885,10 @@ object Dedup {
     * (`maxDocFreq`) exactly like IR posting-list pruning. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.5,
-                        maxDocFreq: Long = 1000L): DataFrame = {
-    val sets = df.select(col(idCol).as("id"),
+                        maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
                          TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .saltedPersist() // shingle sets reused by both join sides
+      .withColumn("n", size(col("hs")))) // shingle sets reused by both join sides
     val posting = sets.select(col("id"), col("n"), explode(col("hs")).as("h"))
     // prune pathological shingles (stopword-only n-grams at corpus scale);
     // skipped entirely when unbounded so the exact/oracle config pays no
@@ -972,7 +907,7 @@ object Dedup {
         (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    materializeAndRelease(out, sets)
+    Materialize.result(out)
   }
 
   /** LSH S-curve calibration: recall of the banded MinHash candidate set
@@ -1037,13 +972,12 @@ object Dedup {
     * touches aggregated pair rows only. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.8,
-                       maxDocFreq: Long = 1000L): DataFrame = {
+                       maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sets = df.select(col(idCol).as("id"),
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
                          TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .saltedPersist()
+      .withColumn("n", size(col("hs"))))
     val posting = sets.select(col("id"), col("n"), explode(col("hs")).as("h"))
     val rare =
       if (maxDocFreq == Long.MaxValue) posting
@@ -1064,7 +998,7 @@ object Dedup {
         when(col("na") < col("nb"), col("id_b")).otherwise(col("id_a"))
           .as("container_id"),
         col("containment"))
-    materializeAndRelease(out, sets)
+    Materialize.result(out)
   }
 
   /** Edit-distance (Levenshtein) near-dup pairs over SHORT normalized
@@ -1098,8 +1032,7 @@ object Dedup {
     * survivors) is what keeps them from reaching the ~16k-op DP. */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
                         maxDist: Int = 16, maxLen: Int = 512,
-                        bandWidth: Int = 32,
-                        materialize: Boolean = true): DataFrame = {
+                        bandWidth: Int = 32): DataFrame = Materialize.scope {
     require(maxDist >= 1 && maxDist < bandWidth,
       s"need 1 <= maxDist < bandWidth, got maxDist=$maxDist bandWidth=$bandWidth")
     val alphabet = "abcdefghijklmnopqrstuvwxyz0123456789 "
@@ -1114,11 +1047,10 @@ object Dedup {
       .withColumn("l", length(col("t")))
       .where(col("l") <= maxLen)
       .withColumn("band", (col("l") / bandWidth).cast("int"))
-    val blocks = s.select(
+    val blocks = Materialize.persist(s.select(
         (Seq(col("id"), col("t"), col("l"), col("band"),
              explode(array(col("band"), col("band") + 1)).as("blk")) ++
-         histCols): _*)
-      .saltedPersist() // barrier: group counts computed once per doc, not per pair
+         histCols): _*)) // barrier: group counts computed once per doc, not per pair
     val l1 = (0 until nGroups).map(g =>
       abs(col(s"a.h$g") - col(s"b.h$g"))).reduce(_ + _)
     // Everything rides the JOIN CONDITION in explicit cheap-first order —
@@ -1139,8 +1071,7 @@ object Dedup {
         levenshtein(col("a.t"), col("b.t"), maxDist) >= 0)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
               levenshtein(col("a.t"), col("b.t"), maxDist).as("dist"))
-    if (materialize) materializeAndRelease(out, blocks)
-    else out // plan-inspection mode: caller owns the cached intermediates
+    Materialize.result(out)
   }
 
   /** Sorted-neighborhood (SNM, Hernandez & Stolfo 1995) near-dup pairs:
@@ -1168,11 +1099,10 @@ object Dedup {
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, textCol: String,
                               window: Int = 8, keyLen: Int = 24,
                               shingleN: Int = 3, threshold: Double = 0.3,
-                              keyStart: Int = 1,
-                              materialize: Boolean = true): DataFrame =
+                              keyStart: Int = 1): DataFrame =
     sortedNeighborhoodPairsFromBase(
       snmBase(df, idCol, textCol, shingleN),
-      window, keyLen, threshold, keyStart, materialize)
+      window, keyLen, threshold, keyStart)
 
   /** The per-document state every SNM pass shares: id, NORMALIZED text
     * (each pass's sort key is a substring of it) and the shingle-hash set
@@ -1201,16 +1131,15 @@ object Dedup {
     * the same normalized text). */
   private def sortedNeighborhoodPairsFromBase(base: DataFrame, window: Int,
                                               keyLen: Int, threshold: Double,
-                                              keyStart: Int,
-                                              materialize: Boolean): DataFrame = {
+                                              keyStart: Int): DataFrame = Materialize.scope {
     requireSnmArgs(window, keyLen, threshold, keyStart)
-    val keyed = base.select(col("id"),
+    // two passes: partition counts, then the ranked join
+    val keyed = Materialize.persist(base.select(col("id"),
         substring(col("norm"), keyStart, keyLen).as("k"),
         col("hs"), col("n"))
       .repartitionByRange(col("k"), col("id"))
       .sortWithinPartitions(col("k"), col("id"))
-      .withColumn("__pid", spark_partition_id())
-      .saltedPersist() // two passes: partition counts, then the ranked join
+      .withColumn("__pid", spark_partition_id()))
     // pass 1: per-partition row counts -> cumulative rank bases (one tiny
     // row per partition, driver-bounded)
     val counts = keyed.groupBy("__pid").agg(count(lit(1)).as("c"))
@@ -1245,7 +1174,7 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
               greatest(col("id_a"), col("id_b")).as("id_b"), col("jaccard"))
-    if (materialize) materializeAndRelease(out, keyed) else out
+    Materialize.result(out)
   }
 
   /** Multi-pass SNM: union of [[sortedNeighborhoodPairs]] over `passes`
@@ -1261,7 +1190,7 @@ object Dedup {
                                   textCol: String, passes: Int = 2,
                                   stride: Int = 16, window: Int = 8,
                                   keyLen: Int = 24, shingleN: Int = 3,
-                                  threshold: Double = 0.3): DataFrame = {
+                                  threshold: Double = 0.3): DataFrame = Materialize.scope {
     require(passes >= 1 && passes <= 8, s"passes must be in [1, 8], got $passes")
     require(stride >= 1, s"stride must be >= 1, got $stride")
     // validate before the shared base is persisted, so a bad argument
@@ -1270,16 +1199,14 @@ object Dedup {
     // ONE normalization + shingling scan feeds every pass (the passes
     // differ only in the sort-key offset — guide §1.2 step 1); each pass
     // still pays its own range-sort, which IS the algorithm
-    val base = snmBase(df, idCol, textCol, shingleN).saltedPersist()
-    try {
-      val all = (0 until passes).map { p =>
-        sortedNeighborhoodPairsFromBase(base, window, keyLen, threshold,
-          keyStart = 1 + p * stride, materialize = true)
-      }
-      // same pair found by two passes carries the same exact jaccard, so
-      // the distinct is a pure pair-set dedup
-      Materialize.cut(all.reduce(_ unionByName _).distinct())
-    } finally base.unpersist()
+    val base = Materialize.persist(snmBase(df, idCol, textCol, shingleN))
+    val all = (0 until passes).map { p =>
+      sortedNeighborhoodPairsFromBase(base, window, keyLen, threshold,
+        keyStart = 1 + p * stride)
+    }
+    // same pair found by two passes carries the same exact jaccard, so
+    // the distinct is a pure pair-set dedup
+    Materialize.result(all.reduce(_ unionByName _).distinct())
   }
 
   /** The minimum shingle overlap a partner can have with a size-`n` set
@@ -1344,15 +1271,14 @@ object Dedup {
     * Σ df(h)² in the plain join grows quadratically in the hot shingles'
     * frequency while the prefix index sheds those shingles entirely. */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-                              shingleN: Int = 3, threshold: Double = 0.5,
-                              materialize: Boolean = true): DataFrame = {
+                              shingleN: Int = 3, threshold: Double = 0.5): DataFrame = Materialize.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold — the prefix length " +
       "|x| - ceil(t*|x|) + 1 is only a valid filter there")
-    val sets = df.select(col(idCol).as("id"),
+    // reused by the prefix build, the probe side and verification
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
                          TF.shingleHashes(col(textCol), shingleN).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .saltedPersist() // reused by the prefix build, the probe side and verification
+      .withColumn("n", size(col("hs"))))
     val pref = ngramPrefixPostings(sets, threshold)
     val full = sets.select(col("id"), explode(col("hs")).as("h"))
     // the guaranteed shared shingle is in ONE side's prefix, so the join is
@@ -1364,8 +1290,7 @@ object Dedup {
               greatest(col("p.id"), col("f.id")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
     val out = verifyExactJaccard(cand, sets, threshold)
-    if (materialize) materializeAndRelease(out, sets)
-    else out // plan-inspection mode: caller owns the cached intermediate
+    Materialize.result(out)
   }
 
   /** Cross-source near-duplicate OVERLAP MATRIX: given a candidate pair
@@ -1414,7 +1339,7 @@ object Dedup {
   def winnowOverlapPairs(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 4, window: Int = 8,
                          minShared: Long = 2L,
-                         maxDocFreq: Long = 1000L): DataFrame = {
+                         maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     // the distinct fingerprint SET per doc (a repeated passage can
@@ -1424,10 +1349,9 @@ object Dedup {
     // window over the exploded postings would re-shuffle the whole table)
     val fpArr = column(graft.functions.WinnowFingerprints(
       expression(TF.normText(col(textCol))), shingleN, window))
-    val sets = df.select(col(idCol).as("id"),
+    val sets = Materialize.persist(df.select(col(idCol).as("id"),
         array_distinct(transform(fpArr, fp => fp.getField("hash"))).as("hs"))
-      .withColumn("nf", size(col("hs")).cast("long"))
-      .saltedPersist() // feeds both join sides
+      .withColumn("nf", size(col("hs")).cast("long"))) // feeds both join sides
     val posting = sets.select(col("id"), col("nf"), explode(col("hs")).as("h"))
     val rare =
       if (maxDocFreq == Long.MaxValue) posting
@@ -1443,7 +1367,7 @@ object Dedup {
       .withColumn("overlap",
         col("shared").cast("double") / least(col("na"), col("nb")).cast("double"))
       .select("id_a", "id_b", "shared", "na", "nb", "overlap")
-    materializeAndRelease(out, sets)
+    Materialize.result(out)
   }
 
   /** Embedding near-dup: pairs with cosine ≥ threshold. Candidate generation
@@ -1455,8 +1379,7 @@ object Dedup {
                            threshold: Double = 0.95,
                            bruteForce: Boolean = false,
                            lshBits: Int = 8, dim: Int = 64,
-                           maxBucketSize: Long = 4096L,
-                           materialize: Boolean = true): DataFrame = {
+                           maxBucketSize: Long = 4096L): DataFrame = Materialize.scope {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     if (bruteForce) {
       v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
@@ -1464,9 +1387,9 @@ object Dedup {
                 VF.cosineSim(col("a.vec"), col("b.vec")).as("cosine"))
         .where(col("cosine") >= threshold)
     } else {
-      val bucketed = v.withColumn("bucket",
-        Similarity.hyperplaneBucket(col("vec"), lshBits, dim)).saltedPersist()
-      val (cand, sizedCache) = cappedCandidatePairs(
+      val bucketed = Materialize.persist(v.withColumn("bucket",
+        Similarity.hyperplaneBucket(col("vec"), lshBits, dim)))
+      val cand = cappedCandidatePairs(
         bucketed.select(col("id"), col("bucket")), "bucket", maxBucketSize)
       val out = cand
         .join(bucketed.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
@@ -1474,8 +1397,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"),
                 VF.cosineSim(col("vec_a"), col("vec_b")).as("cosine"))
         .where(col("cosine") >= threshold)
-      if (materialize) materializeAndRelease(out, bucketed, sizedCache)
-      else out
+      Materialize.result(out)
     }
   }
 
@@ -1499,15 +1421,14 @@ object Dedup {
   def incrementalEmbedSurvivors(incoming: DataFrame, existing: DataFrame,
                                 idCol: String, vecCol: String,
                                 threshold: Double = 0.95,
-                                lshBits: Int = 8, dim: Int = 64): DataFrame = {
+                                lshBits: Int = 8, dim: Int = 64): DataFrame = Materialize.scope {
     def bucketed(d: DataFrame, isInc: Boolean) =
       d.select(col(idCol).as("id"), col(vecCol).as("vec"),
                lit(isInc).as("is_inc"))
         .withColumn("bucket",
           Similarity.hyperplaneBucket(col("vec"), lshBits, dim))
-    val all = bucketed(incoming, isInc = true)
-      .unionByName(bucketed(existing, isInc = false))
-      .saltedPersist() // reused by both sides of the bucket join
+    val all = Materialize.persist(bucketed(incoming, isInc = true)
+      .unionByName(bucketed(existing, isInc = false))) // reused by both sides of the bucket join
     val dropped = all.where(col("is_inc")).as("a")
       .join(all.as("b"),
         col("a.bucket") === col("b.bucket") &&
@@ -1515,7 +1436,7 @@ object Dedup {
       .where(VF.cosineSim(col("a.vec"), col("b.vec")) >= threshold)
       .select(col("a.id").as(idCol)).distinct()
     val out = incoming.join(dropped, Seq(idCol), "left_anti")
-    materializeAndRelease(out, all)
+    Materialize.result(out)
   }
 
   // ==== persisted embedding LSH index (embedding ingest loop) ====
@@ -1583,10 +1504,8 @@ object Dedup {
     * by pruning the index. */
   def embedSurvivorsIndexed(incoming: DataFrame, index: DataFrame,
                             threshold: Double = 0.95, lshBits: Int = 8,
-                            dim: Int = 64): DataFrame = {
-    val (out, caches) =
-      embedSurvivorsIndexedLazy(incoming, index, threshold, lshBits, dim)
-    materializeAndRelease(out, caches: _*)
+                            dim: Int = 64): DataFrame = Materialize.scope {
+    Materialize.result(embedSurvivorsIndexedLazy(incoming, index, threshold, lshBits, dim))
   }
 
   /** Lazy twin of [[embedSurvivorsIndexed]] — see
@@ -1594,8 +1513,8 @@ object Dedup {
   private[graft] def embedSurvivorsIndexedLazy(
       incoming: DataFrame, index: DataFrame,
       threshold: Double = 0.95, lshBits: Int = 8,
-      dim: Int = 64): (DataFrame, Seq[DataFrame]) = {
-    val inc = incoming.select(col("id"), col("vec")).saltedPersist()
+      dim: Int = 64): DataFrame = {
+    val inc = Materialize.persist(incoming.select(col("id"), col("vec")))
     val incPost = buildEmbedPostings(inc, lshBits, dim)
     val cross = incPost.as("a").join(index.as("b"),
         col("a.bucket") === col("b.bucket"))
@@ -1615,7 +1534,7 @@ object Dedup {
         coalesce(col("n_dup_batch"), lit(0L)).as("n_dup_batch"),
         (coalesce(col("n_dup_corpus"), lit(0L)) === 0L &&
          coalesce(col("n_dup_batch"), lit(0L)) === 0L).as("survives"))
-    (out, Seq(inc))
+    out
   }
 
   /** Embedding ingest loop — the semantic twin of [[hammingIngest]]:
@@ -1656,14 +1575,13 @@ object Dedup {
   def semanticSurvivors(df: DataFrame, idCol: String, vecCol: String,
                         centroids: Array[Array[Float]],
                         threshold: Double = 0.95,
-                        maxClusterSize: Long = 4096L): DataFrame = {
+                        maxClusterSize: Long = 4096L): DataFrame = Materialize.scope {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val assigned = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val assigned = Materialize.persist(df.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("cluster", element_at(
         column(graft.functions.NearestCentroids(expression(col("vec")), centroids, 1)),
-        1).cast("long"))
-      .saltedPersist()
-    val (cand, sized) = cappedCandidatePairs(
+        1).cast("long")))
+    val cand = cappedCandidatePairs(
       assigned.select(col("id"), col("cluster")), "cluster", maxClusterSize)
     val dupIds = cand
       .join(assigned.select(col("id").as("id_a"), col("vec").as("vec_a")), "id_a")
@@ -1674,7 +1592,7 @@ object Dedup {
     val out = assigned.select(col("id"), col("cluster"))
       .join(dupIds, Seq("id"), "left_anti")
       .select(col("id").as(idCol), col("cluster"))
-    materializeAndRelease(out, assigned, sized)
+    Materialize.result(out)
   }
 
   /** Greedy survivor reduction: drop every id that appears as the *larger*
@@ -1724,10 +1642,11 @@ object Dedup {
     // bucketed read too, leaving bin-packed file splits that mix every
     // bucket per task (measured: 16 files instead of 4). Rows sharing a
     // bucket share the derived key, so each write task holds one bucket.
-    val fresh = graft.util.Materialize.cut(
-      spark.table(table).repartition(buckets,
+    Materialize.scope {
+      val fresh = Materialize.cut(spark.table(table).repartition(buckets,
         pmod(hash(col(key)), lit(buckets))))
-    Relational.bucketMaterialize(fresh, table, key, buckets, path)
+      Relational.bucketMaterialize(fresh, table, key, buckets, path)
+    }
     ()
   }
 
@@ -1812,10 +1731,11 @@ object Dedup {
   def compactPostingIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, path: String,
                           buckets: Int = 8): Unit = {
-    val fresh = graft.util.Materialize.cut(
-      spark.table(table).select("id", "n", "h")
+    Materialize.scope {
+      val fresh = Materialize.cut(spark.table(table).select("id", "n", "h")
         .withColumn("df", count(lit(1)).over(Window.partitionBy("h"))))
-    Relational.bucketMaterialize(fresh, table, "h", buckets, path)
+      Relational.bucketMaterialize(fresh, table, "h", buckets, path)
+    }
     ()
   }
 
@@ -1969,7 +1889,7 @@ object Dedup {
     * single-reducer sort. The only window function runs partitioned by
     * document (bounded by doc length). */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     n: Int = 10, materialize: Boolean = true): DataFrame = {
+                     n: Int = 10): DataFrame = Materialize.scope {
     require(n >= 2, s"span width n must be >= 2, got $n")
     // (id, pos, h): xxhash64 of the n-token window at token index pos —
     // a native single-pass expression (PositionalShingleHashes): the HOF
@@ -1980,11 +1900,10 @@ object Dedup {
     // probe side — persisted so the scan + normalization + hashing run
     // once, not twice (the two exchange subtrees differ, no ReuseExchange)
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val gramsBase = df.select(col(idCol).as("id"),
+    val grams = Materialize.persist(df.select(col(idCol).as("id"),
         posexplode(column(graft.functions.PositionalShingleHashes(
           expression(TF.normText(col(textCol))), n))))
-      .select(col("id"), col("pos").cast("long").as("pos"), col("col").as("h"))
-    val grams = if (materialize) gramsBase.saltedPersist() else gramsBase
+      .select(col("id"), col("pos").cast("long").as("pos"), col("col").as("h")))
     // global min-(id,pos) + count per hash: partial agg before the shuffle,
     // so hot (boilerplate) hashes combine map-side instead of funneling
     // into one reducer's sort buffer
@@ -2008,7 +1927,7 @@ object Dedup {
            count(lit(1)).as("n_windows"))
       .select(col("id").as(idCol), col("start_tok"), col("end_tok"),
               col("n_windows"))
-    if (materialize) materializeAndRelease(out, grams) else out
+    Materialize.result(out)
   }
 
   /** Apply the cuts reported by [[duplicateSpans]] — the output half of
@@ -2069,15 +1988,14 @@ object Dedup {
   def incrementalSurvivors(incoming: DataFrame, existing: DataFrame,
                            idCol: String, textCol: String,
                            shingleN: Int = 3, threshold: Double = 0.5,
-                           maxDocFreq: Long = 1000L): DataFrame = {
+                           maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
     def shingled(d: DataFrame, isInc: Boolean) =
       d.select(col(idCol).as("id"),
                TF.shingleHashes(col(textCol), shingleN).as("hs"),
                lit(isInc).as("is_inc"))
-    val sets = shingled(incoming, isInc = true)
+    val sets = Materialize.persist(shingled(incoming, isInc = true)
       .unionByName(shingled(existing, isInc = false))
-      .withColumn("n", size(col("hs")))
-      .saltedPersist() // shingle sets reused by both posting sides
+      .withColumn("n", size(col("hs")))) // shingle sets reused by both posting sides
     val posting = sets.select(col("id"), col("is_inc"), col("n"),
                               explode(col("hs")).as("h"))
     val rare =
@@ -2098,7 +2016,7 @@ object Dedup {
         (col("na") + col("nb") - col("inter")) >= threshold)
       .select(col("id_a").as(idCol)).distinct()
     val out = incoming.join(dropped, Seq(idCol), "left_anti")
-    materializeAndRelease(out, sets)
+    Materialize.result(out)
   }
 
   /** The corpus posting index consumed by [[incrementalSurvivorsIndexed]]:
@@ -2145,10 +2063,9 @@ object Dedup {
   def incrementalSurvivorsIndexed(incoming: DataFrame, index: DataFrame,
                                   idCol: String, textCol: String,
                                   shingleN: Int = 3, threshold: Double = 0.5,
-                                  maxDocFreq: Long = 1000L): DataFrame = {
-    val (out, caches) = incrementalSurvivorsIndexedLazy(incoming, index,
-      idCol, textCol, shingleN, threshold, maxDocFreq)
-    materializeAndRelease(out, caches: _*)
+                                  maxDocFreq: Long = 1000L): DataFrame = Materialize.scope {
+    Materialize.result(incrementalSurvivorsIndexedLazy(incoming, index,
+      idCol, textCol, shingleN, threshold, maxDocFreq))
   }
 
   /** Lazy twin of [[incrementalSurvivorsIndexed]] — see
@@ -2157,14 +2074,14 @@ object Dedup {
       incoming: DataFrame, index: DataFrame,
       idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
-      maxDocFreq: Long = 1000L): (DataFrame, Seq[DataFrame]) = {
+      maxDocFreq: Long = 1000L): DataFrame = {
     val incBase = shinglePostings(incoming, idCol, textCol, shingleN)
     // batch-side df; combined df for a shingle = dfi + corpus df (exactly
     // the union-window df of the non-indexed variant). With pruning off the
     // window (a shuffle over the batch) is skipped entirely.
-    val inc = (if (maxDocFreq == Long.MaxValue) incBase.withColumn("dfi", lit(0L))
-               else incBase.withColumn("dfi",
-                 count(lit(1)).over(Window.partitionBy("h")))).saltedPersist()
+    val inc = Materialize.persist(
+      if (maxDocFreq == Long.MaxValue) incBase.withColumn("dfi", lit(0L))
+      else incBase.withColumn("dfi", count(lit(1)).over(Window.partitionBy("h"))))
     // cross-batch candidates: batch postings probe the bucketed index
     val crossRaw = inc.as("a").join(index.as("b"), col("a.h") === col("b.h"))
       .select(col("a.id").as("id_a"), col("a.n").as("na"),
@@ -2175,7 +2092,7 @@ object Dedup {
     // pruning) — persist so the index scan runs once (no ReuseExchange
     // across the two different subtrees; see memory: recurring plan trap)
     val crossSrc = if (maxDocFreq == Long.MaxValue) crossRaw
-                   else crossRaw.saltedPersist()
+                   else Materialize.persist(crossRaw)
     val crossPairs = (if (maxDocFreq == Long.MaxValue) crossSrc
                       else crossSrc.where(col("dfi") + col("dfc") <= maxDocFreq))
       .groupBy("id_a", "id_b")
@@ -2199,9 +2116,7 @@ object Dedup {
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= threshold)
       .select(col("id_a").as(idCol)).distinct()
-    val out = incoming.join(dropped, Seq(idCol), "left_anti")
-    if (maxDocFreq == Long.MaxValue) (out, Seq(inc))
-    else (out, Seq(inc, crossSrc))
+    incoming.join(dropped, Seq(idCol), "left_anti")
   }
 
   /** Corpus-wide line-level dedup with reassembly (the RefinedWeb /
@@ -2224,8 +2139,7 @@ object Dedup {
     * corpus (broadcastable at production skew), and the line filter is a
     * per-row expression — document bodies never cross a shuffle. */
   def lineSurvivors(df: DataFrame, idCol: String, textCol: String,
-                    delim: String = "\n", minRepeats: Long = 2L,
-                    materialize: Boolean = true): DataFrame = {
+                    delim: String = "\n", minRepeats: Long = 2L): DataFrame = Materialize.scope {
     require(delim.nonEmpty, "delimiter must be non-empty")
     require(minRepeats >= 2L, s"minRepeats must be >= 2, got $minRepeats")
     Seq("__graft_lines", "__graft_cuts", "__graft_kept").foreach(c =>
@@ -2242,7 +2156,7 @@ object Dedup {
               TF.normText(col("col")).as("norm"))
       .where(length(col("norm")) > 0)
       .select(col("id"), col("pos"), xxhash64(col("norm")).as("h"))
-    val lines = if (materialize) exploded.saltedPersist() else exploded
+    val lines = Materialize.persist(exploded)
     val firsts = lines.groupBy("h")
       .agg(min(struct(col("id"), col("pos"))).as("first"),
            count(lit(1)).as("cnt"))
@@ -2263,7 +2177,7 @@ object Dedup {
         size(col("__graft_kept")).cast("long").as("n_lines_kept"),
         (size(col("__graft_lines")) - size(col("__graft_kept")))
           .cast("long").as("n_lines_cut"))
-    if (materialize) materializeAndRelease(out, lines) else out
+    Materialize.result(out)
   }
 
   /** Group-conditional boilerplate strip (the CCNet/RefinedWeb per-domain
@@ -2291,8 +2205,7 @@ object Dedup {
     * array filter like [[lineSurvivors]]. */
   def boilerplateSurvivors(df: DataFrame, idCol: String, textCol: String,
                            groupCol: String, minDocs: Long = 3L,
-                           delim: String = "\n",
-                           materialize: Boolean = true): DataFrame = {
+                           delim: String = "\n"): DataFrame = Materialize.scope {
     require(delim.nonEmpty, "delimiter must be non-empty")
     require(minDocs >= 2L, s"minDocs must be >= 2, got $minDocs")
     Seq("__graft_lines", "__graft_cuts", "__graft_kept").foreach(c =>
@@ -2306,7 +2219,7 @@ object Dedup {
               TF.normText(col("col")).as("norm"))
       .where(length(col("norm")) > 0)
       .select(col("id"), col("grp"), col("pos"), xxhash64(col("norm")).as("h"))
-    val lines = if (materialize) exploded.saltedPersist() else exploded
+    val lines = Materialize.persist(exploded)
     // distinct docs per (group, line): the inner distinct is the map-side
     // collapse (a line repeated 50× inside one doc contributes one row)
     val boiler = lines.select("grp", "h", "id").distinct()
@@ -2329,7 +2242,7 @@ object Dedup {
         size(col("__graft_kept")).cast("long").as("n_lines_kept"),
         (size(col("__graft_lines")) - size(col("__graft_kept")))
           .cast("long").as("n_lines_cut"))
-    if (materialize) materializeAndRelease(out, lines) else out
+    Materialize.result(out)
   }
 
   /** Snapshot diff — the crawl-over-crawl corpus delta report: classify
@@ -2396,7 +2309,7 @@ object Dedup {
     * checkpoint under `spark.graft.dedup.materialize = reliable`) so
     * lineage doesn't grow with the iteration count, and the PREVIOUS
     * round's blocks are freed as soon as the new round materializes
-    * (`Materialize.releaseNow`) — live checkpoint footprint is O(1) rounds,
+    * (`Materialize.release`) — live checkpoint footprint is O(1) rounds,
     * not O(rounds). The per-round driver action reads ONE aggregate (the
     * converged flag), never data. Errors loudly if `maxRounds` is hit
     * (pathological graph, raise the bound).
@@ -2467,11 +2380,11 @@ object Dedup {
       // rounds this loop created: on the first iteration `lab` is a
       // projection of the caller's `df`, and releasing it would free a
       // checkpointed input the caller still owns (composition trap)
-      if (rounds > 0) Materialize.releaseNow(lab)
+      if (rounds > 0) Materialize.release(lab)
       lab = next.select("id", "comp")
       rounds += 1
     }
-    Materialize.releaseNow(edges) // labels converged — the edge cut is dead
+    Materialize.release(edges) // labels converged — the edge cut is dead
     (lab.select(col("id").as(idCol), col("comp").as("cluster_id")), rounds)
   }
 }

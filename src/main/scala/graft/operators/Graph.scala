@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.util.CacheSalt.SaltedPersistOps
 import graft.util.Materialize
 
 import org.apache.spark.sql.DataFrame
@@ -43,15 +42,14 @@ object Graph {
     * node — against the co-partitioned cached edges. Node count `n` rides
     * a broadcast cross join (never a driver collect). */
   def pageRank(pairs: DataFrame, idACol: String, idBCol: String,
-               iters: Int = 5, scale: Long = 1000000000000L,
-               materialize: Boolean = true): DataFrame = {
+               iters: Int = 5, scale: Long = 1000000000000L): DataFrame = Materialize.scope {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(scale >= 1000000L, s"scale must be >= 10^6, got $scale")
     val teleport = scale * 15L / 100L // exact for every scale >= 100
     val edges = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
       .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").repartition(col("src")).saltedPersist()
+    val edgesDeg = Materialize.persist(edges.join(deg, "src").repartition(col("src")))
     val nodes = edgesDeg.select(col("src").as("id")).distinct()
     val n = nodes.agg(count(lit(1)).as("n"))
     var ranks = nodes.crossJoin(broadcast(n))
@@ -66,14 +64,9 @@ object Graph {
                 expr(s"CAST($teleport AS BIGINT) DIV n + 85 * s DIV 100")
                   .as("rank"))
     }
-    val out = ranks
+    Materialize.result(ranks
       .join(edgesDeg.select(col("src").as("id"), col("deg")).distinct(), "id")
-      .select(col("id"), col("rank"), col("deg"))
-    if (materialize) {
-      val m = Materialize.track(out.localCheckpoint(true))
-      edgesDeg.unpersist()
-      m
-    } else out // plan-inspection mode: caller owns the cached edges
+      .select(col("id"), col("rank"), col("deg")))
   }
 
   /** Personalized PageRank — [[pageRank]] with the teleport mass
@@ -92,15 +85,14 @@ object Graph {
     * minus truncation. */
   def personalizedPageRank(pairs: DataFrame, idACol: String, idBCol: String,
                            seeds: DataFrame, iters: Int = 5,
-                           scale: Long = 1000000000000L,
-                           materialize: Boolean = true): DataFrame = {
+                           scale: Long = 1000000000000L): DataFrame = Materialize.scope {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(scale >= 1000000L, s"scale must be >= 10^6, got $scale")
     val teleport = scale * 15L / 100L
     val edges = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
       .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesDeg = edges.join(deg, "src").repartition(col("src")).saltedPersist()
+    val edgesDeg = Materialize.persist(edges.join(deg, "src").repartition(col("src")))
     val nodes = edgesDeg.select(col("src").as("id")).distinct()
     // seeds restricted to graph nodes; the seed table is tiny — broadcast.
     // CUT once: the marker is referenced by the init, EVERY round, and the
@@ -134,14 +126,9 @@ object Graph {
           (when(col("sd"), expr(s"CAST($teleport AS BIGINT) DIV ns"))
             .otherwise(0L) + expr("85 * s DIV 100")).as("rank"))
     }
-    val out = ranks
+    Materialize.result(ranks
       .join(seedIds.select(col("id"), lit(true).as("sd")), Seq("id"), "left")
-      .select(col("id"), col("rank"), coalesce(col("sd"), lit(false)).as("is_seed"))
-    if (materialize) {
-      val m = Materialize.track(out.localCheckpoint(true))
-      edgesDeg.unpersist()
-      m
-    } else out
+      .select(col("id"), col("rank"), coalesce(col("sd"), lit(false)).as("is_seed")))
   }
 
   /** Per-node triangle counts over a distinct `a < b` pair relation (the
@@ -191,7 +178,7 @@ object Graph {
     * `connectedComponents`' non-convergence discipline). Each round's
     * edge set is cut eagerly ([[Materialize]]) so lineage stays O(1). */
   def kCore(pairs: DataFrame, idACol: String, idBCol: String, k: Int,
-            maxIters: Int = 30): DataFrame = {
+            maxIters: Int = 30): DataFrame = Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1 && maxIters <= 100,
       s"maxIters must be in [1, 100], got $maxIters")
@@ -211,7 +198,7 @@ object Graph {
         edges.join(keep, Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi"),
         s"graft_kcore_$round")
-      Materialize.releaseNow(edges)
+      Materialize.release(edges)
       edges = pruned
       converged = n == nEdges
       nEdges = n
@@ -219,11 +206,8 @@ object Graph {
     if (!converged)
       throw new IllegalStateException(
         s"kCore(k=$k) did not reach a fixpoint in $maxIters rounds")
-    val out = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("core_deg"))
-    val m = Materialize.cut(out)
-    Materialize.releaseNow(edges)
-    m
+    Materialize.result(edges.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("core_deg")))
   }
 
   /** Synchronous mode-label propagation (community detection) over an
@@ -256,7 +240,7 @@ object Graph {
     * output is cut ([[Materialize]]) so lineage stays O(1). */
   def labelPropagation(pairs: DataFrame, idACol: String, idBCol: String,
                        rounds: Int = 3,
-                       labelEncode: Long = 1000000000L): DataFrame = {
+                       labelEncode: Long = 1000000000L): DataFrame = Materialize.scope {
     require(rounds >= 1 && rounds <= 10,
       s"rounds must be in [1, 10], got $rounds")
     require(labelEncode >= 1000L, s"labelEncode must be >= 10^3, got $labelEncode")
@@ -277,15 +261,11 @@ object Graph {
         .groupBy("dst").agg(max(col("enc")).as("me"))
         .select(col("dst").as("id"),
           (lit(labelEncode - 1) - col("me") % labelEncode).as("lbl")))
-      if (prevCut != null) Materialize.releaseNow(prevCut)
+      if (prevCut != null) Materialize.release(prevCut)
       prevCut = next
       lab = next
     }
-    val out = Materialize.cut(
-      lab.select(col("id"), col("lbl").as("community")))
-    Materialize.releaseNow(prevCut)
-    Materialize.releaseNow(edges)
-    out
+    Materialize.result(lab.select(col("id"), col("lbl").as("community")))
   }
 
   /** Triadic link prediction over a distinct `a < b` pair relation: for
@@ -378,7 +358,7 @@ object Graph {
     * rounds). Dead rounds are released eagerly, so peak footprint is two
     * slim node tables. */
   def hits(pairs: DataFrame, idACol: String, idBCol: String,
-           rounds: Int = 4, scale: Long = 1000000L): DataFrame = {
+           rounds: Int = 4, scale: Long = 1000000L): DataFrame = Materialize.scope {
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1, 20], got $rounds")
     require(scale >= 1000L && scale <= 10000000L,
@@ -398,33 +378,27 @@ object Graph {
     var hub = nodes.select(col("id"), lit(scale).as("hub"))
     var auth: DataFrame = null
     var lastHRaw: DataFrame = null
-    var lastARaw: DataFrame = null
     for (r <- 1 to rounds) {
       val aRaw = Materialize.cut(
         edges.join(hub.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("raw")))
-      if (lastHRaw != null) Materialize.releaseNow(lastHRaw) // fed this aRaw
+      if (lastHRaw != null) Materialize.release(lastHRaw) // fed this aRaw
       auth = normalized(aRaw, "auth")
       val hRaw = Materialize.cut(
         edges.join(auth.withColumnRenamed("id", "dst"), "dst")
           .groupBy(col("src").as("id")).agg(sum(col("auth")).as("raw")))
       // aRaw is dead once hRaw is materialized — except on the final
       // round, where `auth` (a projection over it) feeds the output join
-      if (r < rounds) Materialize.releaseNow(aRaw) else lastARaw = aRaw
+      if (r < rounds) Materialize.release(aRaw)
       hub = normalized(hRaw, "hub")
       lastHRaw = hRaw
     }
-    val out = Materialize.cut(nodes
+    Materialize.result(nodes
       .join(hub, Seq("id"), "left")
       .join(auth, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("hub"), lit(0L)).as("hub_fp"),
         coalesce(col("auth"), lit(0L)).as("auth_fp")))
-    Materialize.releaseNow(lastARaw)
-    Materialize.releaseNow(lastHRaw)
-    Materialize.releaseNow(nodes)
-    Materialize.releaseNow(edges)
-    out
   }
 
   /** Hop-bounded multi-source BFS over an undirected pair relation:
@@ -450,7 +424,8 @@ object Graph {
     * `cut(settled ∪ nxt)` re-copied the whole settled set every round —
     * 3 jobs per hop down to 1). The returned frame is that lazy union —
     * every part is an eager cut, so repeated consumption re-reads blocks,
-    * never recomputes. */
+    * never recomputes. The parts belong to the caller's
+    * [[graft.util.Materialize.scope]], which frees them when it exits. */
   def bfsDistances(pairs: DataFrame, idACol: String, idBCol: String,
                    seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50,
@@ -480,7 +455,7 @@ object Graph {
       frontier = nxt
       frontierN = n
     }
-    Materialize.releaseNow(edges)
+    Materialize.release(edges)
     parts.reduce(_ unionByName _)
   }
 
@@ -549,7 +524,7 @@ object Graph {
       frontier = nxt
       frontierN = n
     }
-    Materialize.releaseNow(edges)
+    Materialize.release(edges)
     parts.reduce(_ unionByName _)
   }
 

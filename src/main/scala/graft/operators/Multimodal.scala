@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -711,7 +712,7 @@ object Multimodal {
     Dedup.hammingPairs64(
       audioFingerprint(df).where(col("afp").isNotNull)
         .select(col("id"), col("afp").as("sh")),
-      maxHamming, maxBucketSize, materialize = true, keepAllCandidates)
+      maxHamming, maxBucketSize, keepAllCandidates)
 
   // ==== video: real container parse, per-frame dHash, majority fingerprint
 
@@ -1064,12 +1065,11 @@ object Multimodal {
     * the equi-join is bounded by shared-frame pairs (never n²), and the
     * frame-count table re-joins onto the small pair set. */
   def videoSharedFrames(df: DataFrame, minShared: Int = 2,
-                        maxFrameFreq: Long = 4096L): DataFrame = {
-    import graft.util.CacheSalt.SaltedPersistOps
+                        maxFrameFreq: Long = 4096L): DataFrame = Materialize.scope {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val fh = videoFrameHashes(df).select(col("id"), col("fhash"))
-      .distinct()
-      .saltedPersist() // reused by the posting join (twice) and the counts
+    // reused by the posting join (twice) and the counts
+    val fh = Materialize.persist(
+      videoFrameHashes(df).select(col("id"), col("fhash")).distinct())
     val counts = fh.groupBy("id").agg(count(lit(1)).as("n"))
     val posting = fh
       .withColumn("__df", count(lit(1)).over(
@@ -1080,7 +1080,7 @@ object Multimodal {
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("shared_frames"))
       .where(col("shared_frames") >= minShared)
-    val out = pairs
+    Materialize.result(pairs
       .join(counts.select(col("id").as("id_a"), col("n").as("n_a")), "id_a")
       .join(counts.select(col("id").as("id_b"), col("n").as("n_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("shared_frames"),
@@ -1088,19 +1088,7 @@ object Multimodal {
         // integer DIV: Spark's `/` on longs is a double divide; ppm must
         // stay exact-integer for the cross-engine hash
         expr("shared_frames * 1000000L DIV least(n_a, n_b)")
-          .as("containment_ppm"))
-    // honors the shared materialize switch (plan inspection sets "none").
-    // The "none" arm must release fh too: it returns an unmaterialized
-    // plan (recomputes the postings if actually executed — acceptable for
-    // its plan-inspection purpose), but a still-cached fh would accumulate
-    // across calls and only the CacheSalt failure sweep would ever free it
-    df.sparkSession.conf.get("spark.graft.dedup.materialize", "local") match {
-      case "none" => fh.unpersist(); out
-      case _ =>
-        val m = graft.util.Materialize.track(out.localCheckpoint(true))
-        fh.unpersist()
-        m
-    }
+          .as("containment_ppm")))
   }
 
   /** Video near-duplicates: majority fingerprints through the same
@@ -1113,7 +1101,7 @@ object Multimodal {
     Dedup.hammingPairs64(
       videoFingerprint(df).where(col("vfp").isNotNull)
         .select(col("id"), col("vfp").as("sh")),
-      maxHamming, maxBucketSize, materialize = true, keepAllCandidates)
+      maxHamming, maxBucketSize, keepAllCandidates)
 
   // ==== format sniffing (the ingest router) ==============================
 
@@ -1373,15 +1361,12 @@ object Multimodal {
     * ~10⁻⁶ of the input and everything downstream is exchange-light. */
   def ingestPipeline(df: DataFrame, maxHamming: Int = 3,
                      maxBucketSize: Long = 4096L,
-                     decodeCounter: Option[org.apache.spark.util.LongAccumulator] = None): (DataFrame, DataFrame) = {
-    import graft.util.CacheSalt.SaltedPersistOps
-    val doMaterialize = df.sparkSession.conf
-      .get("spark.graft.dedup.materialize", "local") != "none"
-    val fp = ingestFingerprints(df, decodeCounter).toDF().saltedPersist()
+                     decodeCounter: Option[org.apache.spark.util.LongAccumulator] = None): (DataFrame, DataFrame) = Materialize.scope {
+    val fp = Materialize.persist(ingestFingerprints(df, decodeCounter).toDF())
     val pairs = Dedup.hammingPairs64Keyed(
       fp.where(col("fp").isNotNull)
         .select(col("id"), col("fp").as("sh"), col("family").as("grp")),
-      maxHamming, maxBucketSize, materialize = doMaterialize)
+      maxHamming, maxBucketSize)
     val base = fp.groupBy("family").agg(
       count(lit(1)).as("n_docs"),
       count(col("fp")).as("n_decoded"),
@@ -1398,14 +1383,8 @@ object Multimodal {
       .select(col("family"), col("n_docs"), col("n_decoded"), col("n_null"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         coalesce(col("n_docs_paired"), lit(0L)).as("n_docs_paired"))
-    if (!doMaterialize) { fp.unpersist(); (card, pairs) }
-    else {
-      // pairs is already checkpointed by the keyed join; cut the card too,
-      // then the fingerprint projection can go
-      val cardM = graft.util.Materialize.track(card.localCheckpoint(true))
-      fp.unpersist()
-      (cardM, pairs)
-    }
+    // pairs is already the keyed join's result, so it is handed on as is
+    (Materialize.result(card), Materialize.result(pairs))
   }
 
   /** Image near-duplicates: [[perceptualHash]] fingerprints fed through
@@ -1422,5 +1401,5 @@ object Multimodal {
     Dedup.hammingPairs64(
       perceptualHash(df).where(col("phash").isNotNull)
         .select(col("id"), col("phash").as("sh")),
-      maxHamming, maxBucketSize, materialize = true, keepAllCandidates)
+      maxHamming, maxBucketSize, keepAllCandidates)
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -274,8 +275,7 @@ object Relational {
     * roots. Cycles never converge and are reported by the same loud
     * check. */
   def hierarchyFlatten(nodes: DataFrame, idCol: String, parentCol: String,
-                       maxDoublings: Int = 6): DataFrame = {
-    import graft.util.Materialize
+                       maxDoublings: Int = 6): DataFrame = Materialize.scope {
     require(maxDoublings >= 1 && maxDoublings <= 20,
       s"maxDoublings must be in [1, 20], got $maxDoublings")
     val base = Materialize.cut(nodes.select(
@@ -289,7 +289,7 @@ object Relational {
       val next = Materialize.cut(state.join(lookup, "anc")
         .select(col("id"), col("anc2").as("anc"),
           (col("depth") + col("d2")).as("depth")))
-      if (state ne base) Materialize.releaseNow(state)
+      if (state ne base) Materialize.release(state)
       state = next
     }
     // loud fixpoint check: every final ancestor must be a root (its base
@@ -302,11 +302,7 @@ object Relational {
       throw new IllegalStateException(
         s"hierarchyFlatten: $unresolved nodes deeper than 2^$maxDoublings " +
         "(or a parent cycle) — raise maxDoublings or break the cycle")
-    val out = Materialize.cut(
-      state.select(col("id"), col("anc").as("root"), col("depth")))
-    if (state ne base) Materialize.releaseNow(state)
-    Materialize.releaseNow(base)
-    out
+    Materialize.result(state.select(col("id"), col("anc").as("root"), col("depth")))
   }
 
   def bucketMaterialize(df: DataFrame, table: String, key: String,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,21 +131,17 @@ object Sampling {
     *
     * Output: the selected rows as `(idCol, weight, offset, n_slots)`. */
   def systematicSample(df: DataFrame, idCol: String, weight: Column,
-                       k: Int): DataFrame = {
+                       k: Int): DataFrame = Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
-    val (offs, persisted) = TextAnalysis.withPrefixOffsets(
-      df, idCol, weight, "w")
-    try {
-      val tot = offs.agg(sum(col("w")).as("total"))
-      graft.util.Materialize.cut(
-        offs.crossJoin(broadcast(tot))
-          .where(col("w") > 0 && col("total") > 0)
-          .withColumn("lo_j", expr(s"(offset * $k + total - 1) DIV total"))
-          .withColumn("hi_j", expr(s"((offset + w) * $k - 1) DIV total"))
-          .where(col("hi_j") >= col("lo_j"))
-          .select(col(idCol), col("w").as("weight"), col("offset"),
-            (col("hi_j") - col("lo_j") + 1).as("n_slots")))
-    } finally { persisted.unpersist(); () }
+    val offs = TextAnalysis.withPrefixOffsets(df, idCol, weight, "w")
+    val tot = offs.agg(sum(col("w")).as("total"))
+    Materialize.result(offs.crossJoin(broadcast(tot))
+      .where(col("w") > 0 && col("total") > 0)
+      .withColumn("lo_j", expr(s"(offset * $k + total - 1) DIV total"))
+      .withColumn("hi_j", expr(s"((offset + w) * $k - 1) DIV total"))
+      .where(col("hi_j") >= col("lo_j"))
+      .select(col(idCol), col("w").as("weight"), col("offset"),
+        (col("hi_j") - col("lo_j") + 1).as("n_slots")))
   }
 
   /** Temperature-weighted mixture resampling (the `p_g ∝ count_g^alpha`

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -501,8 +501,7 @@ object Similarity {
     * previous centroid. Ties (equal distance) assign the lowest cluster
     * index on both engines. */
   def kmeansAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int = 3, dim: Int = 64,
-                   materialize: Boolean = true): DataFrame = {
+                   k: Int, iters: Int = 3, dim: Int = 64): DataFrame = Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val QuantScale = 1024L // 2^10: exact in double for |x| < 2^42
@@ -518,7 +517,7 @@ object Similarity {
       .otherwise(transform(col(vecCol), x =>
         floor(x.cast("double") * QuantScale).cast("long")))
     val qBase = corpus.select(col(idCol), quant.as("qv"))
-    val q = if (materialize) qBase.saltedPersist() else qBase
+    val q = Materialize.persist(qBase)
     def distsCol(cents: Array[Array[Long]]): Column = {
       val cLit = array(cents.map(cv => array(cv.map(lit): _*)): _*)
       transform(cLit, cv => aggregate(
@@ -563,11 +562,7 @@ object Similarity {
       .select(col(idCol),
         (array_position(col("__d"), array_min(col("__d"))) - 1).as("cluster"),
         array_min(col("__d")).as("dist"))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      q.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Deterministic per-subspace PQ codebooks: `m` subspaces × `k` codewords
@@ -596,8 +591,7 @@ object Similarity {
              queries: DataFrame, queryId: String, queryVec: String,
              k: Int = 10, m: Int = 8, codesPerSub: Int = 16, dim: Int = 64,
              refine: Int = 50,
-             codebooksOverride: Option[Array[Array[Array[Float]]]] = None,
-             materialize: Boolean = true): DataFrame = {
+             codebooksOverride: Option[Array[Array[Array[Float]]]] = None): DataFrame = Materialize.scope {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     require(refine >= k,
@@ -610,13 +604,8 @@ object Similarity {
     def code(vec: Column, mi: Int): Column = element_at(
       column(graft.functions.NearestCentroids(
         expression(slice(vec, mi * sub + 1, sub)), cbs(mi), 1)), 1)
-    // NOTE: with materialize=false (plan-inspection mode) the internal
-    // persist is NOT released — the caller owns cache cleanup via
-    // spark.sharedState.cacheManager.clearCache() (the PlanSpec pattern);
-    // the normal path unpersists after the cut below
-    val coded = corpus.select(col(corpusId).as("id"), col(corpusVec).as("cvec"))
-      .withColumn("codes", array((0 until m).map(mi => code(col("cvec"), mi)): _*))
-      .saltedPersist()
+    val coded = Materialize.persist(corpus.select(col(corpusId).as("id"), col(corpusVec).as("cvec"))
+      .withColumn("codes", array((0 until m).map(mi => code(col("cvec"), mi)): _*)))
     // query → ADC lookup table: lut[mi][ki] = <q_sub, codeword> in DOUBLE
     val cbLit = array(cbs.map(cb => array(cb.map(cw =>
       array(cw.map(x => lit(x.toDouble)): _*)): _*)): _*)
@@ -647,14 +636,7 @@ object Similarity {
       .select(col("qid"), col("id"), VF.cosineSim(col("cvec"), col("qvec")).as("cosine"))
       .withColumn("rank", row_number().over(wK))
       .where(col("rank") <= k)
-    if (materialize) {
-      // Materialize.cut honors spark.graft.dedup.materialize — `reliable`
-      // (cluster mode, executor-loss-safe) must apply here exactly as it
-      // does to the dedup family, not a hardcoded localCheckpoint
-      val cut = graft.util.Materialize.cut(out)
-      coded.unpersist()
-      cut
-    } else out // plan-inspection mode: caller owns cache release
+    Materialize.result(out)
   }
 
   /** Deterministic ±1 sign-projection matrix (`outDim` rows × `dim`,
@@ -686,7 +668,7 @@ object Similarity {
   def rpTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
              queries: DataFrame, queryId: String, queryVec: String,
              k: Int = 10, outDim: Int = 16, dim: Int = 64, refine: Int = 50,
-             seed: Long = 29L, materialize: Boolean = true): DataFrame = {
+             seed: Long = 29L): DataFrame = Materialize.scope {
     require(refine >= k,
       s"refine=$refine < k=$k: the projected cut would return fewer than k")
     val QuantScale = 1024L
@@ -714,9 +696,8 @@ object Similarity {
     def project(vec: Column): Column =
       transform(signsLit, row => aggregate(
         zip_with(row, quant(vec), (s, v) => s * v), lit(0L), _ + _))
-    val c = corpus.select(col(corpusId).as("id"), col(corpusVec).as("cvec"))
-      .select(col("id"), col("cvec"), project(col("cvec")).as("pvec"))
-      .saltedPersist()
+    val c = Materialize.persist(corpus.select(col(corpusId).as("id"), col(corpusVec).as("cvec"))
+      .select(col("id"), col("cvec"), project(col("cvec")).as("pvec")))
     val q = queries.select(col(queryId).as("qid"), col(queryVec).as("qvec"))
       .select(col("qid"), col("qvec"), project(col("qvec")).as("pq"))
     val approx = c.select(col("id"), col("pvec"))
@@ -738,11 +719,7 @@ object Similarity {
       .select(col("qid"), col("id"), VF.cosineSim(col("cvec"), col("qvec")).as("cosine"))
       .withColumn("rank", row_number().over(wK))
       .where(col("rank") <= k)
-    if (materialize) {
-      val cut = graft.util.Materialize.cut(out)
-      c.unpersist()
-      cut
-    } else out // plan-inspection mode: caller owns cache release
+    Materialize.result(out)
   }
 
   /** MMR (maximal marginal relevance) diversified top-k: greedily pick
@@ -771,7 +748,7 @@ object Similarity {
               poolK: Int = 20, k: Int = 5,
               lam: Double = 0.7, lamCompl: Double = 0.3): DataFrame = {
     require(k >= 1 && poolK >= k, s"need poolK >= k >= 1, got k=$k poolK=$poolK")
-    val pool = graft.util.Materialize.cut(
+    val pool = Materialize.cut(
       bruteForceTopK(corpus, corpusId, corpusVec,
           queries, queryId, queryVec, poolK)
         .select(col("qid"), col("id"), col("cosine").as("rel")))
@@ -781,7 +758,7 @@ object Similarity {
     // unique column names throughout the greedy stage — every frame below
     // descends from the same pool cut, and name-unique conditions keep the
     // self-joins unambiguous
-    val pairs = graft.util.Materialize.cut(
+    val pairs = Materialize.cut(
       poolV.as("a").join(poolV.as("b"),
           col("a.qid") === col("b.qid") && col("a.id") =!= col("b.id"))
         .select(col("a.qid").as("pqid"), col("a.id").as("id_a"),
@@ -796,7 +773,7 @@ object Similarity {
     // O(1) and each round's work O(pool) (guide §3.3: very wide plans;
     // measured at sf0.1, k = 5: 6.2 s → 1.9 s in the full bench,
     // 7.3 s → 4.3 s solo cold-JVM)
-    var all = graft.util.Materialize.cut(
+    var all = Materialize.cut(
       pool.select(col("qid"), col("id"), col("rel").as("score"))
         .withColumn("__rn", row_number().over(wSel)).where(col("__rn") === 1)
         .select(col("qid"), col("id"), lit(1).as("rank"),
@@ -816,14 +793,13 @@ object Similarity {
         .withColumn("__rn", row_number().over(wSel)).where(col("__rn") === 1)
         .select(col("qid"), col("id"), lit(i).as("rank"),
                 col("score").as("mmr_score"))
-      val grown = graft.util.Materialize.cut(all.unionByName(next))
-      graft.util.Materialize.releaseNow(all)
+      val grown = Materialize.cut(all.unionByName(next))
+      Materialize.release(all)
       all = grown
     }
-    val out = all
-    graft.util.Materialize.releaseNow(pool)
-    graft.util.Materialize.releaseNow(pairs)
-    out
+    Materialize.release(pool)
+    Materialize.release(pairs)
+    all
   }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) of retriever rankings:

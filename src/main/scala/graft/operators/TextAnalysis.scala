@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 import graft.functions.{TextFunctions => TF}
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -89,20 +89,14 @@ object TextAnalysis {
                        groupCol: String, sizeCol: String,
                        minScore: Long, langs: Seq[String],
                        maxDupPpm: Long, maxTopPpm: Long,
-                       maxPerGroup: Int, ns: Seq[Int] = Seq(2),
-                       materialize: Boolean = true): DataFrame = {
-    val keptBase = gopherFilter(df, idCol, textCol, minScore, langs,
-      maxDupPpm, maxTopPpm, ns)
-    val kept = if (materialize) keptBase.saltedPersist() else keptBase
+                       maxPerGroup: Int, ns: Seq[Int] = Seq(2)): DataFrame = Materialize.scope {
+    val kept = Materialize.persist(gopherFilter(df, idCol, textCol, minScore, langs,
+      maxDupPpm, maxTopPpm, ns))
     val surv = Dedup.normalizedSurvivors(kept, idCol, textCol)
       .select(col(idCol), col("n_copies"))
     val out = Sampling.capPerGroup(kept.join(surv, Seq(idCol)), groupCol,
       maxPerGroup, order = Seq(col(sizeCol).desc, col(idCol).asc))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      kept.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Vocabulary coverage curve — the tokenizer-sizing diagnostic: the share
@@ -112,12 +106,11 @@ object TextAnalysis {
     * the vocabulary-sized count table — no global single-task window), tie
     * broken (count desc, token asc) so the cut is a total order. */
   def vocabCoverage(df: DataFrame, textCol: String,
-                    ns: Seq[Int] = Seq(100, 1000)): DataFrame = {
+                    ns: Seq[Int] = Seq(100, 1000)): DataFrame = Materialize.scope {
     require(ns.nonEmpty && ns.forall(_ >= 1), "coverage sizes must be >= 1")
-    val counts = df.select(explode(TF.tokens(col(textCol))).as("tok"))
+    val counts = Materialize.persist(df.select(explode(TF.tokens(col(textCol))).as("tok"))
       .where(col("tok") =!= "")
-      .groupBy("tok").agg(count(lit(1)).as("c"))
-      .saltedPersist() // reused by the total and every N's top-k cut
+      .groupBy("tok").agg(count(lit(1)).as("c"))) // reused by the total and every N's top-k cut
     val total = counts.agg(sum("c").as("total_occ"))
     val rows = ns.map { n =>
       counts.orderBy(col("c").desc, col("tok").asc).limit(n)
@@ -127,9 +120,7 @@ object TextAnalysis {
     val out = rows.crossJoin(total)
       .withColumn("covered_frac",
         col("covered_occ").cast("double") / col("total_occ").cast("double"))
-    val res = graft.util.Materialize.cut(out)
-    counts.unpersist()
-    res
+    Materialize.result(out)
   }
 
   /** Stage-by-stage per-group retention report of [[curationPipeline]] —
@@ -146,9 +137,9 @@ object TextAnalysis {
                      groupCol: String, sizeCol: String,
                      minScore: Long, langs: Seq[String],
                      maxDupPpm: Long, maxTopPpm: Long,
-                     maxPerGroup: Int, ns: Seq[Int] = Seq(2)): DataFrame = {
-    val kept = gopherFilter(df, idCol, textCol, minScore, langs,
-      maxDupPpm, maxTopPpm, ns).saltedPersist()
+                     maxPerGroup: Int, ns: Seq[Int] = Seq(2)): DataFrame = Materialize.scope {
+    val kept = Materialize.persist(gopherFilter(df, idCol, textCol, minScore, langs,
+      maxDupPpm, maxTopPpm, ns))
     val surv = Dedup.normalizedSurvivors(kept, idCol, textCol)
       .select(col(idCol))
     val deduped = kept.join(surv, Seq(idCol), "left_semi")
@@ -165,9 +156,7 @@ object TextAnalysis {
       .unionByName(stage(capped, 4, "cap"))
       .withColumn("retained_frac", col("docs").cast("double") /
         max(when(col("stage") === 1, col("docs"))).over(w).cast("double"))
-    val res = graft.util.Materialize.cut(out)
-    kept.unpersist()
-    res
+    Materialize.result(out)
   }
 
   /** Gopher-style repetition signals (Rae et al. 2021, appendix A1.1): per
@@ -189,10 +178,10 @@ object TextAnalysis {
     * themselves and lands on identical integers. Docs shorter than `n`
     * tokens report zero n-grams rather than vanishing. */
   def repetitionReport(df: DataFrame, idCol: String, textCol: String,
-                       ns: Seq[Int] = Seq(2, 3)): DataFrame = {
+                       ns: Seq[Int] = Seq(2, 3)): DataFrame = Materialize.scope {
     require(ns.nonEmpty && ns.forall(_ >= 1), "n-gram sizes must be >= 1")
-    val toks = df.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("tk"))
-      .saltedPersist() // barrier: keep tokens() out of the n-gram lambdas
+    // barrier: keep tokens() out of the n-gram lambdas
+    val toks = Materialize.persist(df.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("tk")))
     val perN = ns.map { n =>
       val grams = toks.select(col("id"), explode(
         when(size(col("tk")) >= n,
@@ -217,9 +206,7 @@ object TextAnalysis {
               coalesce(col("total"), lit(0L)).as("total_ngrams"),
               coalesce(col("dup_ppm"), lit(0L)).as("dup_ppm"),
               coalesce(col("top_ppm"), lit(0L)).as("top_ppm"))
-    val res = graft.util.Materialize.cut(out)
-    toks.unpersist()
-    res
+    Materialize.result(out)
   }
 
   /** Corpus length-distribution report per group: exact interpolated
@@ -457,15 +444,12 @@ object TextAnalysis {
                           benchmark: DataFrame, benchText: String,
                           shingleN: Int = 3,
                           estimatedBenchShingles: Long = 1000000L,
-                          numBits: Long = 8000000L,
-                          materialize: Boolean = true): DataFrame = {
-    val benchShBase = benchmark
+                          numBits: Long = 8000000L): DataFrame = Materialize.scope {
+    val benchSh = Materialize.persist(benchmark
       .select(explode(TF.shingleHashes(col(benchText), shingleN)).as("h"))
-      .distinct()
-    val benchSh = if (materialize) benchShBase.saltedPersist() else benchShBase
-    val shBase = corpus.select(col(idCol),
-      TF.shingleHashes(col(textCol), shingleN).as("hs"))
-    val sh = if (materialize) shBase.saltedPersist() else shBase
+      .distinct())
+    val sh = Materialize.persist(corpus.select(col(idCol),
+      TF.shingleHashes(col(textCol), shingleN).as("hs")))
     val totals = sh.select(col(idCol), size(col("hs")).cast("long").as("n_shingles"))
     val out = shingleBloom(benchSh, "h", estimatedBenchShingles, numBits) match {
       case None => // empty bench set: nothing can be contaminated
@@ -480,11 +464,7 @@ object TextAnalysis {
           .na.fill(0L, Seq("n_hits"))
           .withColumn("contaminated", col("n_hits") > 0L)
     }
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      sh.unpersist(); benchSh.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Fraction-thresholded decontamination — the published n-gram-overlap
@@ -544,21 +524,17 @@ object TextAnalysis {
     * funnels the whole corpus through ONE task. This is the standard
     * scale-out shape for any global cumulative quantity. */
   def packingOffsets(df: DataFrame, idCol: String, textCol: String,
-                     seqLen: Long): DataFrame = {
+                     seqLen: Long): DataFrame = Materialize.scope {
     require(seqLen > 0, "seqLen must be positive")
-    val (offs, persisted) = withPrefixOffsets(
+    val offs = withPrefixOffsets(
       df, idCol, TF.bpeishTokenCount(col(textCol)), "n_tokens")
-    try {
-      graft.util.Materialize.cut( // eager: materialize before releasing the
-        // sort cache; tracked so Materialize.release() frees the blocks
-        offs
-          .withColumn("chunk_start", expr(s"offset DIV $seqLen"))
-          .withColumn("chunk_end",
-            when(col("n_tokens") > 0, expr(s"(offset + n_tokens - 1) DIV $seqLen"))
-              .otherwise(expr(s"offset DIV $seqLen")))
-          .select(col(idCol), col("n_tokens"), col("offset"),
-                  col("chunk_start"), col("chunk_end")))
-    } finally { persisted.unpersist(); () }
+    Materialize.result(offs
+      .withColumn("chunk_start", expr(s"offset DIV $seqLen"))
+      .withColumn("chunk_end",
+        when(col("n_tokens") > 0, expr(s"(offset + n_tokens - 1) DIV $seqLen"))
+          .otherwise(expr(s"offset DIV $seqLen")))
+      .select(col(idCol), col("n_tokens"), col("offset"),
+              col("chunk_start"), col("chunk_end")))
   }
 
   /** Size-targeted output-shard assignment — the write-layout planner for
@@ -574,15 +550,12 @@ object TextAnalysis {
     * Same two-pass distributed prefix sum as [[packingOffsets]] — no
     * single-task global window at any scale. */
   def packShards(df: DataFrame, idCol: String, size: org.apache.spark.sql.Column,
-                 shardBytes: Long): DataFrame = {
+                 shardBytes: Long): DataFrame = Materialize.scope {
     require(shardBytes > 0, "shardBytes must be positive")
-    val (offs, persisted) = withPrefixOffsets(df, idCol, size, "n_bytes")
-    try {
-      graft.util.Materialize.cut(
-        offs
-          .withColumn("shard_id", expr(s"offset DIV $shardBytes"))
-          .select(col(idCol), col("n_bytes"), col("offset"), col("shard_id")))
-    } finally { persisted.unpersist(); () }
+    val offs = withPrefixOffsets(df, idCol, size, "n_bytes")
+    Materialize.result(offs
+      .withColumn("shard_id", expr(s"offset DIV $shardBytes"))
+      .select(col(idCol), col("n_bytes"), col("offset"), col("shard_id")))
   }
 
   /** Deterministic BERT-style MLM masking plan: every (document, token
@@ -710,17 +683,17 @@ object TextAnalysis {
   def spanCorruptionApply(df: DataFrame, idCol: String, textCol: String,
                           startPpm: Long = 50000L, maxSpanLen: Int = 5,
                           seed: Long = 31L,
-                          maxPositions: Long = 100000L): DataFrame = {
+                          maxPositions: Long = 100000L): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     // the span plan feeds THREE consumers (segment assembly, per-doc span
     // ends, the untouched-docs anti-join) and is itself an explode + two
     // windows + aggregate — cut it once; likewise persist the tokenized
     // corpus, consumed by three subtrees (tokenization is the per-row CPU)
-    val plan = graft.util.Materialize.cut(
+    val plan = Materialize.cut(
       spanCorruptionPlan(df, idCol, textCol, startPpm, maxSpanLen,
         seed, maxPositions))
-    val toks = df.select(col(idCol).as("doc_id"), TF.tokens(col(textCol)).as("tk"))
-      .saltedPersist()
+    val toks = Materialize.persist(
+      df.select(col(idCol).as("doc_id"), TF.tokens(col(textCol)).as("tk")))
     val w = Window.partitionBy("doc_id").orderBy("span_start")
     val withFrom = plan.withColumn("seg_from",
       coalesce(lag(col("span_end"), 1).over(w), lit(0L)))
@@ -760,10 +733,7 @@ object TextAnalysis {
       .join(plan.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), array_join(col("tk"), " ").as("input_text"),
         lit("").as("target_text"))
-    val out = graft.util.Materialize.cut(corrupted.unionByName(untouched))
-    toks.unpersist()
-    graft.util.Materialize.releaseNow(plan)
-    out
+    Materialize.result(corrupted.unionByName(untouched))
   }
 
   /** Hashing-trick featurizer (Weinberger 2009): tokens are projected
@@ -938,34 +908,32 @@ object TextAnalysis {
     * the ENTERING weights), and the weights AFTER that epoch's update. */
   def perceptronEpochs(df: DataFrame, label: org.apache.spark.sql.Column,
                        feats: Seq[org.apache.spark.sql.Column],
-                       epochs: Int = 4): DataFrame = {
+                       epochs: Int = 4): DataFrame = Materialize.scope {
     require(epochs >= 1 && epochs <= 20, s"epochs must be in [1, 20], got $epochs")
     require(feats.nonEmpty && feats.size <= 16, "need 1..16 feature columns")
     val nf = feats.size + 1 // + bias
     val xs = (lit(1L) +: feats.map(_.cast("long"))).zipWithIndex
       .map { case (c, i) => c.as(s"x$i") }
-    val data = df.select((label.cast("long").as("y") +: xs): _*).saltedPersist()
-    try {
-      var w = Array.fill(nf)(0L)
-      val rows = (1 to epochs).map { ep =>
-        val margin = (0 until nf).map(i => lit(w(i)) * col(s"x$i"))
-          .reduce(_ + _)
-        val err = data.where(col("y") * margin <= 0L)
-        val aggs = count(lit(1)).as("n") +:
-          (0 until nf).map(i => sum(col("y") * col(s"x$i")).as(s"d$i"))
-        val r = err.agg(aggs.head, aggs.tail: _*).head()
-        val nErr = r.getAs[Long]("n")
-        for (i <- 0 until nf)
-          w(i) += (if (nErr == 0L) 0L else r.getAs[Long](s"d$i"))
-        (ep, nErr, w.toSeq)
-      }
-      val spark = df.sparkSession
-      import spark.implicits._
-      rows.map { case (ep, n, ws) => (ep.toLong, n, ws) }
-        .toDF("epoch", "n_err", "w")
-        .select(col("epoch") +: col("n_err") +:
-          (0 until nf).map(i => element_at(col("w"), i + 1).as(s"w$i")): _*)
-    } finally { data.unpersist(); () }
+    val data = Materialize.persist(df.select((label.cast("long").as("y") +: xs): _*))
+    var w = Array.fill(nf)(0L)
+    val rows = (1 to epochs).map { ep =>
+      val margin = (0 until nf).map(i => lit(w(i)) * col(s"x$i"))
+        .reduce(_ + _)
+      val err = data.where(col("y") * margin <= 0L)
+      val aggs = count(lit(1)).as("n") +:
+        (0 until nf).map(i => sum(col("y") * col(s"x$i")).as(s"d$i"))
+      val r = err.agg(aggs.head, aggs.tail: _*).head()
+      val nErr = r.getAs[Long]("n")
+      for (i <- 0 until nf)
+        w(i) += (if (nErr == 0L) 0L else r.getAs[Long](s"d$i"))
+      (ep, nErr, w.toSeq)
+    }
+    val spark = df.sparkSession
+    import spark.implicits._
+    rows.map { case (ep, n, ws) => (ep.toLong, n, ws) }
+      .toDF("epoch", "n_err", "w")
+      .select(col("epoch") +: col("n_err") +:
+        (0 until nf).map(i => element_at(col("w"), i + 1).as(s"w$i")): _*)
   }
 
   /** Quality-first token-budget cut — "take the best documents until the
@@ -988,7 +956,7 @@ object TextAnalysis {
   def tokenBudgetCut(df: DataFrame, idCol: String,
                      quality: org.apache.spark.sql.Column,
                      tokens: org.apache.spark.sql.Column,
-                     budget: Long, maxQuality: Long = 1000L): DataFrame = {
+                     budget: Long, maxQuality: Long = 1000L): DataFrame = Materialize.scope {
     require(budget > 0, "budget must be positive")
     require(maxQuality > 0, "maxQuality must be positive")
     val idScale = 1000000000000L
@@ -996,14 +964,11 @@ object TextAnalysis {
         quality.cast("long").as("__q"), tokens.cast("long").as("__n"))
       .select(((lit(maxQuality) - col("__q")) * idScale + col(idCol)).as("__k"),
         col("__n"))
-    val (offs, persisted) = withPrefixOffsets(keyed, "__k", col("__n"), "n_tokens")
-    try {
-      graft.util.Materialize.cut(
-        offs.where(col("offset") < budget)
-          .select((col("__k") % idScale).as(idCol),
-                  (lit(maxQuality) - expr(s"__k DIV $idScale")).as("quality"),
-                  col("n_tokens"), col("offset")))
-    } finally { persisted.unpersist(); () }
+    val offs = withPrefixOffsets(keyed, "__k", col("__n"), "n_tokens")
+    Materialize.result(offs.where(col("offset") < budget)
+      .select((col("__k") % idScale).as(idCol),
+              (lit(maxQuality) - expr(s"__k DIV $idScale")).as("quality"),
+              col("n_tokens"), col("offset")))
   }
 
   /** Context-window packing manifest — the loader-facing output of GPT-style
@@ -1032,30 +997,27 @@ object TextAnalysis {
     * window); the window explode is narrow — each document emits
     * `ceil`-bounded segments with no shuffle after the prefix sum. */
   def packManifest(df: DataFrame, idCol: String, textCol: String,
-                   seqLen: Long): DataFrame = {
+                   seqLen: Long): DataFrame = Materialize.scope {
     require(seqLen > 0, "seqLen must be positive")
     // n_tokens counts the EOS sentinel, so every document occupies >= 1 slot
     // and the window span below is never empty; NULL text packs like empty
     // text (one EOS slot) — unguarded, size(null) would poison the count
-    val (offs, persisted) = withPrefixOffsets(
+    val offs = withPrefixOffsets(
       df, idCol,
       TF.bpeishTokenCount(coalesce(col(textCol), lit(""))) + lit(1L),
       "n_tokens")
-    try {
-      val wStart = col("window_id") * seqLen
-      val segStart = greatest(col("offset"), wStart)
-      graft.util.Materialize.cut(
-        offs
-          .select(col(idCol), col("n_tokens"), col("offset"),
-            explode(sequence(
-              expr(s"offset DIV $seqLen"),
-              expr(s"(offset + n_tokens - 1) DIV $seqLen"))).as("window_id"))
-          .select(col(idCol), col("window_id"),
-            (segStart - wStart).as("win_tok_start"),
-            (segStart - col("offset")).as("doc_tok_start"),
-            (least(col("offset") + col("n_tokens"), wStart + seqLen) - segStart)
-              .as("seg_len")))
-    } finally { persisted.unpersist(); () }
+    val wStart = col("window_id") * seqLen
+    val segStart = greatest(col("offset"), wStart)
+    Materialize.result(offs
+      .select(col(idCol), col("n_tokens"), col("offset"),
+        explode(sequence(
+          expr(s"offset DIV $seqLen"),
+          expr(s"(offset + n_tokens - 1) DIV $seqLen"))).as("window_id"))
+      .select(col(idCol), col("window_id"),
+        (segStart - wStart).as("win_tok_start"),
+        (segStart - col("offset")).as("doc_tok_start"),
+        (least(col("offset") + col("n_tokens"), wStart + seqLen) - segStart)
+          .as("seg_len")))
   }
 
   /** Apply [[packManifest]] — materialize the actual training windows:
@@ -1175,17 +1137,16 @@ object TextAnalysis {
     * doc partitions. `nDocs` is one driver-side scalar (the count), not
     * collected data. */
   def tfidfTopK(df: DataFrame, idCol: String, textCol: String,
-                k: Int = 5, materialize: Boolean = true): DataFrame = {
+                k: Int = 5): DataFrame = Materialize.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     val nDocs = df.count().toDouble
     // tf feeds BOTH the document-frequency reduction and the scoring join;
     // without the persist barrier the scan + explode + first shuffle
     // execute twice (the two exchange subtrees differ, so ReuseExchange
     // cannot dedup them)
-    val tfBase = df.select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
+    val tf = Materialize.persist(df.select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val tf = if (materialize) tfBase.saltedPersist() else tfBase
+      .agg(count(lit(1)).as("tf")))
     val dfr = tf.groupBy(col("term")).agg(count(lit(1)).as("df_docs"))
     val scored = tf.join(dfr, "term")
       .withColumn("score",
@@ -1196,11 +1157,7 @@ object TextAnalysis {
       .where(col("rank") <= k)
       .select(col(idCol), col("term"), col("tf"), col("df_docs"),
               col("score"), col("rank"))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      tf.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Token-commonness report: per document, the mean corpus frequency of
@@ -1214,13 +1171,12 @@ object TextAnalysis {
     * one exact-rounded division — so the oracle compares bit-equal.
     * Scale shape matches tf-idf: one token explode, term counts reduced
     * from the same table, partial aggregation on both sides. */
-  def commonnessReport(df: DataFrame, idCol: String, textCol: String,
-                       materialize: Boolean = true): DataFrame = {
+  def commonnessReport(df: DataFrame, idCol: String, textCol: String): DataFrame = Materialize.scope {
     // same double-consumer shape as tfidfTopK's `tf`: the token explode
     // feeds the term-count reduction AND the scoring join — persist so the
     // corpus scans once
     val toksBase = df.select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
-    val toks = if (materialize) toksBase.saltedPersist() else toksBase
+    val toks = Materialize.persist(toksBase)
     val termCounts = toks.groupBy(col("term"))
       .agg(count(lit(1)).as("term_freq"))
     val out = toks.join(termCounts, "term")
@@ -1230,11 +1186,7 @@ object TextAnalysis {
            sum(when(col("term_freq") === 1L, 1L).otherwise(0L)).as("n_hapax"))
       .withColumn("mean_freq",
         col("sum_freq").cast("double") / col("n_tokens").cast("double"))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      toks.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Token co-occurrence lift — PMI without the logarithm: for tokens a, b
@@ -1255,8 +1207,7 @@ object TextAnalysis {
     * n_docs rides broadcast one-row cross joins — no driver collect. */
   def cooccurrenceLift(df: DataFrame, idCol: String, textCol: String,
                        minDf: Long = 5L, maxDfFrac: Double = 0.9,
-                       minPair: Long = 5L, minTokenLen: Int = 3,
-                       materialize: Boolean = true): DataFrame = {
+                       minPair: Long = 5L, minTokenLen: Int = 3): DataFrame = Materialize.scope {
     require(minDf >= 1L, s"need minDf >= 1, got $minDf")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0,
       s"maxDfFrac must be in (0, 1], got $maxDfFrac")
@@ -1267,7 +1218,7 @@ object TextAnalysis {
     val toksBase = df.select(col(idCol).as("id"),
         explode(array_distinct(TF.tokens(col(textCol)))).as("tok"))
       .where(length(col("tok")) >= minTokenLen)
-    val toks = if (materialize) toksBase.saltedPersist() else toksBase
+    val toks = Materialize.persist(toksBase)
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nd))
       .where(col("df") >= minDf &&
@@ -1286,11 +1237,7 @@ object TextAnalysis {
       .withColumn("lift", col("pair_n").cast("double") * col("n_docs") /
         (col("df_a") * col("df_b")).cast("double"))
       .select("tok_a", "tok_b", "pair_n", "df_a", "df_b", "lift")
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      toks.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** Corpus-fit scoring against a bigram language model trained on the
@@ -1332,11 +1279,10 @@ object TextAnalysis {
     * bigram table (vocabulary-bounded, one shuffle each on h1 / h2) plus
     * a one-row broadcast for N1+(··); scoring is one equi-join of the
     * occurrence table against the rate table. */
-  def kneserNeyScore(df: DataFrame, idCol: String, textCol: String,
-                     materialize: Boolean = true): DataFrame = {
+  def kneserNeyScore(df: DataFrame, idCol: String, textCol: String): DataFrame = Materialize.scope {
     val W = org.apache.spark.sql.expressions.Window
     val toksBase = df.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("tk"))
-    val toks = if (materialize) toksBase.saltedPersist() else toksBase
+    val toks = Materialize.persist(toksBase)
     val bgBase = toks.select(col("id"), explode(
         when(size(col("tk")) >= 2,
             transform(sequence(lit(0), size(col("tk")) - 2), i => struct(
@@ -1348,7 +1294,7 @@ object TextAnalysis {
         .as("bgs"))
       .select(col("id"), col("bgs.h1").as("h1"), col("bgs.h2").as("h2"),
               col("bgs.h12").as("h12"))
-    val bg = if (materialize) bgBase.saltedPersist() else bgBase
+    val bg = Materialize.persist(bgBase)
     val c2t = bg.groupBy(col("h1"), col("h2"), col("h12"))
       .agg(count(lit(1)).as("c2"))
     val nb = c2t.agg(count(lit(1)).as("nbi"))
@@ -1375,17 +1321,12 @@ object TextAnalysis {
         when(col("n_bigrams").isNotNull, expr("sum_ppm DIV n_bigrams"))
           .otherwise(lit(0L)).as("avg_ppm"),
         coalesce(col("min_ppm"), lit(0L)).as("min_ppm"))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      bg.unpersist(); toks.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
-  def lmScore(df: DataFrame, idCol: String, textCol: String,
-              materialize: Boolean = true): DataFrame = {
+  def lmScore(df: DataFrame, idCol: String, textCol: String): DataFrame = Materialize.scope {
     val toksBase = df.select(col(idCol).as("id"), TF.tokens(col(textCol)).as("tk"))
-    val toks = if (materialize) toksBase.saltedPersist() else toksBase
+    val toks = Materialize.persist(toksBase)
     // one row per bigram OCCURRENCE: h1 = hash of the context token,
     // h12 = chained hash of the pair (Spark's multi-arg xxhash64)
     val bgBase = toks.select(col("id"), explode(
@@ -1397,7 +1338,7 @@ object TextAnalysis {
           .otherwise(array().cast("array<struct<h1:bigint,h12:bigint>>")))
         .as("bgs"))
       .select(col("id"), col("bgs.h1").as("h1"), col("bgs.h12").as("h12"))
-    val bg = if (materialize) bgBase.saltedPersist() else bgBase
+    val bg = Materialize.persist(bgBase)
     val c2t = bg.groupBy(col("h1"), col("h12")).agg(count(lit(1)).as("c2"))
     // context counts c(w1·) as a whole-partition window over the DISTINCT
     // bigram table — one shuffle on h1, no self-join, and c2t feeds exactly
@@ -1422,11 +1363,7 @@ object TextAnalysis {
         when(col("n_bigrams").isNotNull, expr("sum_ppm DIV n_bigrams"))
           .otherwise(lit(0L)).as("avg_ppm"),
         coalesce(col("min_ppm"), lit(0L)).as("min_ppm"))
-    if (materialize) {
-      val res = graft.util.Materialize.cut(out)
-      bg.unpersist(); toks.unpersist()
-      res
-    } else out
+    Materialize.result(out)
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020 §4.3): documents
@@ -1454,10 +1391,9 @@ object TextAnalysis {
     * right default everywhere the group count exceeds the cluster's
     * parallelism deficit. */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-                        groupCol: String, buckets: Int = 3,
-                        materialize: Boolean = true): DataFrame = {
+                        groupCol: String, buckets: Int = 3): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val scored = lmScore(df, idCol, textCol, materialize)
+    val scored = lmScore(df, idCol, textCol)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol))
       .orderBy(col("avg_ppm").desc, col(idCol).asc)
@@ -1572,29 +1508,23 @@ object TextAnalysis {
     df.select(col(idCol), posexplode(ids).as(Seq("pos", "token_id")))
   }
 
-  /** Test hook: exposes the pre-materialization prefix-sum plan so PlanSpec
-    * can pin the within-partition window shape. */
-  private[graft] def prefixOffsetsForTest(df: DataFrame, idCol: String,
-      size: org.apache.spark.sql.Column, sizeName: String): (DataFrame, DataFrame) =
-    withPrefixOffsets(df, idCol, size, sizeName)
-
   /** Two-pass distributed global prefix sum over `size` in `idCol` order:
     * per-sort-partition subtotals (one tiny row per partition) are
     * collected, turned into cumulative bases, and added to a
     * WITHIN-partition window — the naive `Window.orderBy(id)` with no
     * partitioning funnels the whole corpus through ONE task. Returns the
-    * frame with `(idCol, sizeName, offset)` columns plus the persisted
-    * intermediate the caller must unpersist after materializing. */
-  private[operators] def withPrefixOffsets(df: DataFrame, idCol: String,
-                                size: org.apache.spark.sql.Column,
-                                sizeName: String): (DataFrame, DataFrame) = {
+    * frame with `(idCol, sizeName, offset)` columns; its sorted
+    * intermediate is persisted in the caller's scope. */
+  private[graft] def withPrefixOffsets(df: DataFrame, idCol: String,
+                                       size: org.apache.spark.sql.Column,
+                                       sizeName: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sorted = df
       .select(col(idCol), size.cast("long").as(sizeName))
       .repartitionByRange(col(idCol))
       .sortWithinPartitions(col(idCol))
       .withColumn("__pid", spark_partition_id())
-    val persisted = sorted.saltedPersist()
+    val persisted = Materialize.persist(sorted)
     // pass 1: per-partition totals — numPartitions rows, driver-bounded
     val totals = persisted.groupBy("__pid").agg(sum(sizeName).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -1611,9 +1541,8 @@ object TextAnalysis {
     // pass 2: within-partition prefix sum + partition base
     val w = Window.partitionBy("__pid").orderBy(idCol)
       .rowsBetween(Window.unboundedPreceding, -1)
-    (persisted.withColumn("offset",
-       baseCol + coalesce(sum(sizeName).over(w), lit(0L))),
-     persisted)
+    persisted.withColumn("offset",
+      baseCol + coalesce(sum(sizeName).over(w), lit(0L)))
   }
 
   /** Vocabulary report per group: exact distinct-token count (shuffle
@@ -1669,8 +1598,8 @@ object TextAnalysis {
     * OOM exactly where the distributed fallback would have been the
     * safer path. Raise it only against a driver sized for it. */
   def bpeMerges(df: DataFrame, textCol: String, numMerges: Int,
-                maxDriverWords: Long = 1L << 20): DataFrame = {
-    val freq = wordCounts(df, textCol).saltedPersist()
+                maxDriverWords: Long = 1L << 20): DataFrame = Materialize.scope {
+    val freq = Materialize.persist(wordCounts(df, textCol))
     bpeMergesFromCounts(freq, numMerges, maxDriverWords, ownsCache = true)
   }
 
@@ -1685,28 +1614,33 @@ object TextAnalysis {
 
   /** [[bpeMerges]] over a PREBUILT (persisted) word-frequency table.
     * `ownsCache = false` leaves the caller's persist untouched (the
-    * shared-base path); `true` releases it exactly where the single-use
-    * path used to. */
+    * shared-base path); `true` releases it as soon as it is consumed. */
   private[graft] def bpeMergesFromCounts(freq: DataFrame, numMerges: Int,
                                          maxDriverWords: Long,
                                          ownsCache: Boolean): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = freq.sparkSession
-    val nWords = freq.count()
-    if (nWords <= maxDriverWords) {
-      val table = freq.collect().map(r => (r.getString(0), r.getLong(1)))
-      if (ownsCache) freq.unpersist()
-      return spark.createDataFrame(localBpeMerges(table, numMerges))
-        .toDF("rank", "left", "right", "weight")
-    }
+    val merges =
+      if (freq.count() <= maxDriverWords) {
+        val table = freq.collect().map(r => (r.getString(0), r.getLong(1)))
+        if (ownsCache) Materialize.release(freq)
+        localBpeMerges(table, numMerges)
+      } else Materialize.scope(distributedBpeMerges(freq, numMerges, ownsCache))
+    spark.createDataFrame(merges).toDF("rank", "left", "right", "weight")
+  }
+
+  /** The per-iteration distributed fallback of [[bpeMergesFromCounts]]:
+    * one argmax job and one fold stage per merge, each stage persisted in
+    * the caller's scope and released once the next one is materialized. */
+  private def distributedBpeMerges(freq: DataFrame, numMerges: Int,
+                                   ownsCache: Boolean): Seq[(Int, String, String, Long)] = {
     // char split: substr is 1-based; transform over 1..len
     val charSplit = transform(sequence(lit(1), length(col("w"))),
       i => col("w").substr(i, lit(1)))
-    var words = freq
-      .select(col("cnt"), charSplit.as("syms"))
-      .saltedPersist()
+    var words = Materialize.persist(freq
+      .select(col("cnt"), charSplit.as("syms")))
     words.count() // materialize off the freq cache before releasing it
-    if (ownsCache) freq.unpersist()
+    if (ownsCache) Materialize.release(freq)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var prev: DataFrame = null
     var exhausted = false
@@ -1737,16 +1671,13 @@ object TextAnalysis {
             concat(slice(acc, lit(1), size(acc) - 1),
                    array(concat(element_at(acc, size(acc)), s))))
             .otherwise(concat(acc, array(s))))
-        if (prev != null) prev.unpersist()
+        if (prev != null) Materialize.release(prev)
         prev = words
-        words = words.select(col("cnt"), fold.as("syms")).saltedPersist()
+        words = Materialize.persist(words.select(col("cnt"), fold.as("syms")))
         words.count() // materialize this stage so the next argmax does one fold, not rank folds
       }
     }
-    if (prev != null) prev.unpersist()
-    words.unpersist()
-    spark.createDataFrame(merges.toSeq)
-      .toDF("rank", "left", "right", "weight")
+    merges.toSeq
   }
 
   /** Driver-local BPE merge loop over the collected word-frequency table —
@@ -1997,16 +1928,12 @@ object TextAnalysis {
     * documented contract in [[graft.functions.UnigramSegmentExpr]]). */
   def unigramTrain(df: DataFrame, textCol: String, vocabSize: Int,
                    maxPieceLen: Int, maxWordLen: Int,
-                   emIters: Int): Seq[(String, Long)] = {
-    val words = df
+                   emIters: Int): Seq[(String, Long)] = Materialize.scope {
+    val words = Materialize.persist(df
       .select(explode(TF.tokens(col(textCol))).as("w"))
       .where(length(col("w")) > 0 && length(col("w")) <= maxWordLen)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .saltedPersist()
-    val vocab = unigramTrainFromCounts(words, vocabSize, maxPieceLen,
-      maxWordLen, emIters)
-    words.unpersist()
-    vocab
+      .groupBy("w").agg(count(lit(1)).as("cnt")))
+    unigramTrainFromCounts(words, vocabSize, maxPieceLen, maxWordLen, emIters)
   }
 
   /** [[unigramTrain]]'s EM loop over a PREBUILT (persisted) `(w, cnt)`
@@ -2131,15 +2058,14 @@ object TextAnalysis {
                                 maxWordLen: Int = 12,
                                 emIters: Int = 2): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    val wc = wordCounts(df, textCol).saltedPersist()
-    val merges = bpeMergesFromCounts(wc, numMerges,
-        maxDriverWords = 1L << 20, ownsCache = false)
-      .orderBy("rank").collect()
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))
-    val vocab = unigramTrainFromCounts(
-      wc.where(length(col("w")) <= maxWordLen),
-      vocabSize, maxPieceLen, maxWordLen, emIters).toMap
-    wc.unpersist()
+    val (merges, vocab) = Materialize.scope {
+      val wc = Materialize.persist(wordCounts(df, textCol))
+      (bpeMergesFromCounts(wc, numMerges, maxDriverWords = 1L << 20, ownsCache = false)
+         .orderBy("rank").collect()
+         .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))),
+       unigramTrainFromCounts(wc.where(length(col("w")) <= maxWordLen),
+         vocabSize, maxPieceLen, maxWordLen, emIters).toMap)
+    }
     def segW(w: Column): Column = column(graft.functions.UnigramSegmentExpr(
       expression(w), vocab, maxPieceLen, maxWordLen))
     def tokSum(ew: Column): Column =
@@ -2312,13 +2238,13 @@ object TextAnalysis {
   def bloomDecontaminate(corpus: DataFrame, idCol: String, textCol: String,
                          bench: DataFrame, benchText: String,
                          numBits: Int, numHashes: Int): DataFrame = {
-    val benchH = graft.util.Materialize.cut(
+    val benchH = Materialize.cut(
       shingleHashRows(bench, benchText, Nil).select(col("__h")).distinct())
     val words = benchH.agg(graft.functions.Sketches
       .bloomBits(col("__h"), numBits, numHashes).as("words"))
     // (id, hash) distinct feeds BOTH the probe and the exact overlay —
     // barrier so the shingle explode runs once
-    val corpusH = graft.util.Materialize.cut(
+    val corpusH = Materialize.cut(
       shingleHashRows(corpus, textCol, Seq(idCol)).distinct())
     val probed = corpusH.crossJoin(broadcast(words))
       .select(col(idCol),
@@ -2435,7 +2361,7 @@ object TextAnalysis {
                          p: Int): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be in [4, 16], got $p")
     val m = 1 << p
-    val sh = graft.util.Materialize.cut(
+    val sh = Materialize.cut(
       shingleHashRows(df, textCol, Seq(groupCol)).distinct())
     val regs = sh.groupBy(col(groupCol).as("g"))
       .agg(graft.functions.Sketches.hllRegisters(col("__h"), p).as("regs"))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 import graft.config.GraftConfig
 import graft.event.Event
 import graft.functions.{Backoff, DumpCodec}
@@ -56,17 +56,16 @@ object Sinks {
   def fanoutEpoch(batch: DataFrame, routes: Seq[Route],
                   writers: Map[String, (DataFrame, Long) => Unit],
                   epoch: Long,
-                  skipAcceptCheckOnSingle: Boolean = true): Unit = {
+                  skipAcceptCheckOnSingle: Boolean = true): Unit = Materialize.scope {
     val routed = assign(batch, routes, skipAcceptCheckOnSingle)
-    val multi = routes.sizeIs > 1
-    // saltedPersist returns the persisted frame (the salt changes the plan),
-    // so the sink filters below must run on ITS return value, not `routed`
-    val assigned = if (multi) routed.saltedPersist() else routed
-    try routes.foreach { r =>
+    // Materialize.persist returns the persisted frame (the salt changes the
+    // plan), so the sink filters below must run on ITS return value
+    val assigned = if (routes.sizeIs > 1) Materialize.persist(routed) else routed
+    routes.foreach { r =>
       writers.get(r.name).foreach { w =>
         w(assigned.where(col("__sink") === r.name).drop("__sink"), epoch)
       }
-    } finally if (multi) { assigned.unpersist(); () }
+    }
   }
 
   // ---- kafka ------------------------------------------------------------

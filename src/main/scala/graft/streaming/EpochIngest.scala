@@ -3,6 +3,7 @@ package graft.streaming
 import graft.config.GraftConfig
 import graft.functions.LongParam
 import graft.operators.{Dedup, GenIndex, Multimodal}
+import graft.util.Materialize
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, size}
@@ -19,14 +20,14 @@ import org.apache.spark.sql.types.StructType
   *                        fresh index is initialized from
   * @param postings        postings input → index rows (without `epoch`)
   * @param probe           `(batch, index of epochs < batchId)` → the lazy
-  *                        survivors in OUTPUT shape plus the persisted
-  *                        intermediates to release after the barrier
+  *                        survivors in OUTPUT shape; the persisted
+  *                        intermediates belong to the caller's scope
   * @param toPostingsInput survivor output rows → postings input */
 final case class IndexKind(
     key: String,
     inputSchema: String,
     postings: DataFrame => DataFrame,
-    probe: (DataFrame, DataFrame) => (DataFrame, Seq[DataFrame]),
+    probe: (DataFrame, DataFrame) => DataFrame,
     toPostingsInput: DataFrame => DataFrame = identity) {
 
   /** Fresh EMPTY index table at `path`, flat or generational (`gen`, which
@@ -67,12 +68,10 @@ object IndexKind {
                dim: Int = 64): IndexKind =
     IndexKind("bucket", "id BIGINT, vec ARRAY<FLOAT>",
       Dedup.buildEmbedPostings(_, lshBits, dim),
-      (batch, index) => {
-        val (decision, caches) = Dedup.embedSurvivorsIndexedLazy(
+      (batch, index) => Dedup.embedSurvivorsIndexedLazy(
           batch.where(col("vec").isNotNull && size(col("vec")) === lit(dim)),
           index, threshold, lshBits, dim)
-        (decision.where(col("survives")).select(col("id"), col("vec")), caches)
-      })
+        .where(col("survives")).select(col("id"), col("vec")))
 
   /** Image fingerprint near-dup: `(id, payload)` batches are decoded once
     * (real ImageIO dHash; undecodable payloads drop before blocking) and
@@ -81,14 +80,11 @@ object IndexKind {
   def hamming(maxHamming: Int = 3): IndexKind =
     IndexKind("bk", "id BIGINT, sh BIGINT",
       Dedup.buildHammingPostings(_, maxHamming),
-      (batch, index) => {
-        val (decision, caches) = Dedup.hammingSurvivorsIndexedLazy(
+      (batch, index) => Dedup.hammingSurvivorsIndexedLazy(
           Multimodal.perceptualHash(batch).where(col("phash").isNotNull)
             .select(col("id"), col("phash").as("sh")),
           index, maxHamming)
-        (decision.where(col("survives"))
-          .select(col("id"), col("sh").as("phash")), caches)
-      },
+        .where(col("survives")).select(col("id"), col("sh").as("phash")),
       _.select(col("id"), col("phash").as("sh")))
 
   /** The composed multimodal DAG's front half: ONE decode pass
@@ -100,15 +96,12 @@ object IndexKind {
   def familyHamming(maxHamming: Int = 3): IndexKind =
     IndexKind("bk", "id BIGINT, sh BIGINT, grp STRING",
       Dedup.buildHammingPostingsKeyed(_, maxHamming),
-      (batch, index) => {
-        val (decision, caches) = Dedup.hammingSurvivorsIndexedKeyedLazy(
+      (batch, index) => Dedup.hammingSurvivorsIndexedKeyedLazy(
           Multimodal.ingestFingerprints(batch).toDF().where(col("fp").isNotNull)
             .select(col("id"), col("fp").as("sh"), col("family").as("grp")),
           index, maxHamming)
-        (decision.where(col("survives"))
-          .select(col("id"), col("grp").as("family"), col("sh").as("phash")),
-          caches)
-      },
+        .where(col("survives"))
+        .select(col("id"), col("grp").as("family"), col("sh").as("phash")),
       _.select(col("id"), col("phash").as("sh"), col("family").as("grp")))
 }
 
@@ -163,18 +156,16 @@ object EpochIngest {
     surv.write.mode("overwrite").parquet(s"$outPath/epoch=$batchId")
 
   /** [[writeEpoch]] as the epoch's MATERIALIZATION BARRIER: computes the
-    * lazy survivor plan directly into the epoch directory (one job),
-    * releases the probe's persisted intermediates, and returns the
-    * survivors re-read from the files just written, so the index append
-    * that follows consumes durable storage instead of re-running the
-    * probe. The write is the epoch's first side effect and an idempotent
-    * overwrite. The read-back carries an explicit schema — an
-    * all-duplicate epoch writes zero data files, which schema inference
+    * lazy survivor plan directly into the epoch directory (one job) and
+    * returns the survivors re-read from the files just written, so the
+    * index append that follows consumes durable storage instead of
+    * re-running the probe. The write is the epoch's first side effect and
+    * an idempotent overwrite. The read-back carries an explicit schema —
+    * an all-duplicate epoch writes zero data files, which schema inference
     * would reject. */
-  private def writeEpochBarrier(survLazy: DataFrame, caches: Seq[DataFrame],
-                                outPath: String, batchId: Long): DataFrame = {
+  private def writeEpochBarrier(survLazy: DataFrame, outPath: String,
+                                batchId: Long): DataFrame = {
     writeEpoch(survLazy, outPath, batchId)
-    caches.foreach(_.unpersist())
     survLazy.sparkSession.read.schema(survLazy.schema)
       .parquet(s"$outPath/epoch=$batchId")
   }
@@ -199,9 +190,12 @@ object EpochIngest {
           compactEvery)
         validated = true
       }
-      val (survLazy, caches) = kind.probe(batch,
-        spark.table(indexTable).where(col("epoch") < LongParam.column(batchId)))
-      val surv = writeEpochBarrier(survLazy, caches, outPath, batchId)
+      // the epoch's scope owns the probe's persists: they are freed once
+      // the barrier write has run, or when it throws
+      val surv = Materialize.scope {
+        writeEpochBarrier(kind.probe(batch, spark.table(indexTable)
+          .where(col("epoch") < LongParam.column(batchId))), outPath, batchId)
+      }
       kind.append(kind.toPostingsInput(surv), indexTable, buckets, batchId)
       if (compactEvery > 0 && indexPath != null &&
           (batchId + 1) % compactEvery == 0)

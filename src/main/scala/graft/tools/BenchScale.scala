@@ -243,12 +243,11 @@ object BenchScale {
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  private def runOnce(spark: SparkSession, name: String, dir: String): Double = {
+  private def runOnce(spark: SparkSession, name: String, dir: String): Double = graft.util.Materialize.scope {
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, dir)
       .write.format("noop").mode("overwrite").save()
     val t = (System.nanoTime() - t0) / 1e9
-    graft.util.Materialize.release()
     t
   }
 
@@ -316,14 +315,13 @@ object BenchScale {
     // exactly the failure mode knnGraph's scaladoc + maxCellSize guard
     // now document.) Training cost (driver k-means on a 2048 sample) is
     // included in the timing.
-    def knnOnce(dir: String, cells: Int): Double = {
+    def knnOnce(dir: String, cells: Int): Double = graft.util.Materialize.scope {
       val t0 = System.nanoTime()
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       graft.operators.Similarity.knnGraph(emb, "vec_id", "embedding", k = 5,
           nCentroids = cells, nProbe = 4)
         .write.format("noop").mode("overwrite").save()
       val t = (System.nanoTime() - t0) / 1e9
-      graft.util.Materialize.release()
       t
     }
     def knnSteady(dir: String, cells: Int): Double = {
@@ -391,7 +389,7 @@ object BenchScaleKernels {
   /** One embedding-ingest run: the three fixed vec_id batch cuts the gate
     * uses (growth lands ~entirely in the last batch), persisted LSH index,
     * `bits` hyperplanes — callers scale bits with log2(corpus). */
-  def embedIngestOnce(spark: SparkSession, dir: String, bits: Int): Double = {
+  def embedIngestOnce(spark: SparkSession, dir: String, bits: Int): Double = graft.util.Materialize.scope {
     val t0 = System.nanoTime()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val batches = Seq((0L, 150L), (150L, 400L), (400L, Long.MaxValue)).map {
@@ -404,7 +402,6 @@ object BenchScaleKernels {
         buckets = 8, threshold = 0.25, lshBits = bits)
       .write.format("noop").mode("overwrite").save()
     val t = (System.nanoTime() - t0) / 1e9
-    graft.util.Materialize.release()
     t
   }
 
@@ -421,7 +418,7 @@ object BenchScaleKernels {
     * kernel pins that it stays linear in index size — a superlinear swap
     * would stall a live ingest at the worst possible moment. Timed
     * portion excludes the fixture build. */
-  def compactSwapOnce(spark: SparkSession, dir: String, tag: String): Double = {
+  def compactSwapOnce(spark: SparkSession, dir: String, tag: String): Double = graft.util.Materialize.scope {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val table = s"graft_scale_genswap_$tag"
@@ -436,7 +433,6 @@ object BenchScaleKernels {
     val t0 = System.nanoTime()
     graft.operators.GenIndex.compactSwap(spark, table, root, "h", 8)
     val t = (System.nanoTime() - t0) / 1e9
-    graft.util.Materialize.release()
     t
   }
 
@@ -449,7 +445,7 @@ object BenchScaleKernels {
     * corpus) rewrite of the per-epoch directories into one committed base
     * generation, paid at production cadence. Timed portion excludes the
     * fixture build (the four epoch writes). */
-  def outputFoldOnce(spark: SparkSession, dir: String, tag: String): Double = {
+  def outputFoldOnce(spark: SparkSession, dir: String, tag: String): Double = graft.util.Materialize.scope {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val out = s"${graft.util.Scratch.base}/graft_scale_outfold_$tag"
@@ -462,7 +458,6 @@ object BenchScaleKernels {
     val t0 = System.nanoTime()
     graft.streaming.IngestOutput.fold(spark, out, 3L)
     val t = (System.nanoTime() - t0) / 1e9
-    graft.util.Materialize.release()
     t
   }
 
@@ -549,13 +544,11 @@ object BenchScale100 {
     val evBig = spark.read.parquet(s"$ScaleDir/events.parquet").count()
     System.err.println(s"[scale100] docs $nSmall -> $nBig, events $evSmall -> $evBig")
 
-    def runOnce(name: String, dir: String): Double = {
+    def runOnce(name: String, dir: String): Double = graft.util.Materialize.scope {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val t = (System.nanoTime() - t0) / 1e9
-      graft.util.Materialize.release()
-      graft.util.CacheSalt.releaseLeaked()
       t
     }
     def steady(name: String, dir: String): Double = {

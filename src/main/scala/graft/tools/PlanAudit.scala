@@ -16,7 +16,7 @@ object PlanAudit {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
-      try {
+      try graft.util.Materialize.scope {
         val df = graft.SparkEntry.queries(n)(spark, dir)
         val plan = df.queryExecution.executedPlan.toString
         val counts = Seq(
@@ -31,8 +31,6 @@ object PlanAudit {
         println(s"[audit] $n $counts")
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/$n.txt"), plan)
-        graft.util.Materialize.release()
-        graft.util.CacheSalt.releaseLeaked()
       } catch { case e: Throwable =>
         println(s"[audit] $n FAILED: ${e.getMessage}")
       }

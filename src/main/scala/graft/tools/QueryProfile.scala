@@ -36,7 +36,7 @@ object QueryProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def pass(label: String): Double = {
+    def pass(label: String): Double = graft.util.Materialize.scope {
       jobs.synchronized(jobs.clear())
       val t0 = System.nanoTime()
       GateRegistry(name).build(spark, dir)
@@ -51,8 +51,6 @@ object QueryProfile {
         prevEnd = j.t1
         println(f"[profile]   job=${j.id}%4d ${(j.t1 - j.t0) / 1e3}%7.3fs gapBefore=$gap%6.3fs  ${j.desc.take(110)}")
       }
-      graft.util.Materialize.release()
-      graft.util.CacheSalt.releaseLeaked()
       dt
     }
     pass("cold")

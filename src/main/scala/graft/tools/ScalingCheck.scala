@@ -55,13 +55,12 @@ object ScalingCheck {
     val pprobeBefore = graft.Bench.parallelProbe(nThreads)
     val results = chosen.map { q =>
       val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(q)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        graft.util.Materialize.release()
-        graft.util.CacheSalt.releaseLeaked()
-        t
+        graft.util.Materialize.scope {
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(q)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
       }
       System.err.println(f"[scaling] $q%-28s cold=${times.head}%.2fs warm=${times.last}%.2fs")
       q -> times.min

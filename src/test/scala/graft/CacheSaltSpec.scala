@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import graft.operators.Dedup
-import graft.util.CacheSalt.SaltedPersistOps
+import graft.util.Materialize
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -11,13 +11,14 @@ import org.apache.spark.storage.StorageLevel
 /** The cross-query CacheManager race class (round 10, commit 50fdb3e):
   * Spark shares plan-EQUAL persisted subtrees across concurrently executing
   * queries, and an operator's end-of-invocation unpersist drops the shared
-  * entry mid-flight for everyone. [[graft.util.CacheSalt]] makes the class
-  * impossible by salting every operator-internal persist per invocation;
-  * this suite proves (1) the isolation property itself — two plan-equal
-  * salted persists get independent cache entries, so unpersisting one
-  * cannot touch the other — and (2) output stability of a real dedup
+  * entry mid-flight for everyone. [[graft.util.Materialize.persist]] makes
+  * the class impossible by salting every operator-internal persist per
+  * invocation; this suite proves (1) the isolation property itself — two
+  * plan-equal salted persists get independent cache entries, so releasing
+  * one cannot touch the other — and (2) output stability of a real dedup
   * kernel under the exact concurrency shape that corrupted a gate sweep
-  * (plan-equal invocations racing on 4 threads with mid-flight releases). */
+  * (plan-equal invocations racing on 4 threads, each scope freeing its
+  * intermediates mid-flight for the others). */
 class CacheSaltSpec extends SparkSpec {
 
   private lazy val docs =
@@ -25,22 +26,22 @@ class CacheSaltSpec extends SparkSpec {
 
   test("salted persists of plan-equal frames are isolated cache entries") {
     val base = docs.select(col("doc_id"), length(col("text")).as("len"))
-    val a = base.saltedPersist()
-    val b = base.saltedPersist()
-    try {
+    Materialize.scope {
+      val a = Materialize.persist(base)
+      val b = Materialize.persist(base)
       assert(a.count() == b.count())
       // both materialized and both independently cached
       assert(a.storageLevel != StorageLevel.NONE, "a not cached")
       assert(b.storageLevel != StorageLevel.NONE, "b not cached")
       // the class property: dropping a's entry must leave b's alive — with
       // UNsalted persists the two plans are sameResult and share ONE entry,
-      // so this unpersist would yank b's cache mid-flight (the round-10 race)
-      a.unpersist(blocking = true)
+      // so this release would yank b's cache mid-flight (the round-10 race)
+      Materialize.release(a)
       assert(a.storageLevel == StorageLevel.NONE)
       assert(b.storageLevel != StorageLevel.NONE,
         "plan-equal sibling lost its cache entry — salting is broken")
       assert(b.count() == docs.count())
-    } finally { a.unpersist(); b.unpersist(); () }
+    }
   }
 
   test("unsalted persist demonstrates the shared-entry hazard the salt removes") {
@@ -55,73 +56,17 @@ class CacheSaltSpec extends SparkSpec {
       a.unpersist(blocking = true)
       assert(b.storageLevel == StorageLevel.NONE,
         "expected the shared-entry hazard (if Spark changed semantics, " +
-          "re-evaluate whether CacheSalt is still needed)")
+          "re-evaluate whether the persist salt is still needed)")
     } finally { a.unpersist(); b.unpersist(); () }
-  }
-
-  test("releaseLeaked frees only the calling thread's failure-leaked entries") {
-    import graft.util.CacheSalt
-    val base = docs.select(col("doc_id"))
-    // simulate a failed invocation: persist without unpersist
-    val leaked = base.saltedPersist()
-    leaked.count()
-    assert(leaked.storageLevel != StorageLevel.NONE)
-    // another thread's live cache must survive this thread's sweep
-    val other = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
-    val t = new Thread(() => {
-      val d = base.select(col("doc_id") + 1).saltedPersist()
-      d.count(); other.set(d)
-    })
-    t.start(); t.join()
-    val freed = CacheSalt.releaseLeaked()
-    assert(freed >= 1, "the leaked entry was not swept")
-    assert(leaked.storageLevel == StorageLevel.NONE, "leak survived the sweep")
-    assert(other.get.storageLevel != StorageLevel.NONE,
-      "swept a concurrent thread's live cache — ownership broken")
-    other.get.unpersist()
-    // idempotent: nothing left for this thread
-    assert(CacheSalt.releaseLeaked() == 0)
-  }
-
-  test("releaseAll sweeps a dead thread's failure leak that releaseLeaked cannot") {
-    import graft.util.CacheSalt
-    // drain anything a prior test left so the counts below are this test's
-    CacheSalt.releaseAll()
-    val base = docs.select(col("doc_id") + 100)
-    // the dead-thread corner (advisor round 11): a pool thread fails a
-    // query between persist and unpersist, then dies / is replaced — its
-    // own post-query releaseLeaked never runs, and no other thread owns
-    // the entry, so the per-thread sweep can never free it
-    val leaked = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
-    val t = new Thread(() => {
-      val d = base.saltedPersist()
-      d.count(); leaked.set(d)
-      // thread exits WITHOUT sweeping — the simulated failure + death
-    })
-    t.start(); t.join()
-    assert(leaked.get.storageLevel != StorageLevel.NONE)
-    // a GC between the failure and the sweep must not strand the entry —
-    // the registry holds the frame strongly until swept (advisor round 11:
-    // Bench forces a gc every 16 queries, so this window is real)
-    System.gc()
-    // the per-thread sweep is correctly powerless here (not the owner)
-    assert(CacheSalt.releaseLeaked() == 0)
-    assert(leaked.get.storageLevel != StorageLevel.NONE,
-      "per-thread sweep freed another thread's entry — ownership broken")
-    // the owner-agnostic end sweep (no query in flight) frees it
-    val freed = CacheSalt.releaseAll()
-    assert(freed >= 1, "end sweep did not free the dead thread's leak")
-    assert(leaked.get.storageLevel == StorageLevel.NONE)
-    assert(CacheSalt.releaseAll() == 0)
   }
 
   test("plan-equal dedup kernels are output-stable under concurrent racing invocations") {
     // the corrupted-sweep shape: N threads run the SAME verified-dedup
     // invocation (plan-equal persisted sigs/sets subtrees) concurrently;
-    // each invocation's materializeAndRelease unpersists its intermediates
-    // while siblings are mid-flight. Pre-fix this emitted the pre-dedup
-    // band-collision multiset ~1-in-7 sweeps; with salted persists every
-    // run must return the identical, duplicate-free pair set.
+    // each invocation's scope frees its intermediates while siblings are
+    // mid-flight. Pre-fix this emitted the pre-dedup band-collision
+    // multiset ~1-in-7 sweeps; with salted persists every run must return
+    // the identical, duplicate-free pair set.
     val expected = Dedup
       .minhashVerifiedPairs(docs, "doc_id", "text", threshold = 0.5)
       .orderBy("id_a", "id_b").collect().map(_.toString).toSeq
@@ -133,11 +78,11 @@ class CacheSaltSpec extends SparkSpec {
         val results = (1 to 4).map { _ =>
           pool.submit { () =>
             start.await()
-            val rows = Dedup
-              .minhashVerifiedPairs(docs, "doc_id", "text", threshold = 0.5)
-              .orderBy("id_a", "id_b").collect().map(_.toString).toSeq
-            graft.util.Materialize.release()
-            rows
+            Materialize.scope {
+              Dedup
+                .minhashVerifiedPairs(docs, "doc_id", "text", threshold = 0.5)
+                .orderBy("id_a", "id_b").collect().map(_.toString).toSeq
+            }
           }
         }
         start.countDown()

@@ -170,13 +170,11 @@ class DedupSimilaritySpec extends SparkSpec {
       "compaction left a stale df")
     // row set unchanged — compaction rewrites frequencies, not postings
     assert(fresh.length == global.values.sum)
-    graft.util.Materialize.release()
   }
 
   test("duplicate spans: global reduction is a partial aggregation, not a per-hash sort") {
-    val plan = Dedup.duplicateSpans(docs, "doc_id", "text", n = 10,
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = inspectPlan(Dedup.duplicateSpans(docs, "doc_id", "text", n = 10)
+      .queryExecution.executedPlan.toString)
     // the hash-group reduction must appear as HashAggregate (map-side
     // combinable); the only Window may be the per-document merge
     assert(plan.contains("HashAggregate"), plan.take(600))
@@ -789,23 +787,25 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("materialization cuts are released deterministically, not left to GC") {
     import graft.util.Materialize
-    Materialize.release() // drain anything earlier suites left behind
     // same filtered metric on both sides — counting ALL entries before but
     // only cached-partition entries after would let a leak pass vacuously
-    val before = spark.sparkContext.getRDDStorageInfo
-      .count(_.numCachedPartitions > 0)
+    def cachedIds = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cachedIds
     val docs = spark.range(1, 65).toDF("doc_id")
     val pairs = spark.range(1, 64).select(
       col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val out = Dedup.connectedComponents(docs, pairs, "doc_id")
-    out.write.format("noop").mode("overwrite").save() // consume the result
-    // in-loop release keeps live cuts O(1); the final release() frees the
-    // result blocks the moment the consuming job is done — no GC involved
-    assert(Materialize.release() >= 1, "final labels should have been tracked")
-    val after = spark.sparkContext.getRDDStorageInfo
-      .count(_.numCachedPartitions > 0)
-    assert(after <= before,
-      s"checkpoint blocks leaked: $before cached RDDs before, $after after")
+    Materialize.scope {
+      val out = Dedup.connectedComponents(docs, pairs, "doc_id")
+      out.write.format("noop").mode("overwrite").save() // consume the result
+      // in-loop release keeps live cuts O(1); the final labels belong to
+      // this scope until it exits
+      assert((cachedIds -- before).nonEmpty, "final labels should have been tracked")
+    }
+    // the scope's exit frees the result blocks the moment the consuming
+    // job is done — no GC involved
+    val leaked = cachedIds -- before
+    assert(leaked.isEmpty, s"checkpoint blocks leaked: RDDs $leaked")
   }
 
   test("PQ top-k equals brute force when refine covers the corpus") {
@@ -1083,9 +1083,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // the O(k·dim) distance array must stay staged behind its alias: one
     // zip_with chain in the final projection, not one per consumer (the
     // parquet-backed table — a local relation constant-folds the plan away)
-    val planned = Similarity.kmeansAssign(emb, "vec_id", "embedding",
-      k = 2, iters = 0, dim = 64, materialize = false)
-    val proj = planned.queryExecution.optimizedPlan.toString
+    val proj = inspectPlan(Similarity.kmeansAssign(emb, "vec_id", "embedding",
+      k = 2, iters = 0, dim = 64).queryExecution.optimizedPlan.toString)
     val n = "zip_with".r.findAllIn(proj).length
     assert(n == 1,
       s"distance array inlined per consumer ($n zip_with occurrences):\n$proj")
@@ -1110,10 +1109,10 @@ class DedupSimilaritySpec extends SparkSpec {
       s"unexpected survivors/clusters: $out")
   }
 
-  test("releaseNow is composition-safe: caller-owned cuts survive CC and joins") {
+  test("release is composition-safe: caller-owned cuts survive CC and joins") {
     import graft.util.Materialize
     import org.apache.spark.sql.graftbridge.RddBridge
-    // a checkpointed INPUT (as survivors/materializeAndRelease would return)
+    // a checkpointed INPUT (as a survivors operator's result would be)
     val input = spark.range(1, 33).toDF("doc_id").localCheckpoint(true)
     val pairs = spark.range(1, 32).select(
       col("id").as("id_a"), (col("id") + 1).as("id_b"))
@@ -1124,39 +1123,50 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(input.count() == 32L,
       "connectedComponents released a checkpointed input it does not own")
     // backingRdd is root-only: a frame that merely CONTAINS checkpointed
-    // inputs (join of two cuts) exposes no RDD, so releaseNow is a no-op
+    // inputs (join of two cuts) exposes no RDD, so release is a no-op
     val cutA = spark.range(0, 10).toDF("k").localCheckpoint(true)
     val cutB = spark.range(5, 15).toDF("k").localCheckpoint(true)
     val joined = cutA.join(cutB, "k")
     assert(RddBridge.backingRdd(joined).isEmpty,
       "composite plan must not expose an arbitrary input's RDD")
-    Materialize.releaseNow(joined) // must not free cutA or cutB
+    Materialize.release(joined) // must not free cutA or cutB
     assert(cutA.count() == 10L && cutB.count() == 10L)
     // but a pruning projection of a cut still resolves (the CC loop shape)
     assert(RddBridge.backingRdd(cutA.select("k")).isDefined)
     input.unpersist(); cutA.unpersist(); cutB.unpersist()
   }
 
-  test("release() is thread-scoped: thread A cannot free thread B's cuts") {
+  test("scope exit is thread-scoped: thread A cannot free thread B's cuts") {
     import graft.util.Materialize
-    Materialize.release() // drain this thread's leftovers
-    // one long-lived worker thread, so its second call runs under the SAME
-    // thread id that registered the cut
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    def onWorker[T](body: => T): T =
-      exec.submit(new java.util.concurrent.Callable[T] { def call(): T = body }).get()
+    import org.apache.spark.sql.graftbridge.RddBridge
+    import org.apache.spark.storage.StorageLevel
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    def live(df: org.apache.spark.sql.DataFrame): Boolean =
+      RddBridge.backingRdd(df).exists(_.getStorageLevel != StorageLevel.NONE)
+    // the worker's scope stays open (an in-flight query) while this
+    // thread's scope exits
+    val exec = Executors.newSingleThreadExecutor()
+    val inScope = new CountDownLatch(1)
+    val finish = new CountDownLatch(1)
+    val otherCut = new AtomicReference[org.apache.spark.sql.DataFrame]()
     try {
-      val otherCut = onWorker(Materialize.track(
-        spark.range(0, 100).toDF("v").localCheckpoint(true)))
-      val mine = Materialize.track(
-        spark.range(0, 50).toDF("v").localCheckpoint(true))
-      assert(Materialize.release() == 1,
-        "this thread owns exactly one live cut")
-      assert(otherCut.count() == 100L,
-        "another thread's in-flight cut must survive this thread's release()")
-      val freed = onWorker(Materialize.release())
-      assert(freed == 1, s"owner thread should free its cut (got $freed)")
-      mine.unpersist()
+      val worker = exec.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = Materialize.scope {
+          otherCut.set(Materialize.cut(spark.range(0, 100).toDF("v")))
+          inScope.countDown()
+          finish.await(60, TimeUnit.SECONDS)
+          otherCut.get.count()
+        }
+      })
+      assert(inScope.await(60, TimeUnit.SECONDS))
+      val mine = Materialize.scope(Materialize.cut(spark.range(0, 50).toDF("v")))
+      assert(!live(mine), "this thread's scope should free the one cut it owns")
+      assert(live(otherCut.get) && otherCut.get.count() == 100L,
+        "another thread's in-flight cut must survive this thread's scope exit")
+      finish.countDown()
+      assert(worker.get(60, TimeUnit.SECONDS) == 100L)
+      assert(!live(otherCut.get), "the owner thread's scope should free its cut")
     } finally { exec.shutdown(); () }
   }
 
@@ -1174,12 +1184,8 @@ class DedupSimilaritySpec extends SparkSpec {
     spark.conf.set("spark.graft.dedup.materialize", "reliable")
     try assert(run() == local, "reliable checkpoint changed the result")
     finally spark.conf.set("spark.graft.dedup.materialize", "local")
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
-      assert(run() == local, "lazy mode changed the result")
-      // mode none leaves the persist barriers live — caller releases
-      spark.sharedState.cacheManager.clearCache()
-    } finally spark.conf.set("spark.graft.dedup.materialize", "local")
+    // mode none hands the persist barriers to the caller's scope
+    assert(inspectPlan(run()) == local, "lazy mode changed the result")
     spark.conf.set("spark.graft.dedup.materialize", "nope")
     try intercept[IllegalArgumentException](run())
     finally spark.conf.set("spark.graft.dedup.materialize", "local")
@@ -1439,12 +1445,12 @@ class DedupSimilaritySpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
       .toDF("doc_id", "text")
-    val live = graft.util.CacheSalt.liveCachedCount()
+    spark.catalog.clearCache() // isolate from earlier specs' cache entries
     intercept[IllegalArgumentException] {
       graft.operators.Dedup.sortedNeighborhoodMultiPass(docs, "doc_id", "text",
         window = 0)
     }
-    assert(graft.util.CacheSalt.liveCachedCount() == live,
+    assert(spark.sharedState.cacheManager.isEmpty,
       "a rejected window left the shared SNM base persisted")
   }
 

@@ -103,10 +103,9 @@ class GraphSpec extends SparkSpec {
 
   test("pageRank plan: edges shuffled once (cached co-partitioned); iterations shuffle only ranks") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("id_a", "id_b")
-    try {
-      val df = Graph.pageRank(pairs, "id_a", "id_b", iters = 5,
-        materialize = false)
-      val p = df.queryExecution.executedPlan.toString
+    inspectPlan {
+      val p = Graph.pageRank(pairs, "id_a", "id_b", iters = 5)
+        .queryExecution.executedPlan.toString
       val lines = p.linesIterator.toVector
       // the degree-annotated edge relation must come from the cache...
       assert(lines.exists(_.contains("InMemoryTableScan")),
@@ -121,7 +120,7 @@ class GraphSpec extends SparkSpec {
             s"cached edges re-shuffled by an iteration join:\n$p")
         }
       }
-    } finally spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("triangleCounts: 4-clique gives every node 3 triangles; paths give none") {

@@ -454,19 +454,21 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("videoSharedFrames: materialize=none releases its postings cache too") {
-    // the plan-inspection arm must not accumulate salted cache entries —
-    // the CacheSalt failure sweep stays a no-op on every normal path
+    // the plan-inspection arm hands its postings cache to the caller's
+    // scope, which frees it on exit: repeated calls accumulate nothing
     val payloads = Multimodal.renderedVideoPayloads(
       (0L until 10L).toDF("doc_id"), "doc_id")
-    graft.util.CacheSalt.releaseAll() // isolate from other suites' state
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    inspectPlan {
       val out = Multimodal.videoSharedFrames(payloads, minShared = 2)
-      assert(graft.util.CacheSalt.liveCachedCount() == 0,
-        "none-mode call left a live salted cache entry")
-      // the returned plan stays executable (recomputes the postings)
+      // the returned plan stays executable inside the scope, over the
+      // postings cache the scope now owns
       assert(out.count() > 0L)
-    } finally spark.conf.unset("spark.graft.dedup.materialize")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+        "none-mode call persisted no postings cache for its lazy plan")
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "none-mode call left a live cache entry after its scope closed")
   }
 
   test("sniffKind: every real encoder's output classified; header-level by design") {

@@ -1231,8 +1231,7 @@ class PipelineStreamingSpec extends SparkSpec {
       import org.apache.spark.sql.execution.exchange.Exchange
       val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.dedup.materialize", "none")
-      try {
+      try inspectPlan {
         val sp = Dedup.hammingSurvivorsIndexed(
             probe.toDF("id", "sh"), spark.table(t), 3)
           .queryExecution.sparkPlan
@@ -1242,11 +1241,7 @@ class PipelineStreamingSpec extends SparkSpec {
         assert(sp.collect { case e: Exchange if e.collectFirst {
             case f: FileSourceScanExec if f.bucketedScan => f }.isDefined => e }
           .isEmpty, s"re-registered index re-shuffled above its scan:\n$sp")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-        spark.conf.unset("spark.graft.dedup.materialize")
-        spark.sharedState.cacheManager.clearCache()
-      }
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
     }
     // appends keep flowing through the re-registered table (the live
     // generation is immutable once SUPERSEDED, not while live)

@@ -225,8 +225,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("mm_video_shared_frames: posting join shuffles slim frame hashes, never payloads") {
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    inspectPlan {
       val p = plan("mm_video_shared_frames")
       // payload bytes are consumed inside the scan-stage decode; every
       // exchange below must carry only (id, fhash)-shaped rows
@@ -237,12 +236,11 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct") &&
              !p.contains("BroadcastNestedLoopJoin"),
         s"pair join degenerated to a product:\n$p")
-    } finally spark.conf.unset("spark.graft.dedup.materialize")
+    }
   }
 
   test("pipeline_mm_ingest: payloads never cross an exchange; one grouped join, no product") {
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    inspectPlan {
       Seq("pipeline_mm_ingest", "pipeline_mm_ingest_pairs").foreach { q =>
         val p = plan(q)
         // the composed DAG's contract: payload bytes are consumed inside
@@ -257,10 +255,6 @@ class PlanSpec extends SparkSpec {
                !p.contains("BroadcastNestedLoopJoin"),
           s"$q: pair join degenerated to a product:\n$p")
       }
-    } finally {
-      spark.conf.unset("spark.graft.dedup.materialize")
-      // plan-mode persists stay by convention (see dedupPlan note)
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -283,18 +277,17 @@ class PlanSpec extends SparkSpec {
       assert(!p.linesIterator.exists(_.contains("Exchange hashpartitioning(id")),
         s"$q: corpus side of the rerank join shuffles by id:\n$p")
     }
-    spark.sharedState.cacheManager.clearCache() // pqTopK plan-mode persist
   }
 
   test("dedup_boilerplate: line reduction shuffles hashes, never page text") {
-    // materialize=false — the operator localCheckpoints its result, which
-    // would erase the reduction plan (dedup-family PlanSpec pattern below)
+    // plan-inspection mode — the operator's result cut would erase the
+    // reduction plan (dedup-family PlanSpec pattern below)
     val docs = spark.read.parquet(sf("documents"))
       .selectExpr("doc_id", "source", "text")
-    val p = graft.operators.Dedup
+    val p = inspectPlan(graft.operators.Dedup
       .boilerplateSurvivors(docs, "doc_id", "text", "source",
-        minDocs = 3L, materialize = false)
-      .queryExecution.executedPlan.toString
+        minDocs = 3L)
+      .queryExecution.executedPlan.toString)
     val lines = p.linesIterator.toVector
     // the line reduction shuffles slim (grp, h, id, pos) rows — the text
     // column must never appear in an exchange's carried-attribute list
@@ -316,12 +309,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_lm_score: map-side partial counts; context totals via ONE window, no self-join") {
-    // plan-inspection mode: materialize=false skips the persists/cut that
+    // plan-inspection mode: the lazy plan instead of the result cut that
     // would erase the operator plan (the dedup-family PlanSpec pattern)
     val docs = spark.read.parquet(sf("documents"))
-    val p = graft.operators.TextAnalysis
-      .lmScore(docs, "doc_id", "text", materialize = false)
-      .queryExecution.sparkPlan.toString
+    val p = inspectPlan(graft.operators.TextAnalysis
+      .lmScore(docs, "doc_id", "text")
+      .queryExecution.sparkPlan.toString)
     assert(p.contains("partial_count") || p.contains("partial count"),
       s"bigram counting lost its map-side combine:\n${p.take(600)}")
     val windows = p.linesIterator.count(_.contains("Window ["))
@@ -352,23 +345,22 @@ class PlanSpec extends SparkSpec {
 
   // The dedup operators eagerly localCheckpoint their result, which erases
   // the joins from the returned DataFrame's plan — asserting on the gate
-  // query plan would be vacuous. These pins inspect the operators with
-  // materialize = false: the pre-materialization plan that actually
-  // executes the candidate joins.
-  private def dedupPlan(df: org.apache.spark.sql.DataFrame): String =
-    try df.queryExecution.executedPlan.toString
-    finally spark.sharedState.cacheManager.clearCache() // release plan-mode persists
+  // query plan would be vacuous. These pins build the operators in the
+  // plan-inspection mode: the pre-materialization plan that actually
+  // executes the candidate joins, its persists freed when the scope exits.
+  private def dedupPlan(df: => org.apache.spark.sql.DataFrame): String =
+    inspectPlan(df.queryExecution.executedPlan.toString)
 
   test("dedup LSH paths: blocked equi-joins, no cartesian/nested-loop product") {
     val docs = spark.read.parquet(sf("documents"))
     val emb = spark.read.parquet(sf("embeddings"))
     val plans = Seq(
       "minhash" -> dedupPlan(graft.operators.Dedup.minhashLshPairs(
-        docs, "doc_id", "text", threshold = 0.4, materialize = false)),
+        docs, "doc_id", "text", threshold = 0.4)),
       "simhash" -> dedupPlan(graft.operators.Dedup.simhashPairs(
-        docs, "doc_id", "text", maxHamming = 3, materialize = false)),
+        docs, "doc_id", "text", maxHamming = 3)),
       "embedding" -> dedupPlan(graft.operators.Dedup.embeddingCosinePairs(
-        emb, "vec_id", "embedding", threshold = 0.4, materialize = false)))
+        emb, "vec_id", "embedding", threshold = 0.4)))
     plans.foreach { case (name, p) =>
       assert(!p.contains("CartesianProduct"), s"$name planned a cartesian product")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$name planned a nested-loop join")
@@ -402,12 +394,11 @@ class PlanSpec extends SparkSpec {
     assert(kernelCalls(index) == 1, s"buildPostingIndex:\n$index")
     assert(index.contains("norm_text") && !index.contains("regexp_replace"),
       s"normalization is not the native kernel:\n$index")
-    val (probe, _) = graft.operators.Dedup.incrementalSurvivorsIndexedLazy(
+    val probePlan = dedupPlan(graft.operators.Dedup.incrementalSurvivorsIndexedLazy(
       docs.where(col("doc_id") >= 250),
       graft.operators.Dedup.buildPostingIndex(docs.where(col("doc_id") < 250),
         "doc_id", "text"),
-      "doc_id", "text", maxDocFreq = Long.MaxValue)
-    val probePlan = dedupPlan(probe)
+      "doc_id", "text", maxDocFreq = Long.MaxValue))
     // the persisted batch postings print once per consumer, so pin the
     // absence of a kernel-evaluating filter instead of a count
     assert(kernelCalls(probePlan) > 0 && !probePlan.linesIterator.exists(l =>
@@ -435,8 +426,7 @@ class PlanSpec extends SparkSpec {
     // force the sort-merge path (a broadcast of the tiny spec batch would
     // hide the bucket layout) and keep the pre-materialization plan
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    try inspectPlan {
       val out = graft.operators.Dedup.incrementalSurvivorsIndexed(
         docs.where(col("doc_id") >= 250), idx, "doc_id", "text",
         maxDocFreq = Long.MaxValue)
@@ -453,8 +443,6 @@ class PlanSpec extends SparkSpec {
         s"corpus posting index re-shuffled above its bucketed scan:\n$sp")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("spark.graft.dedup.materialize")
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -472,8 +460,7 @@ class PlanSpec extends SparkSpec {
       "graft_b_mmidx_plan", "bk", 8, "/tmp/graft_bucketed_plan/mmidx")
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    try inspectPlan {
       val out = graft.operators.Dedup.hammingSurvivorsIndexed(
         docs.where(col("id") % 5 >= 2), idx, maxHamming = 3)
       val sp = out.queryExecution.sparkPlan
@@ -511,8 +498,6 @@ class PlanSpec extends SparkSpec {
         s"keyed fragment index re-shuffled above its bucketed scan:\n$ksp")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("spark.graft.dedup.materialize")
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -527,8 +512,7 @@ class PlanSpec extends SparkSpec {
       "graft_b_embidx_plan", "bucket", 8, "/tmp/graft_bucketed_plan/embidx")
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
+    try inspectPlan {
       val out = graft.operators.Dedup.embedSurvivorsIndexed(
         emb.where(col("id") % 5 >= 2), idx, threshold = 0.25)
       val sp = out.queryExecution.sparkPlan
@@ -543,8 +527,6 @@ class PlanSpec extends SparkSpec {
         s"embedding index re-shuffled above its bucketed scan:\n$sp")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("spark.graft.dedup.materialize")
-      spark.sharedState.cacheManager.clearCache()
     }
   }
 
@@ -563,7 +545,7 @@ class PlanSpec extends SparkSpec {
               org.apache.spark.sql.functions.col("embedding").as("qvec"))
     val p = dedupPlan(graft.operators.Similarity.pqTopK(
       emb, "vec_id", "embedding", q, "qid", "qvec",
-      k = 3, refine = 20, materialize = false))
+      k = 3, refine = 20))
     // the refine cut is a per-partition group limit, not a global sort
     assert(p.contains("WindowGroupLimit"), s"refine cut lost WindowGroupLimit:\n$p")
     // the scoring side scans the cached codes WITHOUT the vector payload —
@@ -583,7 +565,7 @@ class PlanSpec extends SparkSpec {
               org.apache.spark.sql.functions.col("embedding").as("qvec"))
     val p = dedupPlan(graft.operators.Similarity.rpTopK(
       emb, "vec_id", "embedding", q, "qid", "qvec",
-      k = 3, outDim = 16, refine = 20, materialize = false))
+      k = 3, outDim = 16, refine = 20))
     // the refine cut must be a per-partition group limit, not a global sort
     assert(p.contains("WindowGroupLimit"), s"refine cut lost WindowGroupLimit:\n$p")
     // the scoring side scans the cached projections WITHOUT the vector
@@ -598,19 +580,16 @@ class PlanSpec extends SparkSpec {
 
   test("semantic dedup: cluster sizing is slim; no cartesian product") {
     val emb = spark.read.parquet(sf("embeddings"))
-    spark.conf.set("spark.graft.dedup.materialize", "none")
-    try {
-      val p = dedupPlan(graft.operators.Dedup.semanticSurvivors(
-        emb, "vec_id", "embedding",
-        graft.operators.Similarity.fixedCentroids(16, 64), threshold = 0.4))
-      assert(!p.contains("CartesianProduct"), "semantic planned a cartesian product")
-      val sizing = p.linesIterator
-        .filter(l => l.contains("InMemoryTableScan") && l.contains("__bsz"))
-        .toVector
-      assert(sizing.nonEmpty, s"semantic lost its sizing cache:\n$p")
-      sizing.foreach(l => assert(!l.contains("vec#"),
-        s"semantic sizing shuffle carries the vector payload: $l"))
-    } finally spark.conf.unset("spark.graft.dedup.materialize")
+    val p = dedupPlan(graft.operators.Dedup.semanticSurvivors(
+      emb, "vec_id", "embedding",
+      graft.operators.Similarity.fixedCentroids(16, 64), threshold = 0.4))
+    assert(!p.contains("CartesianProduct"), "semantic planned a cartesian product")
+    val sizing = p.linesIterator
+      .filter(l => l.contains("InMemoryTableScan") && l.contains("__bsz"))
+      .toVector
+    assert(sizing.nonEmpty, s"semantic lost its sizing cache:\n$p")
+    sizing.foreach(l => assert(!l.contains("vec#"),
+      s"semantic sizing shuffle carries the vector payload: $l"))
   }
 
   test("token-id encoding: narrow scan-bound plan, no exchange, native expression") {
@@ -625,24 +604,20 @@ class PlanSpec extends SparkSpec {
 
   test("shard packing: global prefix sum windows WITHIN partitions, never one task") {
     val docs = spark.read.parquet(sf("documents"))
-    val (offs, persisted) = graft.operators.TextAnalysis.prefixOffsetsForTest(
+    val p = dedupPlan(graft.operators.TextAnalysis.withPrefixOffsets(
       docs, "doc_id", org.apache.spark.sql.functions.octet_length(
-        org.apache.spark.sql.functions.col("text")).cast("long"), "n_bytes")
-    try {
-      val p = offs.queryExecution.executedPlan.toString
-      // the running sum must be keyed by the sort partition id — an empty
-      // partition spec would funnel the corpus through a single task
-      assert(p.contains("windowspecdefinition(__pid"),
-        s"prefix-sum window is not partitioned by __pid:\n$p")
-    } finally { persisted.unpersist(); () }
+        org.apache.spark.sql.functions.col("text")).cast("long"), "n_bytes"))
+    // the running sum must be keyed by the sort partition id — an empty
+    // partition spec would funnel the corpus through a single task
+    assert(p.contains("windowspecdefinition(__pid"),
+      s"prefix-sum window is not partitioned by __pid:\n$p")
   }
 
   test("text_ppl_buckets: the tile window is partitioned by group, never global") {
     val docs = spark.read.parquet(sf("documents"))
-    val p = graft.operators.TextAnalysis
-      .perplexityBuckets(docs, "doc_id", "text", "lang", buckets = 3,
-        materialize = false)
-      .queryExecution.sparkPlan.toString
+    val p = inspectPlan(graft.operators.TextAnalysis
+      .perplexityBuckets(docs, "doc_id", "text", "lang", buckets = 3)
+      .queryExecution.sparkPlan.toString)
     // an empty partition spec would funnel the whole corpus through ONE
     // sort task; CCNet's split is per-language and the plan must stay so
     assert(p.contains("windowspecdefinition(lang"),
@@ -652,12 +627,11 @@ class PlanSpec extends SparkSpec {
   test("text_decontaminate: bloom prefilter filters below the exact semi-join") {
     val docs = spark.read.parquet(sf("documents"))
     val c = org.apache.spark.sql.functions.col _
-    val p = graft.operators.TextAnalysis.decontaminateReport(
+    val p = inspectPlan(graft.operators.TextAnalysis.decontaminateReport(
         docs.where(c("doc_id") >= 20), "doc_id", "text",
         docs.where(c("doc_id") < 20), "text",
-        estimatedBenchShingles = 20000L, numBits = 160000L,
-        materialize = false)
-      .queryExecution.sparkPlan.toString
+        estimatedBenchShingles = 20000L, numBits = 160000L)
+      .queryExecution.sparkPlan.toString)
     assert(p.contains("might_contain"),
       s"the bloom prefilter vanished from the plan:\n${p.take(800)}")
     val lines = p.linesIterator.toVector
@@ -701,12 +675,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_tfidf: (doc,term) counts combine map-side; top-k window is per-doc only") {
-    // materialize=false: the plan-inspection mode (the gate row's cut
-    // erases the plan into a LogicalRDD)
-    val p = graft.operators.TextAnalysis.tfidfTopK(
+    // the plan-inspection mode (the gate row's cut erases the plan into a
+    // LogicalRDD)
+    val p = inspectPlan(graft.operators.TextAnalysis.tfidfTopK(
         spark.read.parquet(sf("documents")),
-        "doc_id", "text", k = 5, materialize = false)
-      .queryExecution.executedPlan.toString
+        "doc_id", "text", k = 5)
+      .queryExecution.executedPlan.toString)
     assert(p.contains("partial_count"), "tf counting lost map-side combine")
     // the only window partitions by the doc id — never by term (a hot term
     // would funnel into one reducer's sort)
@@ -716,10 +690,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_lines: slim line-hash shuffle, partial first/count reduction") {
-    val p = graft.operators.Dedup.lineSurvivors(
+    val p = inspectPlan(graft.operators.Dedup.lineSurvivors(
         spark.read.parquet(sf("documents")),
-        "doc_id", "text", materialize = false)
-      .queryExecution.executedPlan.toString
+        "doc_id", "text")
+      .queryExecution.executedPlan.toString)
     // the global first/count reduction combines map-side — a banner line
     // repeated 10^8 times must cost a combiner merge, not a reducer sort
     assert(p.contains("partial_min") && p.contains("partial_count"),
@@ -731,10 +705,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_spans: window hashing is the native expression inside codegen") {
-    val p = graft.operators.Dedup.duplicateSpans(
+    val p = inspectPlan(graft.operators.Dedup.duplicateSpans(
         spark.read.parquet(sf("documents")),
-        "doc_id", "text", n = 10, materialize = false)
-      .queryExecution.executedPlan.toString
+        "doc_id", "text", n = 10)
+      .queryExecution.executedPlan.toString)
     assert(p.contains("positional_shingle_hashes"),
       "span hashing must be the single-pass native expression (the HOF " +
       "composition re-tokenizes per window — measured 22s vs 1s at sf0.1)")
@@ -786,17 +760,15 @@ class PlanSpec extends SparkSpec {
 
   test("dedup_ngram_prefix: doc-frequency order is a partial agg; no nested-loop join") {
     val docs = spark.read.parquet(sf("documents"))
-    try {
-      val p = graft.operators.Dedup.ngramJaccardPairsPrefix(
-          docs, "doc_id", "text", threshold = 0.5, materialize = false)
-        .queryExecution.executedPlan.toString
-      // the global rare-first order costs ONE map-side-combinable count
-      assert(p.contains("partial_count"), "dfreq lost its map-side combine")
-      // every join in the operator is an equi-join (prefix probe, candidate
-      // re-join); a nested-loop/cartesian would be the O(n^2) failure mode
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        "prefix join degenerated to a non-equi join")
-    } finally spark.sharedState.cacheManager.clearCache()
+    val p = inspectPlan(graft.operators.Dedup.ngramJaccardPairsPrefix(
+        docs, "doc_id", "text", threshold = 0.5)
+      .queryExecution.executedPlan.toString)
+    // the global rare-first order costs ONE map-side-combinable count
+    assert(p.contains("partial_count"), "dfreq lost its map-side combine")
+    // every join in the operator is an equi-join (prefix probe, candidate
+    // re-join); a nested-loop/cartesian would be the O(n^2) failure mode
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      "prefix join degenerated to a non-equi join")
   }
 
   test("text_heavy_hitters: sketch combines map-side; probe and verify broadcast") {
@@ -838,30 +810,28 @@ class PlanSpec extends SparkSpec {
     // id/key/size columns — never the sig/vec payload.
     val docs = spark.read.parquet(sf("documents"))
     val emb = spark.read.parquet(sf("embeddings"))
-    // each thunk builds its operator AFTER the previous one's caches are
-    // cleared — the persisted intermediates must be live when the plan is
-    // printed or the InMemoryTableScan substitution (rightly) disappears
+    // each thunk builds its operator inside its own plan-inspection scope —
+    // the persisted intermediates must be live when the plan is printed or
+    // the InMemoryTableScan substitution (rightly) disappears
     Seq[(String, String, () => org.apache.spark.sql.DataFrame)](
       ("minhash", "sig#", () => graft.operators.Dedup.minhashLshPairs(
-        docs, "doc_id", "text", threshold = 0.4, materialize = false)),
+        docs, "doc_id", "text", threshold = 0.4)),
       ("simhash", "sh#", () => graft.operators.Dedup.simhashPairs(
-        docs, "doc_id", "text", maxHamming = 3, materialize = false)),
+        docs, "doc_id", "text", maxHamming = 3)),
       ("embedding", "vec#", () => graft.operators.Dedup.embeddingCosinePairs(
-        emb, "vec_id", "embedding", threshold = 0.4, materialize = false))
+        emb, "vec_id", "embedding", threshold = 0.4))
     ).foreach { case (name, payload, mk) =>
-      try {
-        val p = mk().queryExecution.executedPlan.toString
-        // the cached sizing relation prints as
-        //   InMemoryTableScan [id#1L, band#2L, __bsz#3L, __bmin#4L]
-        val sizingScans = p.linesIterator
-          .filter(l => l.contains("InMemoryTableScan") && l.contains("__bsz"))
-          .toVector
-        assert(sizingScans.nonEmpty, s"$name lost its sizing cache:\n$p")
-        sizingScans.foreach { l =>
-          assert(!l.contains(payload),
-            s"$name sizing shuffle carries its payload column: $l")
-        }
-      } finally spark.sharedState.cacheManager.clearCache()
+      val p = dedupPlan(mk())
+      // the cached sizing relation prints as
+      //   InMemoryTableScan [id#1L, band#2L, __bsz#3L, __bmin#4L]
+      val sizingScans = p.linesIterator
+        .filter(l => l.contains("InMemoryTableScan") && l.contains("__bsz"))
+        .toVector
+      assert(sizingScans.nonEmpty, s"$name lost its sizing cache:\n$p")
+      sizingScans.foreach { l =>
+        assert(!l.contains(payload),
+          s"$name sizing shuffle carries its payload column: $l")
+      }
     }
   }
 
@@ -947,13 +917,13 @@ class PlanSpec extends SparkSpec {
     // line, every histogram conjunct must appear before the first
     // levenshtein call. A Spark upgrade that reorders predicates fails
     // here loudly instead of silently regressing the bench (ADVICE r8).
-    // materialize=false: the gate row's localCheckpoint cut collapses the
-    // final plan to Scan ExistingRDD, so inspect the pre-cut plan — the
+    // plan-inspection mode: the gate row's localCheckpoint cut collapses
+    // the final plan to Scan ExistingRDD, so inspect the pre-cut plan — the
     // one the join actually executes with.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val p = graft.operators.Dedup.editDistancePairs(
-        docs, "doc_id", "text", materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = inspectPlan(graft.operators.Dedup.editDistancePairs(
+        docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString)
     val condLines = p.linesIterator
       .filter(l => l.contains("levenshtein") && l.contains("abs("))
       .toSeq
@@ -1107,9 +1077,9 @@ class PlanSpec extends SparkSpec {
 
   test("dedup_sorted_neighborhood: bucket equi-join (no nested loop); text never shuffles") {
     val docs = spark.read.parquet(sf("documents"))
-    val p = graft.operators.Dedup
-      .sortedNeighborhoodPairs(docs, "doc_id", "text", materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = inspectPlan(graft.operators.Dedup
+      .sortedNeighborhoodPairs(docs, "doc_id", "text")
+      .queryExecution.executedPlan.toString)
     assert(!p.contains("CartesianProduct") &&
            !p.contains("BroadcastNestedLoopJoin"),
       s"rank-window candidates must come from the block equi-join:\n$p")
@@ -1223,11 +1193,10 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val media = graft.operators.Multimodal.withBinaryPayload(
       spark.read.parquet(sf("documents")), "doc_id", "text", "image")
-    val raw = graft.operators.Dedup.hammingPairs64(
+    val p = dedupPlan(graft.operators.Dedup.hammingPairs64(
       graft.operators.Multimodal.perceptualHash(media)
         .select(col("id"), col("phash").as("sh")),
-      maxHamming = 3, materialize = false)
-    val p = raw.queryExecution.executedPlan.toString
+      maxHamming = 3))
     val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
     assert(exchanges.nonEmpty, s"banding join lost its bucket exchange:\n$p")
     assert(!exchanges.exists(_.contains("payload#")),
@@ -1249,9 +1218,8 @@ class PlanSpec extends SparkSpec {
               org.apache.spark.sql.functions.col("id_b"))
     val seeds = pairs.select(org.apache.spark.sql.functions.col("id_a").as("id"))
       .where(org.apache.spark.sql.functions.expr("id % 50 = 0")).distinct()
-    val raw = graft.operators.Graph.personalizedPageRank(
-      pairs, "id_a", "id_b", seeds, iters = 3, materialize = false)
-    val rp = raw.queryExecution.executedPlan.toString
+    val rp = dedupPlan(graft.operators.Graph.personalizedPageRank(
+      pairs, "id_a", "id_b", seeds, iters = 3))
     assert(rp.contains("InMemoryTableScan"),
       s"degree-annotated edges must be cached and rescanned per round:\n$rp")
     assert(rp.contains("BroadcastExchange"),

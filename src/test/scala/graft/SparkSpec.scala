@@ -15,4 +15,14 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
+
+  /** Run `body` in the plan-inspection mode: conf
+    * `spark.graft.dedup.materialize = none` inside a `Materialize.scope`, so
+    * operators return their lazy plans and the scope frees the persists
+    * those plans read when it exits. */
+  def inspectPlan[T](body: => T): T = {
+    spark.conf.set(graft.util.Materialize.ConfKey, "none")
+    try graft.util.Materialize.scope(body)
+    finally spark.conf.unset(graft.util.Materialize.ConfKey)
+  }
 }
