@@ -2093,11 +2093,9 @@ object Dedup {
     // across the two different subtrees; see memory: recurring plan trap)
     val crossSrc = if (maxDocFreq == Long.MaxValue) crossRaw
                    else Materialize.persist(crossRaw)
-    val crossPairs = (if (maxDocFreq == Long.MaxValue) crossSrc
-                      else crossSrc.where(col("dfi") + col("dfc") <= maxDocFreq))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"),
-           first(col("na")).as("na"), first(col("nb")).as("nb"))
+    val cross = (if (maxDocFreq == Long.MaxValue) crossSrc
+                 else crossSrc.where(col("dfi") + col("dfc") <= maxDocFreq))
+      .select("id_a", "id_b", "na", "nb")
     // intra-batch: smaller-id incoming docs are dedup sources too; both
     // sides of the self-join see the same combined-df pruning
     val intraRare =
@@ -2106,17 +2104,25 @@ object Dedup {
                     Seq("h"), "left")
         .where(col("dfi") + coalesce(col("dfc"), lit(0L)) <= maxDocFreq)
         .select("id", "n", "h")
-    val intraPairs = intraRare.as("a")
+    val intra = intraRare.as("a")
       .join(intraRare.as("b"),
         col("a.h") === col("b.h") && col("b.id") < col("a.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+              col("a.n").as("na"), col("b.n").as("nb"))
+    // ONE pair-scoring aggregation over both candidate sets: ids are
+    // unique across corpus and batch, so no (id_a, id_b) pair comes from
+    // both branches and each group's count is that pair's intersection
+    val dropped = cross.unionByName(intra)
+      .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"),
-           first(col("a.n")).as("na"), first(col("b.n")).as("nb"))
-    val dropped = crossPairs.unionByName(intraPairs)
+           first(col("na")).as("na"), first(col("nb")).as("nb"))
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= threshold)
-      .select(col("id_a").as(idCol)).distinct()
-    incoming.join(dropped, Seq(idCol), "left_anti")
+      .select(col("id_a").as(idCol))
+    // the anti-join needs no distinct ids; the dropped side is one slim id
+    // per batch doc's pair over threshold (a few per near-copy), so it is
+    // broadcast instead of shuffled
+    incoming.join(broadcast(dropped), Seq(idCol), "left_anti")
   }
 
   /** Corpus-wide line-level dedup with reassembly (the RefinedWeb /

@@ -170,12 +170,17 @@ object GenIndex {
     * the replayed epoch's postings). Replays only ever happen on a
     * writer's first batch (a failure kills the query; the restart builds
     * a fresh closure), so probing here is sound and costs one scan per
-    * writer LIFETIME, keeping the per-batch guard scan-free. */
+    * writer LIFETIME, keeping the per-batch guard scan-free.
+    *
+    * `fresh`: the caller initialized the index in this writer's lifetime
+    * and has appended nothing to it, so it holds no rows: both index scans
+    * (the resume guard's row max and the repair probe) are skipped, the
+    * marker checks and the run-affinity record are not. */
   def validateFirstBatch(spark: SparkSession, indexTable: String,
                          batchId: Long, indexPath: String,
-                         compactEvery: Int): Unit = {
-    requireEpochAhead(spark, indexTable, batchId)
-    if (!Dedup.epochAppended(spark, indexTable, batchId))
+                         compactEvery: Int, fresh: Boolean = false): Unit = {
+    requireEpochAhead(spark, indexTable, batchId, fresh)
+    if (!Dedup.epochAppended(spark, indexTable, batchId) && !fresh)
       Dedup.repairPartialEpoch(spark, indexTable, batchId)
     if (compactEvery > 0 && indexPath != null)
       require(isGenerational(spark, indexPath),
@@ -224,12 +229,13 @@ object GenIndex {
     * existing index at `path` RE-REGISTERS from its files (generation
     * marker, else bucketed part-files — the session catalog does not
     * survive a JVM restart and an init here would overwrite the
-    * accumulated index); only a truly empty `path` runs `init`. */
+    * accumulated index); only a truly empty `path` runs `init`. Returns
+    * whether it ran `init`. */
   def openOrInit(spark: SparkSession, table: String, path: String,
-                 key: String, buckets: Int)(init: => Unit): Unit =
-    if (isGenerational(spark, path)) { open(spark, table, path, key, buckets); () }
-    else if (hasData(spark, path)) { register(spark, table, path, key, buckets); () }
-    else init
+                 key: String, buckets: Int)(init: => Unit): Boolean =
+    if (isGenerational(spark, path)) { open(spark, table, path, key, buckets); false }
+    else if (hasData(spark, path)) { register(spark, table, path, key, buckets); false }
+    else { init; true }
 
   /** Resume guard for the exactly-once ingest sinks: a resuming stream's
     * `batchId` may never sit BEHIND the index's newest epoch — that means
@@ -251,14 +257,17 @@ object GenIndex {
     * owning stream stored ([[EpochMarkers]]). Direct API callers (no
     * streaming query on the thread — spec replays, driver-sequential
     * loops) keep the arithmetic-only contract. One epoch-column scan plus
-    * one marker listing, checked once per writer lifetime, not per epoch. */
+    * one marker listing, checked once per writer lifetime, not per epoch;
+    * a `fresh` index (see [[validateFirstBatch]]) holds no rows and is not
+    * scanned. */
   def requireEpochAhead(spark: SparkSession, table: String,
-                        batchId: Long): Unit = {
+                        batchId: Long, fresh: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.{col, max}
-    val rowMax = spark.table(table).agg(max(col("epoch"))).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r                  => r.getLong(0)
-    }
+    val rowMax = if (fresh) -1L
+      else spark.table(table).agg(max(col("epoch"))).head() match {
+        case r if r.isNullAt(0) => -1L
+        case r                  => r.getLong(0)
+      }
     // rows alone UNDER-count: an epoch whose survivors were all
     // duplicates (or a crashed attempt) commits/attempts a marker but
     // lands zero postings — a row-only max would let a wiped checkpoint

@@ -7,6 +7,7 @@ import graft.util.Materialize
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, size}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -165,10 +166,31 @@ object EpochIngest {
     * would reject. */
   private def writeEpochBarrier(survLazy: DataFrame, outPath: String,
                                 batchId: Long): DataFrame = {
-    writeEpoch(survLazy, outPath, batchId)
-    survLazy.sparkSession.read.schema(survLazy.schema)
-      .parquet(s"$outPath/epoch=$batchId")
+    val spark = survLazy.sparkSession
+    Materialize.load(survLazy)
+    staticPlan(spark)(writeEpoch(survLazy, outPath, batchId))
+    spark.read.schema(survLazy.schema).parquet(s"$outPath/epoch=$batchId")
   }
+
+  /** Runs `body` with adaptive execution off, so the barrier write runs
+    * as one static plan. Adaptive execution re-optimizes, re-explains and
+    * re-submits the probe once per exchange it completes, and on a batch of
+    * a few hundred documents that re-planning, not the rows, was most of an
+    * epoch's CPU. The index append stays adaptive: its static plan costs
+    * more.
+    *
+    * Scoped like [[Streams.start]]: the planner reads the setting from the
+    * session's conf, so it is set there for the length of `body` and then
+    * restored (unset stays unset), and one lock per session serializes the
+    * scoped change, so concurrent callers in one session never restore
+    * each other's setting mid-write. A stream's epochs run in the stream's
+    * own session. */
+  private def staticPlan[A](spark: SparkSession)(body: => A): A =
+    planLocks.computeIfAbsent(spark, _ => new Object).synchronized(
+      Streams.withFalse(spark, Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key))(body))
+
+  private val planLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Object])
 
   /** The full per-epoch step `foreachBatch` runs (public so the
     * kill-and-restart specs can replay it from any crash window):
@@ -180,14 +202,24 @@ object EpochIngest {
   def step(kind: IndexKind, indexTable: String, outPath: String,
            buckets: Int = 8, indexPath: String = null,
            compactEvery: Int = 0,
-           foldOutputEvery: Int = 0): (DataFrame, Long) => Unit = {
+           foldOutputEvery: Int = 0): (DataFrame, Long) => Unit =
+    stepOn(kind, indexTable, outPath, buckets, indexPath, compactEvery,
+      foldOutputEvery, freshIndex = false)
+
+  /** [[step]]; `freshIndex` = the caller initialized the index in this
+    * writer's lifetime, so the first batch skips its index scans
+    * ([[GenIndex.validateFirstBatch]] `fresh`). */
+  private def stepOn(kind: IndexKind, indexTable: String, outPath: String,
+                     buckets: Int, indexPath: String, compactEvery: Int,
+                     foldOutputEvery: Int,
+                     freshIndex: Boolean): (DataFrame, Long) => Unit = {
     var validated = false
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       Dedup.requireMaterializing(spark, "EpochIngest.step")
       if (!validated) {
         GenIndex.validateFirstBatch(spark, indexTable, batchId, indexPath,
-          compactEvery)
+          compactEvery, freshIndex)
         validated = true
       }
       // the epoch's scope owns the probe's persists: they are freed once
@@ -239,8 +271,10 @@ object EpochIngest {
     * its files when it exists (generation marker, else bucketed
     * part-files — a restart loses the session catalog, not the files, and
     * an init would overwrite the accumulated index); only an empty path
-    * initializes. One step closure serves every batch, so the resume
-    * guard runs once per writer lifetime. */
+    * initializes, and then the first batch skips the index scans of the
+    * resume guard and the repair probe: the index it just made is empty.
+    * One step closure serves every batch, so the resume guard runs once
+    * per writer lifetime. */
   def writer(cfg: GraftConfig, kind: IndexKind,
              value: (String, String)): (DataFrame, Long) => Unit = {
     val table = cfg.getString("index-table")
@@ -259,11 +293,11 @@ object EpochIngest {
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       if (run == null) {
-        if (!spark.catalog.tableExists(table))
+        val fresh = !spark.catalog.tableExists(table) &&
           GenIndex.openOrInit(spark, table, indexPath, kind.key, buckets)(
             kind.init(spark, table, indexPath, buckets, gen))
-        run = step(kind, table, outPath, buckets, indexPath, compactEvery,
-          foldOutputEvery)
+        run = stepOn(kind, table, outPath, buckets, indexPath, compactEvery,
+          foldOutputEvery, fresh)
       }
       run(batch.select(expr(idExpr).as("id"), expr(valueExpr).as(valueCol)),
         batchId)

@@ -51,7 +51,9 @@ object Streams {
     lock.synchronized(withFalse(spark, keys)(configure(ds.writeStream).start()))
   }
 
-  private def withFalse[A](spark: SparkSession, keys: Seq[String])(body: => A): A = {
+  /** `body` with `keys` set false in `spark`'s conf, then restored (unset
+    * stays unset); the caller serializes concurrent changes. */
+  private[streaming] def withFalse[A](spark: SparkSession, keys: Seq[String])(body: => A): A = {
     val prior = keys.map(k => k -> spark.conf.getAll.get(k))
     keys.foreach(spark.conf.set(_, false))
     try body

@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.RddBridge
 import org.apache.spark.storage.StorageLevel
@@ -172,6 +173,19 @@ object Materialize {
       unpersistRdd(r)
     }
   }
+
+  /** Load every persist that `df` reads and that is not loaded yet, one
+    * job each. A loaded persist reports its measured size to the planner;
+    * an unloaded one reports its plan's estimate, which undercounts an
+    * `explode` by its rows per input row. For a static plan (no adaptive
+    * re-planning), so that it broadcasts a persisted intermediate only when
+    * its measured size is under the broadcast threshold. */
+  def load(df: DataFrame): Unit =
+    df.queryExecution.withCachedData.foreach {
+      case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.cachedColumnBuffers.count()
+      case _ =>
+    }
 
   private def current(op: String): Frame = stack.get.headOption.getOrElse(
     throw new IllegalStateException(s"Materialize.$op outside a Materialize.scope"))

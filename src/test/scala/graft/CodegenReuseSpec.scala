@@ -1,7 +1,6 @@
 package graft
 
-import graft.config.GraftConfig
-import graft.streaming.{EpochIngest, IndexKind, Pipeline, Streams}
+import graft.streaming.{EpochIngest, Streams}
 
 import java.nio.file.Files
 
@@ -27,87 +26,21 @@ class CodegenReuseSpec extends SparkSpec {
     compiles - before
   }
 
-  /** `n` deterministic 30-word documents with ids from `firstId`; every
-    * fourth repeats an earlier document with one word changed. */
-  private def docs(firstId: Long, n: Int): Seq[(Long, String)] = {
-    val rnd = new scala.util.Random(firstId)
-    def fresh() = Seq.fill(30)(s"w${rnd.nextInt(300)}")
-    val made = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    (0 until n).map { i =>
-      val words =
-        if (i % 4 == 3 && made.nonEmpty) made(rnd.nextInt(made.size)).updated(5, "edit")
-        else fresh()
-      made += words
-      (firstId + i, words.mkString(" "))
-    }
-  }
-
-  /** Writes each batch as one parquet file under `dir/in`, in order (a
-    * file stream with `maxFilesPerTrigger = 1` reads one per epoch), and
-    * returns that directory. */
-  private def stageFiles(dir: String, batches: Seq[DataFrame]): String = {
-    val inDir = new java.io.File(s"$dir/in"); inDir.mkdirs()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val part = s"$dir/b$i"
-      b.coalesce(1).write.parquet(part)
-      val src = new java.io.File(part).listFiles()
-        .find(_.getName.startsWith("part-")).get
-      val dst = new java.io.File(inDir, f"b$i%02d.parquet")
-      assert(src.renameTo(dst) && dst.setLastModified(1700000000000L + i * 60000L))
-    }
-    inDir.toString
-  }
-
-  /** Input of one index kind: a backfill epoch ten times the size of each
-    * of the `epochs - 1` epochs after it. */
-  private def kindBatches(kind: String, epochs: Int): Seq[DataFrame] = {
-    import spark.implicits._
-    val sizes = 10 +: Seq.fill(epochs - 1)(1)
-    val firsts = sizes.scanLeft(0)(_ + _)
-    sizes.zip(firsts).map { case (k, first) =>
-      kind match {
-        case "text" =>
-          // every later epoch also re-crawls near-copies of backfill pages
-          val backfill = docs(0L, 400).map(_._2)
-          docs(first * 40L, k * 40).map { case (id, t) =>
-            if (first > 0 && id % 4 == 1) (id, backfill((id % 400).toInt) + " recrawl")
-            else (id, t)
-          }.toDF("id", "text")
-        case "embed" =>
-          val rnd = new scala.util.Random(first)
-          (0 until k * 40).map { i =>
-            (first * 40L + i,
-             Array.fill(16)(if (i % 5 == 4) 0.5f else rnd.nextFloat() - 0.5f))
-          }.toDF("id", "vec")
-        case "image" => graft.operators.Multimodal.renderedImagePayloads(
-          spark.range(first * 6L, (first + k) * 6L).toDF("doc_id"), "doc_id")
-        case "mm" => graft.operators.Multimodal.renderedIngestPayloads(
-          spark.range(first * 8L, (first + k) * 8L).toDF("doc_id"), "doc_id")
-      }
-    }
-  }
-
   test("codegen reuse: new epochs do not recompile EpochIngest.step's classes, all four index kinds") {
     // An epoch value inlined into generated source compiles new classes in
-    // every epoch. What may still compile after epoch 2 is a plan shape
-    // the JVM has not seen: the probe joins the batch with the index and
-    // the planner builds the smaller side, so while the index is smaller
-    // than a batch each size crossover plans a new shape (the backfill
-    // epoch puts the index past every later batch from epoch 1 on), and
-    // adaptive execution re-plans a query as its stages finish, so the
-    // order in which they finish can split one epoch's plan differently
-    // (seen in up to one epoch of six). Hence: at most a third of the
-    // epochs after epoch 2 may compile anything.
-    val kinds = Seq(
-      "text" -> IndexKind.textPostings(),
-      "embed" -> IndexKind.embedLsh(threshold = 0.95, lshBits = 4, dim = 16),
-      "image" -> IndexKind.hamming(),
-      "mm" -> IndexKind.familyHamming())
+    // every epoch. The probe's barrier write is one static plan, so an
+    // epoch after the first two plans the shapes the JVM has compiled,
+    // with one exception in the text probe: the anti-join's generated code
+    // depends on whether its broadcast dropped ids are unique, which the
+    // data decides (one near-copy per dropped doc, or more), and the
+    // second variant compiles once, when it first occurs. Hence: no kind
+    // compiles after epoch 2, except text in at most one epoch (measured:
+    // text at epoch 6, every other kind none, in three full runs).
     val epochs = 12
-    val counts = kinds.map { case (name, kind) =>
+    val counts = IngestFixtures.kinds.map { case (name, kind) =>
       val tmp = Files.createTempDirectory(s"graft-codegen-$name").toString
-      val batches = kindBatches(name, epochs)
-      val inDir = stageFiles(tmp, batches)
+      val batches = IngestFixtures.kindBatches(spark, name, epochs)
+      val inDir = IngestFixtures.stageFiles(tmp, batches)
       val table = s"graft_spec_codegen_$name"
       kind.init(spark, table, s"$tmp/idx")
       val step = EpochIngest.step(kind, table, s"$tmp/out")
@@ -124,41 +57,26 @@ class CodegenReuseSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       name -> (0L until epochs).map(e => perEpoch.getOrDefault(e, -1L))
     }
-    assert(counts.forall(_._2.drop(3).count(_ != 0L) <= (epochs - 3) / 3),
+    val allowed = Map("text" -> 1).withDefaultValue(0)
+    assert(counts.forall { case (n, c) => c.drop(3).count(_ != 0L) <= allowed(n) },
       "epochs after 2 kept compiling classes; compiles per epoch: " +
       counts.map { case (n, c) => s"$n ${c.mkString(" ")}" }.mkString("; "))
-  }
-
-  /** Two ordered 40-document files for the config dedup-ingest pipeline. */
-  private def docFiles(dir: String): String = {
-    import spark.implicits._
-    stageFiles(dir, Seq(docs(1L, 40), docs(100L, 40)).map(_.toDF("doc_id", "text")))
   }
 
   /** Drains `inDir` through a config dedup-ingest pipeline with its
     * checkpoint, output and index under `run`; returns the survivors. */
   private def drainDedupIngest(inDir: String, run: String, table: String): Long = {
-    val conf = GraftConfig.parse(s"""
-      graft {
-        source { crawl { fqcn = "graft.DocPayloadSourcePlugin",
-                         path = "$inDir", available-now = true,
-                         sinks = [ingest] } }
-        sink { ingest { type = dedup-ingest, index-table = $table,
-                        index-path = "$run/idx", out-path = "$run/out" } }
-      }""")
-    val ps = Pipeline.start(spark, conf, s"$run/ck")
-    try ps.foreach(_.query.awaitTermination())
-    finally ps.foreach(p => if (p.query.isActive) p.query.stop())
+    IngestFixtures.drainDedupIngest(spark, inDir, run, table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.read.parquet(s"$run/out").count()
   }
 
   test("codegen reuse: the second query of a restarted dedup-ingest pipeline compiles at most 2 classes") {
-    // restarted twice: adaptive execution can split one drain's plan
-    // differently by the order its stages finish (see above), so the
-    // better of the two restarts is held to the bound
+    // restarted twice, and neither restart may compile anything: the
+    // probe plans statically, so a restart of the same shape finds every
+    // class compiled (measured: 0 and 0 in three full runs)
     val tmp = Files.createTempDirectory("graft-codegen-restart").toString
-    val inDir = docFiles(tmp)
+    val inDir = IngestFixtures.docFiles(spark, tmp)
     val first = drainDedupIngest(inDir, s"$tmp/run0", "graft_spec_codegen_run0")
     val restarts = (1 to 2).map { i =>
       var survivors = 0L
@@ -168,7 +86,7 @@ class CodegenReuseSpec extends SparkSpec {
       assert(first > 0L && survivors == first, s"survivors $first then $survivors")
       n
     }
-    assert(restarts.min <= 2L, s"the restarted queries compiled ${restarts.mkString(" and ")} classes")
+    assert(restarts.forall(_ == 0L), s"the restarted queries compiled ${restarts.mkString(" and ")} classes")
   }
 
   /** A stream over `dir` that aggregates each micro-batch; returns the
@@ -190,7 +108,7 @@ class CodegenReuseSpec extends SparkSpec {
 
   test("Streams.start: the caller's artifact-isolation conf reads as before, unset and explicitly true") {
     val tmp = Files.createTempDirectory("graft-codegen-conf").toString
-    val inDir = docFiles(tmp)
+    val inDir = IngestFixtures.docFiles(spark, tmp)
     val explicitBefore = spark.conf.getAll.get(isolationKey)
     try {
       spark.conf.unset(isolationKey)
@@ -206,7 +124,7 @@ class CodegenReuseSpec extends SparkSpec {
 
   test("Streams.start: four concurrent starts in one session all run without isolation") {
     val tmp = Files.createTempDirectory("graft-codegen-threads").toString
-    val inDir = docFiles(tmp)
+    val inDir = IngestFixtures.docFiles(spark, tmp)
     assert(aggregateStream(inDir, s"$tmp/warm") == "false")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     var seen = Seq.empty[String]
@@ -222,7 +140,7 @@ class CodegenReuseSpec extends SparkSpec {
 
   test("Streams.start: a session that has added artifacts keeps isolation") {
     val tmp = Files.createTempDirectory("graft-codegen-artifact").toString
-    val inDir = docFiles(tmp)
+    val inDir = IngestFixtures.docFiles(spark, tmp)
     val jar = new java.io.File(s"$tmp/empty.jar")
     new java.util.jar.JarOutputStream(new java.io.FileOutputStream(jar)).close()
     val session = spark.newSession()

@@ -406,6 +406,39 @@ class PlanSpec extends SparkSpec {
       s"incrementalSurvivorsIndexedLazy:\n$probePlan")
   }
 
+  test("ingest barrier write: one static plan, one pair-scoring aggregation right below the anti-join") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-barrier").toString
+    val kind = graft.streaming.IndexKind.textPostings()
+    kind.init(spark, "graft_spec_plan_barrier", s"$tmp/idx")
+    val step = graft.streaming.EpochIngest.step(kind, "graft_spec_plan_barrier", s"$tmp/out")
+    val plans = executedPlans((0 until 2).foreach(e =>
+      step(IngestFixtures.docs(e * 100L, 40).toDF("id", "text"), e.toLong)))
+    spark.sql("DROP TABLE IF EXISTS graft_spec_plan_barrier")
+    val p = plans.find(_.toString.linesIterator.exists(l =>
+      l.contains("InsertIntoHadoopFsRelationCommand") && l.contains(s"$tmp/out/epoch=1"))).get
+    assert(p.collectFirst { case a: AdaptiveSparkPlanExec => a }.isEmpty,
+      s"the barrier write is planned adaptively:\n$p")
+    def isPairScoring(a: BaseAggregateExec) =
+      a.groupingExpressions.map(_.name) == Seq("id_a", "id_b") &&
+      a.aggregateExpressions.forall(_.mode == Final)
+    val scoring = p.collect { case a: BaseAggregateExec if isPairScoring(a) => a }
+    assert(scoring.size == 1, s"${scoring.size} final pair aggregations:\n$p")
+    def firstAggregate(q: SparkPlan): Option[BaseAggregateExec] = q match {
+      case a: BaseAggregateExec => Some(a)
+      case other => other.children.iterator.map(firstAggregate).collectFirst { case Some(a) => a }
+    }
+    val anti = p.collect { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }
+    assert(anti.size == 1 && firstAggregate(anti.head.right).exists(isPairScoring),
+      s"an aggregation sits between the pair scoring and the anti-join:\n$p")
+  }
+
   test("text_topk: the executed plan evaluates shingle_hashes once per corpus row") {
     // a zero-overlap filter pushed below the scoring projection inlines the
     // corpus shingle set and evaluates the kernel again per row
