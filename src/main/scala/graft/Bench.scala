@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE compact bare JSON line as the LAST stdout line (sbt is
   * configured with StdoutOutput so no logger prefix corrupts it). The
@@ -9,7 +13,10 @@ import java.nio.file.{Files, Paths}
   * small (round-3 defect: adding the cold map doubled the line past the
   * tail window → `parsed: null`); the full record — cold-pass map,
   * millisecond precision, per-query session-age instrumentation — goes to
-  * BENCH_LOCAL.json instead.
+  * BENCH_LOCAL.json instead (full runs only; `SPARK_GRAFT_ONLY=a,b`
+  * restricts a run to those queries and leaves the record alone).
+  * `SPARK_GRAFT_BENCH_DEBUG=1` prints each run's storage, heap and Spark
+  * jobs to stderr.
   *
   * Each query is materialized with a noop-format write (a bare count()
   * would let Catalyst prune most of the computation) and executed at least
@@ -134,6 +141,10 @@ object Bench {
       "spark.sql.ui.retainedExecutions" -> "20",
       "spark.worker.ui.retainedExecutors" -> "20"))
 
+    // SPARK_GRAFT_BENCH_DEBUG=1 also prints the Spark jobs of every run
+    val jobLog = new JobLog
+    if (debug) spark.sparkContext.addSparkListener(jobLog)
+
     var ticks = 0
     // Mid-run contention localization (round-7 item 3): the before/after
     // probes are blind to a burst confined to the middle of the sweep (the
@@ -171,6 +182,7 @@ object Bench {
           f"[bench-debug] $name%-28s t=$t%7.2fs " +
           f"cachedRdds=$nRdd mem=${mem / 1e6}%.1fMB disk=${disk / 1e6}%.1fMB " +
           f"heap=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0fMB")
+        jobLog.drain(spark).foreach(l => System.err.println(s"[bench-debug]   $l"))
       }
       (t, ok)
     }
@@ -371,18 +383,65 @@ object Bench {
     // the full local record keeps the cold map + ms precision + load context
     val full =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(results, v => num(v, 3))},"queries_cold":${qmap(cold, v => num(v, 3))},"sf":"$sfDir","passes":$passes,"pass_totals_sec":$passTotalsJson,"wall_both_passes_sec":${num(wall, 3)},"failed":$failed,$fullDiag,"loadavg_start":${num(loadBefore, 2)},"loadavg_end":${num(loadAfter, 2)}}"""
-    try Files.writeString(Paths.get("BENCH_LOCAL.json"), full + "\n")
-    catch { case _: Throwable => () }
-    // regenerate the README bench paragraph from this run's record so the
-    // documented numbers cannot drift from the artifacts (round-3 item 4);
-    // only a full run (all queries) rewrites it
-    if (names.sorted == SparkEntry.queries.keys.toSeq.sorted)
+    // the local record and the README bench paragraph regenerated from it
+    // (so the documented numbers cannot drift from the artifacts, round-3
+    // item 4) describe a full run only: a subset run rewrites neither
+    if (names.sorted == SparkEntry.queries.keys.toSeq.sorted) {
+      try Files.writeString(Paths.get("BENCH_LOCAL.json"), full + "\n")
+      catch { case _: Throwable => () }
       try updateReadme(names.size, total, coldTotal, wall, sfDir, cpus, results,
                        passes, degradedNames.size)
       catch { case e: Throwable =>
         System.err.println(s"[bench] README update skipped: ${e.getMessage}") }
+    }
     println(compact) // LAST stdout line — the one the driver parses
     spark.stop()
+  }
+
+  /** The Spark jobs of one bench run, for `SPARK_GRAFT_BENCH_DEBUG=1`: where
+    * a multi-job query (ingest loops, iterative graph operators) spends its
+    * seconds, and the driver gaps between its jobs. */
+  private final class JobLog extends SparkListener {
+    private final class Job(val id: Int, val desc: String, val t0: Long) { var t1 = 0L }
+    private val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    private val sentinel = "graft-bench-job-log-sentinel"
+    private var sentinelId = -1
+    @volatile private var sentinelEnded = false
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val props = Option(e.properties)
+      val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+        .getOrElse("")
+      if (desc == sentinel) sentinelId = e.jobId
+      else jobs(e.jobId) = new Job(e.jobId, desc, e.time)
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (e.jobId == sentinelId) sentinelEnded = true
+      else jobs.get(e.jobId).foreach(_.t1 = e.time)
+    }
+
+    /** One line per job since the last drain (id, seconds, gap after the
+      * previous job's end, description). The listener bus is asynchronous:
+      * a sentinel job is run and awaited, and every earlier job's events
+      * precede its end. */
+    def drain(spark: org.apache.spark.sql.SparkSession): Seq[String] = {
+      sentinelEnded = false
+      val sc = spark.sparkContext
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!sentinelEnded && System.nanoTime() < deadline) Thread.sleep(5)
+      val snap = synchronized { val v = jobs.values.toVector; jobs.clear(); v }
+      var prevEnd = 0L
+      snap.map { j =>
+        val gap = if (prevEnd == 0L) 0.0 else (j.t0 - prevEnd) / 1e3
+        prevEnd = j.t1
+        f"job=${j.id}%4d ${(j.t1 - j.t0) / 1e3}%7.3fs gapBefore=$gap%6.3fs  ${j.desc.take(110)}"
+      }
+    }
   }
 
   /** Rewrite README.md between the BENCH_AUTOGEN markers from this run. */

@@ -596,14 +596,6 @@ object OracleXX {
                                keepAllCandidates: Boolean = false): String =
     hammingJoinOver(renderDhashCtes, maxHamming, keepAllCandidates)
 
-  /** DuckDB replica of `Multimodal.perceptualNearDup`: the dHash chain →
-    * the same pigeonhole fragment join as the simhash oracle (4 x 16-bit
-    * fragments for maxHamming 3), exact hamming via `bit_count(xor)`,
-    * with the same loud guard on the engine's skew cap. */
-  def dhashNearDupOracle(maxHamming: Int = 3,
-                         keepAllCandidates: Boolean = false): String =
-    hammingJoinOver(dhashCtes, maxHamming, keepAllCandidates)
-
   /** CTE chain ending in `ph(doc_id, hu, phash)` — replica of the RENDERED
     * real-audio corpus fingerprint
     * ([[graft.operators.Multimodal.AudioRenderSpec]]): decoded samples are

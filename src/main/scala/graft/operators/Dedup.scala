@@ -644,23 +644,6 @@ object Dedup {
       explode(fragmentKeys(col("sh"), maxHamming)).as("bk"))
   }
 
-  /** Empty family-keyed fragment-index table ([[buildHammingPostingsKeyed]]
-    * layout, bucketed on `bk`). */
-  def initHammingIndexKeyed(like: DataFrame, table: String, path: String,
-                            buckets: Int = 8, maxHamming: Int = 3): DataFrame =
-    Relational.bucketMaterialize(
-      buildHammingPostingsKeyed(like.where(lit(false))
-        .select(col("id"), col("sh"), col("grp")), maxHamming),
-      table, "bk", buckets, path)
-
-  /** Append accepted `(id, sh, grp)` fingerprints to the keyed index. */
-  def appendHammingIndexKeyed(hashes: DataFrame, table: String,
-                              buckets: Int = 8, maxHamming: Int = 3): Unit =
-    buildHammingPostingsKeyed(hashes, maxHamming)
-      .write.mode("append").format("parquet")
-      .bucketBy(buckets, "bk").sortBy("bk")
-      .saveAsTable(table)
-
   // ==== epoch-stamped index layout (exactly-once streaming ingest) ====
   //
   // The streaming ingest sinks (graft.streaming.EpochIngest) are foreachBatch
@@ -1045,11 +1028,14 @@ object Dedup {
     }
     val s = df.select(col(idCol).as("id"), TF.normText(col(textCol)).as("t"))
       .withColumn("l", length(col("t")))
-      .where(col("l") <= maxLen)
       .withColumn("band", (col("l") / bandWidth).cast("int"))
+    // the length cut rides the block explode (a null array emits no rows):
+    // a filter on `l` would be pushed below the projection with `t`
+    // inlined and normalize every document twice
     val blocks = Materialize.persist(s.select(
         (Seq(col("id"), col("t"), col("l"), col("band"),
-             explode(array(col("band"), col("band") + 1)).as("blk")) ++
+             explode(when(col("l") <= maxLen,
+               array(col("band"), col("band") + 1))).as("blk")) ++
          histCols): _*)) // barrier: group counts computed once per doc, not per pair
     val l1 = (0 until nGroups).map(g =>
       abs(col(s"a.h$g") - col(s"b.h$g"))).reduce(_ + _)
@@ -2125,6 +2111,10 @@ object Dedup {
     incoming.join(broadcast(dropped), Seq(idCol), "left_anti")
   }
 
+  /** The normalized form of every line, positions kept ([[lineSurvivors]],
+    * [[boilerplateSurvivors]]). */
+  private def normLines(lines: Column): Column = transform(lines, l => TF.normText(l))
+
   /** Corpus-wide line-level dedup with reassembly (the RefinedWeb /
     * CCNet "remove duplicated lines" pass — boilerplate nav bars, cookie
     * banners, repeated headers): documents split on `delim`, every line
@@ -2155,13 +2145,15 @@ object Dedup {
     val linesOf = split(coalesce(col(textCol), lit("")), qdelim, -1)
     // (h, id, pos): normalized-line hashes at their original line index —
     // empty-norm lines are excluded here (never dedup candidates) but keep
-    // their positions occupied, so cut indices line up with the raw split
+    // their positions occupied, so cut indices line up with the raw split.
+    // Lines are normalized inside the generator: a filter on a normalized
+    // column projected above it would be pushed below the projection with
+    // the kernel inlined, normalizing every line twice
     val exploded = df
-      .select(col(idCol).as("id"), posexplode(linesOf))
-      .select(col("id"), col("pos").cast("long").as("pos"),
-              TF.normText(col("col")).as("norm"))
+      .select(col(idCol).as("id"), posexplode(normLines(linesOf)).as(Seq("pos", "norm")))
       .where(length(col("norm")) > 0)
-      .select(col("id"), col("pos"), xxhash64(col("norm")).as("h"))
+      .select(col("id"), col("pos").cast("long").as("pos"),
+              xxhash64(col("norm")).as("h"))
     val lines = Materialize.persist(exploded)
     val firsts = lines.groupBy("h")
       .agg(min(struct(col("id"), col("pos"))).as("first"),
@@ -2220,11 +2212,11 @@ object Dedup {
     val qdelim = java.util.regex.Pattern.quote(delim)
     val linesOf = split(coalesce(col(textCol), lit("")), qdelim, -1)
     val exploded = df
-      .select(col(idCol).as("id"), col(groupCol).as("grp"), posexplode(linesOf))
-      .select(col("id"), col("grp"), col("pos").cast("long").as("pos"),
-              TF.normText(col("col")).as("norm"))
+      .select(col(idCol).as("id"), col(groupCol).as("grp"),
+              posexplode(normLines(linesOf)).as(Seq("pos", "norm")))
       .where(length(col("norm")) > 0)
-      .select(col("id"), col("grp"), col("pos"), xxhash64(col("norm")).as("h"))
+      .select(col("id"), col("grp"), col("pos").cast("long").as("pos"),
+              xxhash64(col("norm")).as("h"))
     val lines = Materialize.persist(exploded)
     // distinct docs per (group, line): the inner distinct is the map-side
     // collapse (a line repeated 50× inside one doc contributes one row)

@@ -52,42 +52,52 @@ object BatchSemantics {
     implicit val batchEnc = Encoders.product[Batch]
     events.groupByKey(_._1)(Encoders.STRING)
       .flatMapGroupsWithState[Buffered, Batch](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (tag: String, rows: Iterator[(String, Event)],
-         state: GroupState[Buffered]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.map(_.events).getOrElse(Vector.empty)
-            state.remove()
-            if (buffered.isEmpty) Iterator.empty
-            else Iterator(Batch(tag, buffered.map(_.body), sizeFlush = false))
-          } else {
-            val now = state.getCurrentProcessingTimeMs()
-            val prev = state.getOption
-            var buf = prev.map(_.events).getOrElse(Vector.empty) ++ rows.map(_._2)
-            val flushes = Iterator.unfold(buf) { b =>
-              if (cfg.batchSize > 0 && b.size >= cfg.batchSize)
-                Some((Batch(tag, b.take(cfg.batchSize).map(_.body), sizeFlush = true),
-                      b.drop(cfg.batchSize)))
-              else None
-            }.toVector
-            buf = buf.drop(flushes.size * cfg.batchSize)
-            if (buf.isEmpty) state.remove()
-            else {
-              // a size-flush consumed the old buffer head → the leftover
-              // tail is a NEW buffer whose clock starts now (reference: a
-              // fresh flush task per created batch buffer)
-              val firstTs =
-                if (prev.isEmpty || flushes.nonEmpty) now
-                else prev.get.firstTs
-              state.update(Buffered(firstTs, buf))
-              if (cfg.batchTimeoutMillis > 0)
-                state.setTimeoutDuration(
-                  math.max(1L, firstTs + cfg.batchTimeoutMillis - now))
-            }
-            flushes.iterator
-          }
-      }
+        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(step(cfg))
   }
+
+  /** [[batchByTag]]'s state function for one tag. */
+  def step(cfg: Config)(tag: String, rows: Iterator[(String, Event)],
+                        state: GroupState[Buffered]): Iterator[Batch] =
+    if (state.hasTimedOut) {
+      val buffered = state.getOption.map(_.events).getOrElse(Vector.empty)
+      state.remove()
+      if (buffered.isEmpty) Iterator.empty
+      else Iterator(Batch(tag, buffered.map(_.body), sizeFlush = false))
+    } else {
+      val now = state.getCurrentProcessingTimeMs()
+      // Spark reports a timeout only for a tag with no new rows, so under a
+      // steady trickle the deadline passes inside this branch: flush the
+      // expired buffer as its timeout batch first (the reference's flush
+      // task fires at the deadline, before these rows arrive); the new rows
+      // then start a fresh buffer
+      val held = state.getOption
+      val expired = held.filter(b =>
+        cfg.batchTimeoutMillis > 0 && now - b.firstTs >= cfg.batchTimeoutMillis)
+      val prev = if (expired.isDefined) None else held
+      var buf = prev.map(_.events).getOrElse(Vector.empty) ++ rows.map(_._2)
+      val flushes = Iterator.unfold(buf) { b =>
+        if (cfg.batchSize > 0 && b.size >= cfg.batchSize)
+          Some((Batch(tag, b.take(cfg.batchSize).map(_.body), sizeFlush = true),
+                b.drop(cfg.batchSize)))
+        else None
+      }.toVector
+      buf = buf.drop(flushes.size * cfg.batchSize)
+      if (buf.isEmpty) state.remove()
+      else {
+        // a size-flush consumed the old buffer head → the leftover
+        // tail is a NEW buffer whose clock starts now (reference: a
+        // fresh flush task per created batch buffer)
+        val firstTs =
+          if (prev.isEmpty || flushes.nonEmpty) now
+          else prev.get.firstTs
+        state.update(Buffered(firstTs, buf))
+        if (cfg.batchTimeoutMillis > 0)
+          state.setTimeoutDuration(
+            math.max(1L, firstTs + cfg.batchTimeoutMillis - now))
+      }
+      expired.iterator.map(b => Batch(tag, b.events.map(_.body), sizeFlush = false)) ++
+        flushes.iterator
+    }
 
   /** Batch-mode twin for tests/oracle: same grouping + size-splitting
     * semantics without the timer (a finite batch "ends" = full flush).

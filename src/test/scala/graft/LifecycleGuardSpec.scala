@@ -31,18 +31,10 @@ class LifecycleGuardSpec extends AnyFunSuite {
       ("swaps a refreshed side-input BROADCAST; the stale broadcast is " +
        "unpersisted, no Dataset is cached"))
 
-  /** Code lines of `f`, comment lines and trailing `//` comments removed. */
-  private def codeLines(f: Path): Seq[(Int, String)] =
-    Files.readAllLines(f).asScala.zipWithIndex.collect {
-      case (l, i) if !Seq("*", "/*", "//").exists(l.trim.startsWith) =>
-        (i + 1, l.split(" //", 2).head)
-    }.toSeq
+  import LifecycleGuardSpec.{codeLines, mainSources}
 
   test("src/main has no lifecycle call outside Materialize and the named allow-list") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root (no $root)")
-    val sources = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val sources = mainSources()
     assert(sources.exists(_.toString.endsWith(home)))
     val used = scala.collection.mutable.Set.empty[(String, String)]
     val hits = for {
@@ -58,4 +50,23 @@ class LifecycleGuardSpec extends AnyFunSuite {
     assert(used == allowed.keySet,
       s"stale allow-list entries: ${(allowed.keySet -- used).mkString(", ")}")
   }
+}
+
+/** The source walk the guard specs share. */
+object LifecycleGuardSpec {
+
+  /** Every `.scala` file under `src/main/scala`. */
+  def mainSources(): Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root (no $root)")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
+
+  /** Code lines of `f`, comment lines and trailing `//` comments removed. */
+  def codeLines(f: Path): Seq[(Int, String)] =
+    Files.readAllLines(f).asScala.zipWithIndex.collect {
+      case (l, i) if !Seq("*", "/*", "//").exists(l.trim.startsWith) =>
+        (i + 1, l.split(" //", 2).head)
+    }.toSeq
 }

@@ -232,6 +232,32 @@ class MetricsSideInputSpec extends SparkSpec {
     } finally { stop.set(true); q.stop() }
   }
 
+  test("batch timer: a buffer past its deadline flushes before rows that arrive later") {
+    // the state function under a trickle that reaches every micro-batch,
+    // with Spark's processing clock pinned: Spark never reports a timeout
+    // for a tag with new rows, so the deadline must be met on the data path
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    val step = BatchSemantics.step(
+      BatchSemantics.Config(batchSize = 0, batchTimeoutMillis = 2000)) _
+    var held = Optional.empty[BatchSemantics.Buffered]()
+    val out = (0 to 10).flatMap { i =>
+      val now = i * 500L
+      val state = TestGroupState.create(held,
+        GroupStateTimeout.ProcessingTimeTimeout(), now, Optional.empty[Long](),
+        false)
+      val flushed = step("K", Iterator(("K", Event(s"e$i"))), state).toVector
+      held = if (state.exists) Optional.of(state.get) else Optional.empty()
+      flushed.map(b => (now, b))
+    }
+    // deadlines at 2000 (buffer opened at 0), then 4000 (reopened at 2000)
+    assert(out.map { case (t, b) => (t, b.bodies, b.sizeFlush) } == Seq(
+      (2000L, (0 to 3).map(i => s"e$i"), false),
+      (4000L, (4 to 7).map(i => s"e$i"), false)), s"flushes: $out")
+    assert(held.get.firstTs == 4000L &&
+      held.get.events.map(_.body) == Seq("e8", "e9", "e10"))
+  }
+
   test("streaming dedup: duplicate event ids across micro-batches are dropped within the watermark") {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[(Long, java.sql.Timestamp, String)]
