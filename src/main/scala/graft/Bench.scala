@@ -163,8 +163,10 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
+            described(spark, s"$name pass $pass_") {
+              SparkEntry.queries(name)(spark, sfDir)
+                .write.format("noop").mode("overwrite").save()
+            }
             true
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -398,10 +400,17 @@ object Bench {
     spark.stop()
   }
 
+  /** `body` with `desc` as the description of the jobs it runs, the
+    * adaptive query-stage jobs included (they inherit the local property). */
+  private[graft] def described[A](spark: org.apache.spark.sql.SparkSession, desc: String)(body: => A): A = {
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
   /** The Spark jobs of one bench run, for `SPARK_GRAFT_BENCH_DEBUG=1`: where
     * a multi-job query (ingest loops, iterative graph operators) spends its
     * seconds, and the driver gaps between its jobs. */
-  private final class JobLog extends SparkListener {
+  private[graft] final class JobLog extends SparkListener {
     private final class Job(val id: Int, val desc: String, val t0: Long) { var t1 = 0L }
     private val jobs = mutable.LinkedHashMap.empty[Int, Job]
     private val sentinel = "graft-bench-job-log-sentinel"
@@ -422,10 +431,9 @@ object Bench {
       else jobs.get(e.jobId).foreach(_.t1 = e.time)
     }
 
-    /** One line per job since the last drain (id, seconds, gap after the
-      * previous job's end, description). The listener bus is asynchronous:
-      * a sentinel job is run and awaited, and every earlier job's events
-      * precede its end. */
+    /** [[lines]] once every job so far has reported. The listener bus is
+      * asynchronous: a sentinel job is run and awaited, and every earlier
+      * job's events precede its end. */
     def drain(spark: org.apache.spark.sql.SparkSession): Seq[String] = {
       sentinelEnded = false
       val sc = spark.sparkContext
@@ -434,12 +442,24 @@ object Bench {
       finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (!sentinelEnded && System.nanoTime() < deadline) Thread.sleep(5)
-      val snap = synchronized { val v = jobs.values.toVector; jobs.clear(); v }
-      var prevEnd = 0L
-      snap.map { j =>
-        val gap = if (prevEnd == 0L) 0.0 else (j.t0 - prevEnd) / 1e3
-        prevEnd = j.t1
-        f"job=${j.id}%4d ${(j.t1 - j.t0) / 1e3}%7.3fs gapBefore=$gap%6.3fs  ${j.desc.take(110)}"
+      lines()
+    }
+
+    /** One line per job since the last call, in start order: id, seconds,
+      * the gap since the latest end among the jobs that ended before it
+      * started (`overlap` when an earlier job was still running, as AQE's
+      * concurrent query-stage jobs are; `-` for the first), description. */
+    def lines(): Seq[String] = {
+      val snap = synchronized {
+        val v = jobs.values.toVector.sortBy(j => (j.t0, j.id)); jobs.clear(); v
+      }
+      snap.zipWithIndex.map { case (j, i) =>
+        val earlier = snap.take(i)
+        val gap =
+          if (earlier.isEmpty) "-"
+          else if (earlier.exists(k => k.t1 == 0L || k.t1 > j.t0)) "overlap"
+          else f"${(j.t0 - earlier.map(_.t1).max) / 1e3}%.3fs"
+        f"job=${j.id}%4d ${(j.t1 - j.t0) / 1e3}%7.3fs gapBefore=$gap%-7s  ${j.desc.take(110)}"
       }
     }
   }

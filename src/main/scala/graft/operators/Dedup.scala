@@ -1775,8 +1775,10 @@ object Dedup {
     // phase labels (thread-local) keep the UI/job-profile readable — a
     // 3-batch loop runs ~40 small jobs and is opaque without them
     def labeled[T](desc: String)(body: => T): T = {
-      spark.sparkContext.setJobDescription(desc)
-      try body finally spark.sparkContext.setJobDescription(null)
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(desc)
+      try body finally sc.setJobDescription(outer)
     }
     labeled(s"dedupIngest: init index $indexTable") {
       initPostingIndex(batches.head, idCol, textCol, indexTable, indexPath,

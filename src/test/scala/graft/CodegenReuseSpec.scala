@@ -17,6 +17,7 @@ import org.apache.spark.sql.streaming.Trigger
 class CodegenReuseSpec extends SparkSpec {
 
   private val isolationKey = "spark.sql.artifact.isolation.enabled"
+  private val stockFs = "org.apache.hadoop.fs.local.LocalFs"
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -107,19 +108,46 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   test("Streams.start: the caller's artifact-isolation conf reads as before, unset and explicitly true") {
+    // the key that names the filesystem of `file:` is one more input: the
+    // caller's session conf of it reads as before too
     val tmp = Files.createTempDirectory("graft-codegen-conf").toString
     val inDir = IngestFixtures.docFiles(spark, tmp)
-    val explicitBefore = spark.conf.getAll.get(isolationKey)
+    val explicit = Seq(isolationKey -> "true", Streams.localFsKey -> stockFs)
+    val before = explicit.map { case (k, _) => k -> spark.conf.getAll.get(k) }
     try {
-      spark.conf.unset(isolationKey)
+      explicit.foreach { case (k, _) => spark.conf.unset(k) }
       assert(drainDedupIngest(inDir, s"$tmp/unset", "graft_spec_codegen_unset") > 0L)
-      assert(!spark.conf.getAll.contains(isolationKey))
+      explicit.foreach { case (k, _) => assert(!spark.conf.getAll.contains(k), k) }
       assert(spark.conf.get(isolationKey) == "true")
-      spark.conf.set(isolationKey, "true")
+      explicit.foreach { case (k, v) => spark.conf.set(k, v) }
       assert(drainDedupIngest(inDir, s"$tmp/set", "graft_spec_codegen_set") > 0L)
-      assert(spark.conf.getAll.get(isolationKey).contains("true"))
-    } finally explicitBefore.fold(spark.conf.unset(isolationKey))(
-      spark.conf.set(isolationKey, _))
+      explicit.foreach { case (k, v) => assert(spark.conf.getAll.get(k).contains(v), k) }
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("Streams.start: a caller-set filesystem for file: is kept, in the session conf and in the Hadoop conf") {
+    import ProcessStarts._
+    val tmp = Files.createTempDirectory("graft-codegen-fs").toString
+    val inDir = IngestFixtures.docFiles(spark, tmp)
+    val fromLogs = Seq("CheckpointFileManager", "HDFSMetadataLog")
+    def logForks(ck: String): Int =
+      during(aggregateStream(inDir, s"$tmp/$ck"))
+        .count(e => frames(e).exists(f => fromLogs.exists(f.contains)))
+    assert(logForks("graft") == 0)
+    // the session conf overrides the context's Hadoop conf for the stream
+    spark.conf.set(Streams.localFsKey, stockFs)
+    try assert(logForks("session") > 0)
+    finally spark.conf.unset(Streams.localFsKey)
+    // a value set in the context's Hadoop conf is not replaced
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val (prior, priorSource) =
+      (hadoopConf.get(Streams.localFsKey), hadoopConf.getPropertySources(Streams.localFsKey).head)
+    hadoopConf.set(Streams.localFsKey, stockFs)
+    try {
+      assert(logForks("hadoop") > 0)
+      assert(hadoopConf.get(Streams.localFsKey) == stockFs)
+    } finally hadoopConf.set(Streams.localFsKey, prior, priorSource)
+    assert(logForks("after") == 0)
   }
 
   test("Streams.start: four concurrent starts in one session all run without isolation") {

@@ -11,11 +11,18 @@ falls on both sides alike. Each checkout builds from its own sources (the
 first run of a checkout builds it; see pipebench/README.md).
 
 For each workload and each end-to-end metric of the change's
-BENCHMARK.json it prints, per side, the median and the quartiles, and the
-number of pairs in which the change read lower. It also checks that the
-run-validity record's `output_digest` is equal within every pair. The raw
-records go to `--out` (JSON) when given. Exit code 0 only when every run
-passed its output checks and every pair's digests are equal.
+BENCHMARK.json it prints, per side, the median and the quartiles, the
+number of pairs in which the change read better (in the metric's `better`
+direction), and two verdicts:
+  - `strict bar`: the change is better on at least 9 of every 10 pairs, and
+    its median is better than the parent's by more than the parent's
+    quartile spread;
+  - `bound`: the change's median is worse than the parent's by no more than
+    the metric's relative `bound` (change / parent - 1).
+It also checks that the run-validity record's `output_digest` is equal
+within every pair. The raw records go to `--out` (JSON) when given. Exit
+code 0 only when every run passed its output checks and every pair's
+digests are equal; the verdicts are printed, not gated.
 """
 import argparse
 import json
@@ -62,6 +69,22 @@ def quartiles(values):
     return q1, q2, q3
 
 
+def verdict(par, chg, better, bound):
+    """(better on k, strict bar holds, inside bound) for paired values.
+
+    `better` is "lower" or "higher"; `bound` is the relative worsening
+    allowed, or None."""
+    sign = 1 if better == "lower" else -1
+    k = sum(1 for p, c in zip(par, chg) if sign * (p - c) > 0)
+    pq, cq = quartiles(par), quartiles(chg)
+    gain = sign * (pq[1] - cq[1])
+    strict = 10 * k >= 9 * len(par) and gain > pq[2] - pq[0]
+    inside = None
+    if bound is not None and pq[1] != 0:
+        inside = sign * (cq[1] / pq[1] - 1) <= bound
+    return k, strict, inside
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__,
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
@@ -80,7 +103,9 @@ def main():
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
     metrics = [m["name"] for m in bench["end_to_end"]]
-    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    better = {m["name"]: m["better"]
+              for m in bench["end_to_end"] + bench.get("per_layer", [])}
+    bounds = {m["name"]: m.get("bound") for m in bench["end_to_end"]}
     workloads = (args.workloads.split(",") if args.workloads
                  else [w["name"] for w in bench["workloads"]])
     seeds = parse_seeds(args.seeds)
@@ -130,14 +155,21 @@ def main():
                 continue
             par = [p["parent"]["metrics"][m] for p in both]
             chg = [p["change"]["metrics"][m] for p in both]
-            lower = sum(1 for p in both
-                        if p["change"]["metrics"][m] < p["parent"]["metrics"][m])
             pq, cq = quartiles(par), quartiles(chg)
-            print(f"  {m:<28} parent {pq[1]:10.4g} [{pq[0]:.4g} .. {pq[2]:.4g}, "
-                  f"spread {pq[2] - pq[0]:.4g}]  change {cq[1]:10.4g} "
-                  f"[{cq[0]:.4g} .. {cq[2]:.4g}, spread {cq[2] - cq[0]:.4g}]  "
-                  f"change lower on {lower} of {len(both)}"
-                  + (f" ({better[m]} is better)" if m in better else ""))
+            line = (f"  {m:<28} parent {pq[1]:10.4g} [{pq[0]:.4g} .. {pq[2]:.4g}, "
+                    f"spread {pq[2] - pq[0]:.4g}]  change {cq[1]:10.4g} "
+                    f"[{cq[0]:.4g} .. {cq[2]:.4g}, spread {cq[2] - cq[0]:.4g}]  ")
+            if m in better:
+                k, strict, inside = verdict(par, chg, better[m], bounds.get(m))
+                line += (f"better on {k} of {len(both)} ({better[m]} is better); "
+                         f"strict bar {'holds' if strict else 'missed'}")
+                if inside is not None:
+                    line += (f"; {'inside' if inside else 'OUTSIDE'} "
+                             f"bound {bounds[m]:g}")
+            else:
+                lower = sum(1 for p, c in zip(par, chg) if c < p)
+                line += f"change lower on {lower} of {len(both)}"
+            print(line)
     sys.exit(0 if ok else 1)
 
 
